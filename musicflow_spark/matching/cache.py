@@ -14,11 +14,21 @@ cache is the old one plus the misses' results.  Keyed by video_id:
 the same video in two playlists is one cache entry, exactly one
 search — playlist-dependent fields (log_id, status, membership) are
 recomputed at assembly, never cached.
+
+The one materialisation: ``match_with_cache`` checkpoints the unioned
+hit and miss rows eagerly, before assembly.  Every output it returns
+then reads that checkpoint, not the cache files the hits were decoded
+from, so ``save_cache`` may replace those files as soon as the call
+returns and the outputs stay readable.  Only the merged cache itself
+reads the old files, and ``save_cache`` finishes writing it before it
+removes them.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -53,8 +63,20 @@ def empty_cache(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], CACHE_SCHEMA)
 
 
+def _tmp_path(path: str) -> str:
+    return f"{path}.__tmp__"
+
+
 def load_cache(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet-backed cache; missing path = cold cache (first run)."""
+    """Parquet-backed cache; missing path = cold cache (first run).
+
+    A flush that crashed after removing the old cache but before
+    renaming the new one into place leaves a finished copy under the
+    tmp path (its ``_SUCCESS`` marker shows the write completed); that
+    copy is moved into place here instead of starting cold."""
+    tmp = _tmp_path(path)
+    if not os.path.exists(path) and os.path.exists(os.path.join(tmp, "_SUCCESS")):
+        os.rename(tmp, path)
     if not os.path.exists(path):
         return empty_cache(spark)
     return spark.read.parquet(path)
@@ -63,10 +85,8 @@ def load_cache(spark: SparkSession, path: str) -> DataFrame:
 def save_cache(cache: DataFrame, path: str) -> None:
     """The reference flushes Redis at run end (spotify_elt.py:1210);
     here the flush is one parquet overwrite of the merged cache."""
-    tmp = f"{path}.__tmp__"
+    tmp = _tmp_path(path)
     cache.write.mode("overwrite").parquet(tmp)
-    import shutil
-
     if os.path.exists(path):
         shutil.rmtree(path)
     os.rename(tmp, path)
@@ -105,6 +125,43 @@ def cache_entries(matches: DataFrame, videos: DataFrame) -> DataFrame:
     )
 
 
+def _match_pass(
+    keyed: DataFrame,
+    key: str,
+    cache: DataFrame,
+    compute: Callable[[DataFrame], DataFrame],
+    add_context: Callable[[DataFrame], DataFrame],
+) -> tuple[DataFrame, DataFrame]:
+    """One cache-aware match pass: returns (match rows, new cache
+    entries).
+
+    ``keyed`` carries ``log_id`` and the cache ``key``.  Hits decode
+    their payload, and ``add_context`` adds the pass's
+    ``user_playlist_id``, ``log_ids`` and ``pass_no``; the cached
+    negative verdicts (null payload) yield no row.  Misses go through
+    ``compute`` (the engine), which never runs when every key is
+    cached."""
+    hits = keyed.join(cache.withColumnRenamed("video_id", key), key, "inner")
+    misses = keyed.join(cache.select(F.col("video_id").alias(key)), key, "left_anti")
+    hit_matches = add_context(
+        hits.filter(F.col("payload").isNotNull()).withColumn(
+            "__m__", F.from_json("payload", PAYLOAD_SCHEMA)
+        )
+    ).select(
+        "log_id",
+        "user_playlist_id",
+        *[F.col(f"__m__.{c}").alias(c) for c in PAYLOAD_FIELDS],
+        "log_ids",
+        "pass_no",
+    )
+    if misses.isEmpty():
+        miss_matches = keyed.sparkSession.createDataFrame([], MatchEngine._match_schema())
+    else:
+        miss_matches = compute(misses)
+    entries = cache_entries(miss_matches, misses.select("log_id", F.col(key).alias("video_id")))
+    return hit_matches.unionByName(miss_matches.select(*hit_matches.columns)), entries
+
+
 def match_with_cache(
     engine: MatchEngine,
     videos: DataFrame,
@@ -125,72 +182,38 @@ def match_with_cache(
     second pass the same way, cached under the youtube_playlist_id
     key — the reference memoizes that pass per playlist id in the
     same Redis db (spotify_elt.py:863-884)."""
-    spark = videos.sparkSession
-    cache = cache if cache is not None else empty_cache(spark)
+    cache = cache if cache is not None else empty_cache(videos.sparkSession)
 
-    hits = videos.join(cache, "video_id", "inner")
-    misses = videos.join(cache.select("video_id"), "video_id", "left_anti")
-
-    hit_matches = (
-        hits.filter(F.col("payload").isNotNull())  # negative entries: known not-found
-        .join(F.broadcast(playlist_map), "youtube_playlist_id", "left")
-        .withColumn("user_playlist_id", F.coalesce("user_playlist_id", F.lit("LM")))
-        .withColumn("__m__", F.from_json("payload", PAYLOAD_SCHEMA))
-        .select(
-            "log_id",
-            "user_playlist_id",
-            *[F.col(f"__m__.{c}").alias(c) for c in PAYLOAD_FIELDS],
-            F.lit(None).cast("array<bigint>").alias("log_ids"),
-            F.lit(0).alias("pass_no"),
-        )
+    all_matches, new_entries = _match_pass(
+        videos,
+        "video_id",
+        cache,
+        lambda misses: engine.compute_matches(misses, playlist_map),
+        lambda hits: (
+            hits.join(F.broadcast(playlist_map), "youtube_playlist_id", "left")
+            .withColumn("user_playlist_id", F.coalesce("user_playlist_id", F.lit("LM")))
+            .withColumn("log_ids", F.lit(None).cast("array<bigint>"))
+            .withColumn("pass_no", F.lit(0))
+        ),
     )
-    if misses.isEmpty():
-        # fully-warm cache: zero search calls, zero engine stages
-        miss_matches = spark.createDataFrame([], MatchEngine._match_schema())
-    else:
-        miss_matches = engine.compute_matches(misses, playlist_map)
-    all_matches = hit_matches.unionByName(miss_matches.select(*hit_matches.columns))
-
-    new_entries = cache_entries(miss_matches, misses)
-
     if grouped_others is not None:
-        g_keyed = grouped_others.withColumn("log_id", F.element_at("log_ids", 1))
-        g_hits = g_keyed.join(
-            cache.withColumnRenamed("video_id", "youtube_playlist_id"),
-            "youtube_playlist_id",
-            "inner",
-        )
-        g_misses = g_keyed.drop("log_id").join(
-            cache.select(F.col("video_id").alias("youtube_playlist_id")),
-            "youtube_playlist_id",
-            "left_anti",
-        )
-        g_hit_matches = (
-            g_hits.filter(F.col("payload").isNotNull())
-            .withColumn("__m__", F.from_json("payload", PAYLOAD_SCHEMA))
-            .select(
-                "log_id",
-                F.lit("LM").alias("user_playlist_id"),
-                *[F.col(f"__m__.{c}").alias(c) for c in PAYLOAD_FIELDS],
-                F.col("log_ids"),
-                F.lit(1).alias("pass_no"),
-            )
-        )
-        g_miss_matches = engine.compute_matches_others(g_misses)
-        all_matches = all_matches.unionByName(g_hit_matches).unionByName(
-            g_miss_matches.select(*hit_matches.columns)
-        )
         # group entries reuse the video cache shape with the playlist
         # id in the key column
-        g_new = cache_entries(
-            g_miss_matches,
-            g_misses.select(
-                F.element_at("log_ids", 1).alias("log_id"),
-                F.col("youtube_playlist_id").alias("video_id"),
+        g_matches, g_entries = _match_pass(
+            grouped_others.withColumn("log_id", F.element_at("log_ids", 1)),
+            "youtube_playlist_id",
+            cache,
+            engine.compute_matches_others,
+            lambda hits: hits.withColumn("user_playlist_id", F.lit("LM")).withColumn(
+                "pass_no", F.lit(1)
             ),
         )
-        new_entries = new_entries.unionByName(g_new)
+        all_matches = all_matches.unionByName(g_matches)
+        new_entries = new_entries.unionByName(g_entries)
 
+    # the one materialisation (module docstring): outputs must not read
+    # the cache files that save_cache replaces
+    all_matches = all_matches.localCheckpoint(eager=True)
     result = engine.assemble(all_matches, liked_tracks, liked_albums)
     # misses are disjoint from the cache by construction; keep the
     # merge an explicit prefer-new anti-join rather than an arbitrary

@@ -20,11 +20,11 @@ Here each stage is a DataFrame transform:
                       log_id order per SURVEY §7 watch-list #6)
 - guarded upsert    -> prefer-non-null playlist_uri window (A8)
 
-Cost note (SURVEY §7 watch-list #4): eager mode evaluates all
-strategies set-at-a-time — optimal when search is a local catalog
-join.  lazy=True runs priority rounds only for still-missing videos,
-preserving the reference's miss-driven API-call count for paid
-sources.
+Cost note (SURVEY §7 watch-list #4): one eager cascade evaluates every
+strategy set-at-a-time, which is optimal when search is a local
+catalog join.  The reference's miss-driven API-call saving lives one
+layer up: the match cache (cache.py) hands the engine only the videos
+it has not seen, so search calls stay limited to cache misses.
 """
 
 from __future__ import annotations
@@ -116,10 +116,9 @@ def _q_expr(template: str) -> F.Column:
 
 
 class MatchEngine:
-    def __init__(self, cfg: PipelineConfig, source: CandidateSource, lazy: bool = False):
+    def __init__(self, cfg: PipelineConfig, source: CandidateSource):
         self.cfg = cfg
         self.source = source
-        self.lazy = lazy
 
     # ------------------------------------------------------------ public
     def match(
@@ -199,8 +198,6 @@ class MatchEngine:
         log membership probe); assemble() fans log rows out per log_id
         afterwards, all carrying the group's status (:886-889,914-916
         loop log_ids with one status)."""
-        if grouped.isEmpty():
-            return grouped.sparkSession.createDataFrame([], self._match_schema())
         prepared = (
             with_fixed_title(grouped, "title", "fixed_title")
             .withColumn("artist", strip_topic_suffix("author"))
@@ -263,11 +260,6 @@ class MatchEngine:
 
     def _match_tracks(self, videos: DataFrame) -> DataFrame:
         strat = self._strategy_rows(videos, TRACK_STRATEGIES)
-        if self.lazy:
-            return self._rounds(
-                strat, videos, kind="track", n_pri=len(TRACK_STRATEGIES),
-                limit=self.cfg.search_limit_tracks,
-            )
         cands = self.source.search(
             strat.select("qid", "q"), "track", self.cfg.search_limit_tracks
         ).filter(F.col("result_rank") == 1)
@@ -330,14 +322,6 @@ class MatchEngine:
         if videos.isEmpty():
             return videos.sparkSession.createDataFrame([], self._match_schema())
         strat = self._strategy_rows(videos, strategies)
-        if self.lazy:
-            # miss-driven rounds apply to collection searches too —
-            # the reference's find_album/find_other_playlist only fire
-            # later strategies when earlier ones returned nothing
-            return self._rounds(
-                strat, videos, kind=kind, n_pri=len(strategies),
-                limit=self.cfg.search_limit_albums, grouped=grouped,
-            )
         cands = self.source.search(
             strat.select("qid", "q"), kind, self.cfg.search_limit_albums
         ).filter(F.col("result_rank") == 1)
@@ -444,56 +428,6 @@ class MatchEngine:
             .withColumn("kind", F.lit(kind))
         )
 
-    def _rounds(
-        self,
-        strat: DataFrame,
-        videos: DataFrame,
-        kind: str,
-        n_pri: int,
-        limit: int,
-        grouped: bool = False,
-    ) -> DataFrame:
-        """Miss-driven evaluation: one search round per priority over
-        still-missing videos only (preserves the reference's API-call
-        cost model).  Same output as the eager path."""
-        spark = strat.sparkSession
-        remaining = videos.select("log_id")
-        accepted_parts: list[DataFrame] = []
-        tries = videos.select("log_id").withColumn("tries", F.lit(0))
-        for p in range(n_pri):
-            round_q = strat.filter(F.col("priority") == p).join(remaining, "log_id", "left_semi")
-            if round_q.isEmpty():
-                continue
-            cands = self.source.search(
-                round_q.select("qid", "q"), kind, limit
-            ).filter(F.col("result_rank") == 1)
-            joined = round_q.join(cands, "qid", "inner")
-            scored = (
-                self._score_tracks(joined)
-                if kind == "track"
-                else self._score_collections(joined, kind, grouped)
-            )
-            scored = scored.localCheckpoint(eager=True)
-            got = scored.select("log_id").distinct()
-            tries = (
-                tries.join(got.withColumn("hit", F.lit(1)), "log_id", "left")
-                .withColumn("tries", F.col("tries") + F.coalesce("hit", F.lit(0)))
-                .drop("hit")
-            )
-            acc = scored.filter(F.col("accepted")).join(tries, "log_id")
-            accepted_parts.append(
-                acc.withColumn("found_on_try", F.col("tries").cast("long"))
-                .drop("tries", "accepted", "priority")
-                .withColumn("kind", F.lit(kind))
-            )
-            remaining = remaining.join(acc.select("log_id"), "log_id", "left_anti")
-        if not accepted_parts:
-            return spark.createDataFrame([], self._match_schema())
-        out = accepted_parts[0]
-        for part in accepted_parts[1:]:
-            out = out.unionByName(part)
-        return out
-
     @staticmethod
     def _match_schema() -> str:
         return (
@@ -519,12 +453,6 @@ class MatchEngine:
         spark = matches.sparkSession
         liked_tracks = liked_tracks or spark.createDataFrame([], "uri string")
         liked_albums = liked_albums or spark.createDataFrame([], "uri string")
-
-        # back-compat for callers assembling pre-grouped match frames
-        if "log_ids" not in matches.columns:
-            matches = matches.withColumn("log_ids", F.lit(None).cast("array<bigint>"))
-        if "pass_no" not in matches.columns:
-            matches = matches.withColumn("pass_no", F.lit(0))
 
         # ---- statuses (collect_*: liked-before check first, then the
         # saved-during membership probe over earlier log rows)

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from musicflow_spark.queries.portable import pround
+from musicflow_spark.functions.portable import pround
 
 
 def most_saved_channels(stg_youtube_videos: DataFrame) -> DataFrame:

@@ -191,10 +191,8 @@ def musicflow_pipeline(
             "spotify_playlists_others": result.playlists_others,
         }
         if cache_path:
-            # materialize results BEFORE the cache flush: their lineage
-            # reads the old cache files, which save_cache atomically
-            # replaces
-            outputs = {k: df.localCheckpoint(eager=True) for k, df in outputs.items()}
+            # safe before the outputs are written: match_with_cache
+            # already detached them from the cache files replaced here
             save_cache(new_cache, cache_path)
         return outputs
 

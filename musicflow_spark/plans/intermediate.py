@@ -11,8 +11,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from musicflow_spark.config import PipelineConfig
+from musicflow_spark.functions.portable import pround
 from musicflow_spark.functions.timeutils import ms_to_clock
-from musicflow_spark.queries.portable import pround
 
 
 def int_join_spotify_uris(stg: dict[str, DataFrame]) -> DataFrame:

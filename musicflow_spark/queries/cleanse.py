@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from musicflow_spark.functions.portable import pround, pround_sql
 from musicflow_spark.operators.cleanse import (
     PII_PATTERNS,
     digit_ratio,
@@ -23,7 +24,6 @@ from musicflow_spark.operators.cleanse import (
 )
 from musicflow_spark.operators.dedup import portable_hash60
 from musicflow_spark.operators.textnorm import INJECT_SQL
-from musicflow_spark.queries.portable import pround, pround_sql
 from musicflow_spark.queries.registry import Query
 from musicflow_spark.sources.catalog import read_table
 

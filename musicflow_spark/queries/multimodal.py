@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from musicflow_spark.functions.portable import pround
 from musicflow_spark.operators.multimodal import (
     PHASH_BASE_MOD,
     PHASH_BUMP,
@@ -28,7 +29,6 @@ from musicflow_spark.operators.multimodal import (
     png_media_from_documents,
     sample_frames,
 )
-from musicflow_spark.queries.portable import pround
 from musicflow_spark.queries.registry import Query
 from musicflow_spark.sources.catalog import read_table
 

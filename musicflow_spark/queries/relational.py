@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from musicflow_spark.queries.portable import pround, pround_sql
+from musicflow_spark.functions.portable import pround, pround_sql
 from musicflow_spark.queries.registry import Query
 from musicflow_spark.sources.catalog import read_table
 

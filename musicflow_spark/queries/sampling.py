@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from musicflow_spark.functions.portable import pround
 from musicflow_spark.operators.sampling import (
     bernoulli_sample,
     mixture_interleave,
@@ -24,7 +25,6 @@ from musicflow_spark.operators.sampling import (
     stratified_sample,
     token_count,
 )
-from musicflow_spark.queries.portable import pround
 from musicflow_spark.queries.registry import Query
 from musicflow_spark.sources.catalog import read_table
 

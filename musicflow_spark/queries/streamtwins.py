@@ -47,7 +47,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from musicflow_spark.queries.portable import pround
+from musicflow_spark.functions.portable import pround
 from musicflow_spark.queries.registry import Query
 from musicflow_spark.sources.catalog import read_table
 

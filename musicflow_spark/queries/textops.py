@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from musicflow_spark.functions.portable import pround
 from musicflow_spark.functions.strings import FIX_TITLE_STEPS, is_ost, with_fixed_title
 from musicflow_spark.operators.dedup import (
     dedup_clusters,
@@ -42,7 +43,6 @@ from musicflow_spark.operators.textstats import (
     tokens,
     unigram_oracle_sql,
 )
-from musicflow_spark.queries.portable import pround
 from musicflow_spark.queries.registry import Query
 from musicflow_spark.sources.catalog import read_table
 
@@ -2945,7 +2945,7 @@ def corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _corpus_zipf_fit_oracle_sql() -> str:
-    from musicflow_spark.queries.portable import pround_sql
+    from musicflow_spark.functions.portable import pround_sql
 
     num = "(CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
     den = "(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"

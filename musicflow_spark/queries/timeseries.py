@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from musicflow_spark.functions.portable import pround
 from musicflow_spark.operators.timejoin import (
     US_PER_DAY,
     asof_join,
@@ -22,7 +23,6 @@ from musicflow_spark.operators.timejoin import (
     overlap_join_bucketed,
     range_join_bucketed,
 )
-from musicflow_spark.queries.portable import pround
 from musicflow_spark.queries.registry import Query
 from musicflow_spark.sources.catalog import read_table
 

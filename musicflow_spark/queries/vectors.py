@@ -15,6 +15,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from musicflow_spark.functions.portable import pround
 from musicflow_spark.operators.embeddings import (
     DEFAULT_SCALE,
     gram_moments_exact,
@@ -34,7 +35,6 @@ from musicflow_spark.operators.similarity import (
     random_hyperplanes,
     semantic_dedup_flags,
 )
-from musicflow_spark.queries.portable import pround
 from musicflow_spark.queries.registry import Query
 from musicflow_spark.sources.catalog import read_table
 

@@ -176,22 +176,6 @@ def test_side_effect_sets(result):
     assert all(p != "LM" for p, _ in adds)
 
 
-@pytest.mark.slow
-def test_lazy_rounds_equal_eager(spark, source, engine_inputs, others_grouped):
-    videos, playlist_map = engine_inputs
-    liked = spark.createDataFrame([("spotify:track:t03",)], "uri string")
-    eager = MatchEngine(CFG, source, lazy=False).match(
-        videos, playlist_map, liked_tracks=liked, grouped_others=others_grouped
-    )
-    lazy = MatchEngine(CFG, source, lazy=True).match(
-        videos, playlist_map, liked_tracks=liked, grouped_others=others_grouped
-    )
-    cols = ["log_id", "track_uri", "album_uri", "playlist_uri", "found_on_try", "search_type_id", "status"]
-    e = sorted(tuple(r) for r in eager.log.select(*cols).collect())
-    l = sorted(tuple(r) for r in lazy.log.select(*cols).collect())
-    assert e == l
-
-
 # ----------------------------------------------- other-playlists pass
 @pytest.fixture(scope="module")
 def others_grouped(spark):

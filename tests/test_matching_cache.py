@@ -4,6 +4,8 @@ parquet round-trip (the reference's restart-the-flow semantics)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +17,7 @@ from musicflow_spark.matching import (
     match_with_cache,
     save_cache,
 )
+from musicflow_spark.matching.cache import CACHE_SCHEMA
 
 CFG = PipelineConfig()
 
@@ -93,7 +96,6 @@ def test_warm_cache_reproduces_cold_run_without_search(spark, setup, tmp_path):
     assert cache2.count() == cache.count()
 
 
-@pytest.mark.slow
 def test_only_new_videos_are_searched(spark, setup):
     source, videos, playlist_map = setup
     engine = MatchEngine(CFG, source)
@@ -128,7 +130,6 @@ def test_cache_key_is_video_not_library_row(spark, setup):
     assert cache.filter(F.col("payload").isNotNull()).count() == matched_videos
 
 
-@pytest.mark.slow
 def test_grouped_others_cached_under_playlist_key(spark, setup):
     source, videos, playlist_map = setup
     grouped = spark.createDataFrame(
@@ -167,3 +168,30 @@ def test_grouped_others_cached_under_playlist_key(spark, setup):
     # the grouped hit fanned out per log id on the warm path too
     warm_ids = {r["log_id"] for r in warm.log.collect()}
     assert {9, 21} <= warm_ids and 10 not in warm_ids
+
+
+def test_crashed_flush_recovers_finished_copy(spark, tmp_path, monkeypatch):
+    # a crash between rmtree(path) and rename(tmp, path) must not lose
+    # the cache: the finished tmp copy is moved into place on load
+    path = str(tmp_path / "match_cache")
+    entries = [("v01", '{"kind":"track"}'), ("v02", None)]
+    save_cache(spark.createDataFrame(entries[:1], CACHE_SCHEMA), path)
+
+    real_rename = os.rename
+    crashed = []
+
+    def rename_crashing_once(src, dst):
+        if not crashed:
+            crashed.append(src)
+            raise OSError("injected crash before the rename")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename_crashing_once)
+    with pytest.raises(OSError, match="injected"):
+        save_cache(spark.createDataFrame(entries, CACHE_SCHEMA), path)
+    assert not os.path.exists(path)
+
+    reloaded = load_cache(spark, path)
+    assert sorted(tuple(r) for r in reloaded.collect()) == sorted(entries)
+    save_cache(reloaded, path)
+    assert sorted(tuple(r) for r in load_cache(spark, path).collect()) == sorted(entries)
