@@ -6,21 +6,21 @@ dbt/tests/no_lost_videos.sql) as DataFrame programs.  dbt semantics
 throughout: a check *passes* when its violation query returns zero
 rows.
 
-Scale design — checks are grouped by physical shape, not run one
-query per assertion:
+Scale design — one Spark action per suite.  Registering a check builds
+its one-row violation frame (a bigint ``failures`` column); ``run()``
+tags each frame with its check index, unions them and collects once.
 
 - **Row checks** (not_null / accepted_values / expression / regex /
   like) are pure per-row predicates.  All row checks against one
-  table compile into a SINGLE aggregate scan over that table
-  (``agg(sum(when(violated, 1)))`` per check), so 50 assertions on a
-  100 TB table cost one pass, not 50.
-- **Key checks** (unique / unique_combination) need a shuffle on the
-  key; each compiles to groupBy(key).count > 1.
-- **Ref checks** (relationships) compile to a distinct + left-anti
-  join against the parent — broadcast when the parent is a dimension.
+  table still fuse into a SINGLE aggregate scan over that table
+  (``count(when(violated, 1))`` per check, exploded to one row per
+  check), so 50 assertions on a 100 TB table cost one pass, not 50.
+- **Key checks** (unique / unique_combination) count the key groups
+  with groupBy(key).count > 1.
+- **Ref checks** (relationships) are a distinct + left-anti join
+  against the parent — broadcast when the parent is a dimension.
 - **Compare checks** (equal_rowcount, duration_match,
-  tracks_count_match, conservation) are tiny scalar-aggregate
-  comparisons.
+  tracks_count_match, singular tests) are tiny scalar aggregates.
 - **Type checks** (expect_column_values_to_be_of_type) read the
   schema only — no job at all.
 """
@@ -28,6 +28,7 @@ query per assertion:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -48,25 +49,26 @@ class CheckResult:
         return f"{mark} {self.table}: {self.name} ({self.failures} failures)"
 
 
-def _where(df: DataFrame, where: str | Column | None) -> DataFrame:
-    if where is None:
-        return df
-    return df.filter(where)
+def _failures(violations: DataFrame) -> DataFrame:
+    """The one-row violation frame: how many rows ``violations`` has."""
+    return violations.agg(F.count(F.lit(1)).alias("failures"))
 
 
 @dataclass
 class CheckSet:
     """A suite of checks over a named collection of DataFrames.
 
-    Registration methods mirror the dbt test vocabulary; ``run()``
-    executes the whole suite with per-table scan fusion.
+    Registration methods mirror the dbt test vocabulary.  Each one
+    builds its violation frame at registration (lazily — no job runs);
+    ``run()`` executes the whole suite as one action, with row checks
+    fused into one scan per table.
     """
 
     tables: dict[str, DataFrame]
-    # (table, name, violation Column) — fused into one scan per table
-    _row_checks: list[tuple[str, str, Column]] = field(default_factory=list)
-    # (table, name, thunk) — each thunk returns a failure count
-    _job_checks: list[tuple[str, str, object]] = field(default_factory=list)
+    # table -> [(name, violation Column)] — fused into one scan per table
+    _row_checks: dict[str, list[tuple[str, Column]]] = field(default_factory=dict)
+    # (table, name, one-row frame with a bigint ``failures`` column)
+    _frame_checks: list[tuple[str, str, DataFrame]] = field(default_factory=list)
     # (table, name, failures) — resolved at registration (schema-only)
     _static: list[tuple[str, str, int]] = field(default_factory=list)
 
@@ -75,7 +77,7 @@ class CheckSet:
         if where is not None:
             cond = F.expr(where) if isinstance(where, str) else where
             violated = cond & violated
-        self._row_checks.append((table, name, violated))
+        self._row_checks.setdefault(table, []).append((name, violated))
 
     def not_null(self, table: str, col: str, where: str | None = None) -> None:
         """dbt ``not_null`` (conditional variants: reference
@@ -115,47 +117,34 @@ class CheckSet:
         count of KEY GROUPS appearing more than once (null single-col
         keys exempt, as in dbt)."""
         name = f"unique: {', '.join(cols)}" + (f" where {where}" if where else "")
-
-        def job() -> int:
-            df = _where(self.tables[table], where)
-            if len(cols) == 1:
-                df = df.filter(F.col(cols[0]).isNotNull())
-            return (
-                df.groupBy(*cols)
-                .agg(F.count(F.lit(1)).alias("__n__"))
-                .filter(F.col("__n__") > 1)
-                .count()
-            )
-
-        self._job_checks.append((table, name, job))
+        df = self.tables[table] if where is None else self.tables[table].filter(where)
+        if len(cols) == 1:
+            df = df.filter(F.col(cols[0]).isNotNull())
+        dup_keys = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("__n__")).filter("__n__ > 1")
+        self._frame_checks.append((table, name, _failures(dup_keys)))
 
     # ------------------------------------------------------ ref checks
     def relationships(self, table: str, col: str, to: str, field_: str) -> None:
         """dbt ``relationships``: every non-null child value exists in
         the parent (reference _staging__models.yml:114-116 etc.)."""
+        child = self.tables[table].select(F.col(col).alias("__v__")).filter(
+            F.col("__v__").isNotNull()
+        ).distinct()
+        parent = self.tables[to].select(F.col(field_).alias("__v__"))
+        # parent key sets here are dimension-sized; broadcast the probe
+        # side at scale the anti-join shuffles on __v__
+        orphans = child.join(parent, "__v__", "left_anti")
         name = f"relationships: {col} -> {to}.{field_}"
-
-        def job() -> int:
-            child = self.tables[table].select(F.col(col).alias("__v__")).filter(
-                F.col("__v__").isNotNull()
-            ).distinct()
-            parent = self.tables[to].select(F.col(field_).alias("__v__"))
-            # parent key sets here are dimension-sized; broadcast the
-            # probe side at scale the anti-join shuffles on __v__
-            return child.join(parent, "__v__", "left_anti").count()
-
-        self._job_checks.append((table, name, job))
+        self._frame_checks.append((table, name, _failures(orphans)))
 
     # -------------------------------------------------- compare checks
     def equal_rowcount(self, table: str, compare: str) -> None:
         """dbt_utils.equal_rowcount (row conservation between
         models)."""
-        name = f"equal_rowcount vs {compare}"
-
-        def job() -> int:
-            return abs(self.tables[table].count() - self.tables[compare].count())
-
-        self._job_checks.append((table, name, job))
+        left = self.tables[table].agg(F.count(F.lit(1)).alias("l"))
+        right = self.tables[compare].agg(F.count(F.lit(1)).alias("r"))
+        diff = left.crossJoin(right).select(F.abs(F.col("l") - F.col("r")).alias("failures"))
+        self._frame_checks.append((table, f"equal_rowcount vs {compare}", diff))
 
     def aggregate_match(self, table: str, key: str, agg_col: str, child_table: str,
                         child_key: str, child_expr: Column, name: str) -> None:
@@ -164,27 +153,20 @@ class CheckSet:
         test_tracks_count_match.sql:5-17): an entity attribute must
         equal an aggregate over its child rows; failures are entities
         where they differ."""
-
-        def job() -> int:
-            children = (
-                self.tables[child_table]
-                .filter(F.col(child_key).isNotNull())
-                .groupBy(F.col(child_key).alias(key))
-                .agg(child_expr.alias("__agg__"))
-            )
-            return (
-                self.tables[table]
-                .join(children, key, "inner")
-                .filter(F.col(agg_col) != F.col("__agg__"))
-                .count()
-            )
-
-        self._job_checks.append((table, name, job))
+        children = (
+            self.tables[child_table]
+            .filter(F.col(child_key).isNotNull())
+            .groupBy(F.col(child_key).alias(key))
+            .agg(child_expr.alias("__agg__"))
+        )
+        joined = self.tables[table].join(children, key, "inner")
+        mismatched = joined.filter(F.col(agg_col) != F.col("__agg__"))
+        self._frame_checks.append((table, name, _failures(mismatched)))
 
     def custom(self, table: str, name: str, fn) -> None:
         """Singular tests (dbt/tests/no_lost_videos.sql): ``fn`` gets
-        the tables dict and returns a failure count."""
-        self._job_checks.append((table, name, lambda: fn(self.tables)))
+        the tables dict and returns a one-row ``failures`` frame."""
+        self._frame_checks.append((table, name, fn(self.tables)))
 
     # ----------------------------------------------------- type checks
     def column_type(self, table: str, col: str, spark_type: str) -> None:
@@ -199,24 +181,28 @@ class CheckSet:
 
     # ------------------------------------------------------------- run
     def run(self) -> list[CheckResult]:
-        results = [CheckResult(t, n, f) for t, n, f in self._static]
-
-        # fuse all row checks per table into one aggregate scan
-        by_table: dict[str, list[tuple[str, Column]]] = {}
-        for table, name, violated in self._row_checks:
-            by_table.setdefault(table, []).append((name, violated))
-        for table, checks in by_table.items():
-            aggs = [
-                F.sum(F.when(violated, 1).otherwise(0)).alias(f"c{i}")
-                for i, (_, violated) in enumerate(checks)
+        """Run the whole suite as one Spark action."""
+        checks: list[tuple[str, str]] = []
+        frames: list[DataFrame] = []
+        for table, fused in self._row_checks.items():
+            counts = [
+                F.struct(
+                    F.lit(len(checks) + i).alias("check"),
+                    F.count(F.when(violated, 1)).alias("failures"),
+                )
+                for i, (_, violated) in enumerate(fused)
             ]
-            row = self.tables[table].agg(*aggs).collect()[0]
-            for i, (name, _) in enumerate(checks):
-                results.append(CheckResult(table, name, int(row[f"c{i}"] or 0)))
+            frames.append(self.tables[table].agg(F.inline(F.array(*counts))))
+            checks += [(table, name) for name, _ in fused]
+        for table, name, frame in self._frame_checks:
+            frames.append(frame.select(F.lit(len(checks)).alias("check"), "failures"))
+            checks.append((table, name))
 
-        for table, name, job in self._job_checks:
-            results.append(CheckResult(table, name, int(job())))
-        return results
+        failures = dict(reduce(DataFrame.union, frames).collect()) if frames else {}
+        return [CheckResult(t, n, f) for t, n, f in self._static] + [
+            CheckResult(t, n, int(failures[i])) for i, (t, n) in enumerate(checks)
+        ]
 
     def count(self) -> int:
-        return len(self._row_checks) + len(self._job_checks) + len(self._static)
+        rows = sum(len(fused) for fused in self._row_checks.values())
+        return rows + len(self._frame_checks) + len(self._static)

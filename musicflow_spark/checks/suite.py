@@ -240,11 +240,15 @@ def reference_suite(models: dict[str, DataFrame]) -> CheckSet:
     s.expression_is_true("log_for_tableau", "difference_sec != 0")
 
     # ---- singular: no_lost_videos (dbt/tests/no_lost_videos.sql:3-30)
-    def no_lost_videos(tables: dict[str, DataFrame]) -> int:
-        total = tables["stg__youtube_library"].count()
-        found = tables["int_join_spotify_uris"].count()
-        not_found = tables["log_not_found_videos"].count()
-        return 0 if total == found + not_found else 1
+    def no_lost_videos(tables: dict[str, DataFrame]) -> DataFrame:
+        total, found, not_found = (
+            tables[t].agg(F.count(F.lit(1)).alias(a))
+            for t, a in (("stg__youtube_library", "total"), ("int_join_spotify_uris", "found"),
+                         ("log_not_found_videos", "not_found"))
+        )
+        return total.crossJoin(found).crossJoin(not_found).select(
+            (F.col("total") != F.col("found") + F.col("not_found")).cast("bigint").alias("failures")
+        )
 
     s.custom("(singular)", "no_lost_videos", no_lost_videos)
     return s

@@ -16,12 +16,12 @@ search — playlist-dependent fields (log_id, status, membership) are
 recomputed at assembly, never cached.
 
 The one materialisation: ``match_with_cache`` checkpoints the unioned
-hit and miss rows eagerly, before assembly.  Every output it returns
-then reads that checkpoint, not the cache files the hits were decoded
-from, so ``save_cache`` may replace those files as soon as the call
-returns and the outputs stay readable.  Only the merged cache itself
-reads the old files, and ``save_cache`` finishes writing it before it
-removes them.
+hit and searched-miss rows eagerly, before assembly.  Every output it
+returns, and the new cache entries, then read that checkpoint, not
+the cache files the hits were decoded from, so ``save_cache`` may
+replace those files as soon as the call returns and the outputs stay
+readable.  Only the old-entry half of the merged cache reads the old
+files, and ``save_cache`` finishes writing it before it removes them.
 """
 
 from __future__ import annotations
@@ -92,31 +92,28 @@ def save_cache(cache: DataFrame, path: str) -> None:
     os.rename(tmp, path)
 
 
-def cache_entries(matches: DataFrame, videos: DataFrame) -> DataFrame:
-    """Match rows -> cache rows: one entry per searched VIDEO.
+def cache_entries(searched: DataFrame) -> DataFrame:
+    """Searched rows (``_match_pass``) -> cache rows: one per ``__key__``.
 
-    Matched videos store the JSON payload (lowest log_id wins when
-    the video sits in several playlists — payloads are identical by
-    construction).  Videos the search did NOT match are cached with a
+    Matched keys store the JSON payload (lowest log_id wins when the
+    video sits in several playlists — payloads are identical by
+    construction).  Keys the search did NOT match are cached with a
     null payload: the reference re-searches misses on every restart
     (Redis only memoizes hits, spotify_elt.py:772-797); caching the
     negative verdict is a deliberate improvement that makes warm
     reruns zero-API-call — flagged here because it diverges."""
-    keyed = videos.select("log_id", "video_id").join(
-        matches, "log_id", "left"
-    )
     return (
-        keyed.withColumn(
+        searched.withColumn(
             "__rn__",
             F.row_number().over(
-                Window.partitionBy("video_id").orderBy(
+                Window.partitionBy("__key__").orderBy(
                     F.col("kind").isNull().cast("int"), "log_id"
                 )
             ),
         )
         .filter(F.col("__rn__") == 1)
         .select(
-            "video_id",
+            F.col("__key__").alias("video_id"),
             F.when(
                 F.col("kind").isNotNull(),
                 F.to_json(F.struct(*[F.col(c) for c in PAYLOAD_FIELDS])),
@@ -131,9 +128,11 @@ def _match_pass(
     cache: DataFrame,
     compute: Callable[[DataFrame], DataFrame],
     add_context: Callable[[DataFrame], DataFrame],
-) -> tuple[DataFrame, DataFrame]:
-    """One cache-aware match pass: returns (match rows, new cache
-    entries).
+) -> DataFrame:
+    """One cache-aware match pass: the decoded hit rows plus one row
+    per searched miss, matched or not, with its cache key in
+    ``__key__`` (null on hit rows).  Match rows are those with a
+    ``kind``; the searched rows are the pass's new cache entries.
 
     ``keyed`` carries ``log_id`` and the cache ``key``.  Hits decode
     their payload, and ``add_context`` adds the pass's
@@ -153,13 +152,16 @@ def _match_pass(
         *[F.col(f"__m__.{c}").alias(c) for c in PAYLOAD_FIELDS],
         "log_ids",
         "pass_no",
+        F.lit(None).cast("string").alias("__key__"),
     )
     if misses.isEmpty():
         miss_matches = keyed.sparkSession.createDataFrame([], MatchEngine._match_schema())
     else:
         miss_matches = compute(misses)
-    entries = cache_entries(miss_matches, misses.select("log_id", F.col(key).alias("video_id")))
-    return hit_matches.unionByName(miss_matches.select(*hit_matches.columns)), entries
+    searched = misses.select("log_id", F.col(key).alias("__key__")).join(
+        miss_matches, "log_id", "left"
+    )
+    return hit_matches.unionByName(searched.select(*hit_matches.columns))
 
 
 def match_with_cache(
@@ -184,7 +186,7 @@ def match_with_cache(
     same Redis db (spotify_elt.py:863-884)."""
     cache = cache if cache is not None else empty_cache(videos.sparkSession)
 
-    all_matches, new_entries = _match_pass(
+    rows = _match_pass(
         videos,
         "video_id",
         cache,
@@ -199,7 +201,7 @@ def match_with_cache(
     if grouped_others is not None:
         # group entries reuse the video cache shape with the playlist
         # id in the key column
-        g_matches, g_entries = _match_pass(
+        g_rows = _match_pass(
             grouped_others.withColumn("log_id", F.element_at("log_ids", 1)),
             "youtube_playlist_id",
             cache,
@@ -208,13 +210,15 @@ def match_with_cache(
                 "pass_no", F.lit(1)
             ),
         )
-        all_matches = all_matches.unionByName(g_matches)
-        new_entries = new_entries.unionByName(g_entries)
+        rows = rows.unionByName(g_rows)
 
     # the one materialisation (module docstring): outputs must not read
     # the cache files that save_cache replaces
-    all_matches = all_matches.localCheckpoint(eager=True)
-    result = engine.assemble(all_matches, liked_tracks, liked_albums)
+    rows = rows.localCheckpoint(eager=True)
+    result = engine.assemble(
+        rows.filter(F.col("kind").isNotNull()).drop("__key__"), liked_tracks, liked_albums
+    )
+    new_entries = cache_entries(rows.filter(F.col("__key__").isNotNull()))
     # misses are disjoint from the cache by construction; keep the
     # merge an explicit prefer-new anti-join rather than an arbitrary
     # dropDuplicates so re-merging the same run is idempotent

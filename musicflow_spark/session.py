@@ -33,6 +33,8 @@ def get_spark(
     every other conf carries over unchanged.
     """
     n = cpus or DEFAULT_CPUS
+    # default driver heap: half the host's physical memory, capped at 90g
+    heap_mb = min(os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**21, 90 * 1024)
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
@@ -43,7 +45,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{heap_mb}m"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")

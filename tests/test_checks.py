@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from musicflow_spark.checks import CheckSet, reference_suite
+from musicflow_spark.checks import CheckResult, CheckSet, reference_suite
 from musicflow_spark.config import PipelineConfig
 from musicflow_spark.plans.pipeline import build_all
 
@@ -17,7 +17,6 @@ def models(musicflow_sources):
     return build_all(musicflow_sources, PipelineConfig())
 
 
-@pytest.mark.slow
 def test_reference_suite_green(models):
     suite = reference_suite(models)
     # the reference runs ~130 dbt assertions; the port must be in
@@ -102,3 +101,81 @@ def test_column_type_check_is_static(models):
     s.column_type("stg__youtube_videos", "duration_ms", "string")  # wrong
     res = s.run()
     assert res[0].passed and not res[1].passed
+
+
+def _every_family(spark) -> CheckSet:
+    """One suite with a check of every family over two hand-built
+    tables, each check planted with a different failure count."""
+    # p: rows 0-9 pair up into ids 0-4 (5 duplicate keys); rows 10-19
+    # are ids 110-119 with dur = row number
+    p = spark.createDataFrame(
+        [
+            (i // 2 if i < 10 else i + 100, None if i < 1 else "x", "y" if i < 2 else "x",
+             -1 if i < 3 else 1, "bad" if i < 4 else "ok-1", 0 if i < 10 else i)
+            for i in range(20)
+        ],
+        "id bigint, a string, kind string, v bigint, code string, dur bigint",
+    )
+    # c (29 rows): one child per id 110-119 whose dur is off by one,
+    # 8 extra (pid, 't') rows for 110-117, 7 orphan pids, 4 children
+    # of ids 0-3 that sum to p's dur; 6 rows are tagged 'x'
+    c = spark.createDataFrame(
+        [(110 + k, "t", 11 + k) for k in range(10)]
+        + [(110 + k, "t", 0) for k in range(8)]
+        + [(1000 + k, "x" if k < 2 else "t", 0) for k in range(7)]
+        + [(k, "x", 0) for k in range(4)],
+        "pid bigint, tag string, dur bigint",
+    )
+    s = CheckSet(tables={"p": p, "c": c})
+    s.unique("p", "id")  # 5
+    s.not_null("p", "a")  # 1
+    s.column_type("p", "id", "bigint")  # schema: 0
+    s.relationships("c", "pid", "p", "id")  # 7
+    s.match_like("c", "tag", "t%")  # 6
+    s.accepted_values("p", "kind", ["x"])  # 2
+    s.unique_combination("c", ["pid", "tag"])  # 8
+    s.expression_is_true("p", "v >= 0")  # 3
+    s.equal_rowcount("p", "c")  # 9
+    s.match_regex("p", "code", "^ok")  # 4
+    s.aggregate_match("p", "id", "dur", "c", "pid", F.sum("dur"), "duration_match")  # 10
+    s.custom(  # 11
+        "(singular)", "rows_minus_9",
+        lambda t: t["p"].agg((F.count(F.lit(1)) - 9).alias("failures")),
+    )
+    s.column_type("p", "id", "string")  # schema: 1
+    return s
+
+
+def test_every_family_in_one_suite(spark):
+    # every count differs, so a check index swapped in the union shows
+    # up as a wrong count; order is schema checks, then the fused row
+    # checks table by table, then the rest in registration order
+    assert _every_family(spark).run() == [
+        CheckResult("p", "column_type: id = bigint", 0),
+        CheckResult("p", "column_type: id = string", 1),
+        CheckResult("p", "not_null: a", 1),
+        CheckResult("p", "accepted_values: kind", 2),
+        CheckResult("p", "expression: v >= 0", 3),
+        CheckResult("p", "match_regex: code", 4),
+        CheckResult("c", "match_like: tag", 6),
+        CheckResult("p", "unique: id", 5),
+        CheckResult("c", "relationships: pid -> p.id", 7),
+        CheckResult("c", "unique: pid, tag", 8),
+        CheckResult("p", "equal_rowcount vs c", 9),
+        CheckResult("p", "duration_match", 10),
+        CheckResult("(singular)", "rows_minus_9", 11),
+    ]
+
+
+def test_run_is_one_action(spark, monkeypatch):
+    s = _every_family(spark)
+    cls = type(s.tables["p"])
+    calls = {"collect": 0, "count": 0}
+    for method in calls:
+        def spy(self, *args, _method=method, _real=getattr(cls, method), **kwargs):
+            calls[_method] += 1
+            return _real(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, method, spy)
+    s.run()
+    assert calls == {"collect": 1, "count": 0}

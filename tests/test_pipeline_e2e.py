@@ -59,7 +59,6 @@ def test_engine_log_feeds_models_consistently(pipeline_run):
     assert bad.count() == 0
 
 
-@pytest.mark.slow
 def test_reference_check_suite_green_on_engine_output(pipeline_run):
     # the ~170 ported dbt assertions hold on ENGINE-PRODUCED data, not
     # just the hand-written fixture log
