@@ -1,5 +1,6 @@
 """Scalar expression library — every helper is a native Column
-expression (JVM-side, whole-stage-codegen'd); no Python UDFs."""
+expression (JVM-side; whole-stage-codegen'd except ``fix_title``'s
+blank guard, a ``transform`` lambda); no Python UDFs."""
 
 from musicflow_spark.functions.strings import (  # noqa: F401
     contains_ci,

@@ -6,8 +6,10 @@ at a time inside ``df.apply`` (reference:
 dags/scripts/spotify_elt.py:160-211 ``fix_title``, :216-217 OST/Topic
 handling, :274-281 containment checks). Here each step is an
 ``F.regexp_replace`` / ``F.when`` column expression, so the whole
-chain runs JVM-side under whole-stage codegen and scales linearly with
-executors — zero Python in the hot path.
+chain runs JVM-side and scales linearly with executors — zero Python
+in the hot path.  The ``fix_title`` chain runs outside whole-stage
+codegen: its blank guard is a ``transform`` lambda, which Spark
+evaluates interpreted.
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ from pyspark.sql import functions as F
 #: the 9 rewrite steps of ``fix_title`` (reference:
 #: spotify_elt.py:160-211).  Each is (java_regex, replacement);
 #: after every step the reference "undoes" the rewrite if the result
-#: is blank — reproduced with a per-step F.when guard.
+#: is blank — reproduced by :func:`_unless_blank`.
 FIX_TITLE_STEPS: list[tuple[str, str]] = [
     # 1. brackets () [] 【】 and their content
     (r"(\((.*?)\)|\[(.*?)\]|【(.*?)】)", ""),
@@ -41,6 +43,22 @@ FIX_TITLE_STEPS: list[tuple[str, str]] = [
 ]
 
 
+def _unless_blank(step: Column, original: Column) -> Column:
+    """``step``, or ``original`` when ``step`` is blank, with ``step``
+    referenced once.  The plain ``when(trim(step) == "", original)
+    .otherwise(step)`` names ``step`` twice, so once Catalyst collapses
+    the chain into one expression every step doubles the tree: 2^9
+    ``regexp_replace``s per use of the result.  Binding ``step`` to a
+    lambda variable keeps the tree linear in the number of steps; the
+    lambda is evaluated interpreted, outside whole-stage codegen."""
+    return F.element_at(
+        F.transform(
+            F.array(step), lambda s: F.when(F.trim(s) == "", original).otherwise(s)
+        ),
+        1,
+    )
+
+
 def fix_title(title: Column | str) -> Column:
     """Clean a video title for search, with per-step blank-undo.
 
@@ -48,38 +66,18 @@ def fix_title(title: Column | str) -> Column:
     "if nothing left, undo the last step" guard after each step,
     where "undo" restores the ORIGINAL title (spotify_elt.py:166-210
     resets ``new_title = title``, not the previous step's value).
-
-    NOTE: as a single Column the per-step guard duplicates each
-    step's regexp (``when(cond(r), orig).otherwise(r)`` references r
-    twice), giving a 2^9 expression tree that falls out of
-    whole-stage codegen.  Fine for incidental use; in any hot path
-    use :func:`with_fixed_title`, which materializes each step as its
-    own projection column so every regexp evaluates once.
+    Each step's regexp appears once in the expression.
     """
     original = F.col(title) if isinstance(title, str) else title
     cur = original
     for pattern, repl in FIX_TITLE_STEPS:
-        nxt = F.regexp_replace(cur, pattern, repl)
-        cur = F.when(F.trim(nxt) == "", original).otherwise(nxt)
+        cur = _unless_blank(F.regexp_replace(cur, pattern, repl), original)
     return cur
 
 
 def with_fixed_title(df, title_col: str, out_col: str = "fixed_title"):
-    """DataFrame-level fix_title: one intermediate column per rewrite
-    step, so each regexp_replace is evaluated exactly once per row
-    (Catalyst keeps projections separate rather than duplicate
-    non-cheap expressions).  This is the scale path the matcher uses.
-    """
-    tmp = "__fix_title_cur__"
-    df = df.withColumn(tmp, F.col(title_col))
-    for i, (pattern, repl) in enumerate(FIX_TITLE_STEPS):
-        step = f"__fix_title_s{i}__"
-        df = df.withColumn(step, F.regexp_replace(F.col(tmp), pattern, repl))
-        df = df.withColumn(
-            tmp,
-            F.when(F.trim(F.col(step)) == "", F.col(title_col)).otherwise(F.col(step)),
-        ).drop(step)
-    return df.withColumnRenamed(tmp, out_col)
+    """DataFrame-level :func:`fix_title`: adds ``out_col``."""
+    return df.withColumn(out_col, fix_title(title_col))
 
 
 def strip_topic_suffix(author: Column | str) -> Column:

@@ -24,11 +24,12 @@ Cost note (SURVEY §7 watch-list #4): one eager cascade evaluates every
 strategy set-at-a-time, which is optimal when search is a local
 catalog join.  The reference's miss-driven API-call saving lives one
 layer up: the match cache (cache.py) hands the engine only the videos
-it has not seen, so search calls stay limited to cache misses.  The
-seven eager ``localCheckpoint``s and the ``isEmpty`` probes stay: on
-incremental_sync (shared 4-core host), dropping the two prepared-frame
-checkpoints took compute_matches from 11 s to 107 s, and dropping all
-of them took the match task to 98 s.
+it has not seen, so search calls stay limited to cache misses.
+
+The seven eager ``localCheckpoint``s and the ``isEmpty`` probes stay:
+on incremental_sync (shared 4-core host), one checkpoint for the three
+winner sets was no faster over three pairs, and dropping every
+checkpoint made the traced match task slower (45 s against 28-38 s).
 """
 
 from __future__ import annotations

@@ -3,8 +3,12 @@ into Airflow tasks (dags/*_dag.py) and lets dbt order models by their
 ref() DAG; here both become one dependency-ordered task runner with a
 dbt-style materialization policy.
 
-- ``ephemeral``  -> stays a lazy DataFrame (Catalyst inlines it
-                    downstream, like dbt's ephemeral CTE inlining)
+- ``ephemeral``  -> stays a DataFrame, not written to the warehouse
+                    (dbt's ephemeral CTE).  Most such models stay
+                    lazy and Catalyst inlines them downstream; the two
+                    intermediates, which several models read, sit on
+                    ``build_all``'s lazy checkpoint, so their joins run
+                    once per build however many models read them
 - ``view``       -> createOrReplaceTempView (dbt staging default)
 - ``table``      -> written parquet to the warehouse dir and re-read
                     (dbt marts default; the read-back truncates

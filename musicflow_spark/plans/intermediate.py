@@ -1,8 +1,12 @@
 """Intermediate models — the reference's two ephemeral dbt models.
 
-Ephemeral == not persisted: these return lazy DataFrames that
-Catalyst inlines into downstream marts, matching dbt's CTE inlining
-(reference: dbt/dbt_project.yml:29-30).
+Ephemeral == not persisted to the warehouse (reference:
+dbt/dbt_project.yml:29-30).  These functions are pure lazy builders.
+dbt inlines an ephemeral model as a CTE into every model that reads
+it, so the warehouse re-runs its joins once per reader; each of these
+has four (join) or three (useful) readers among the marts and
+analyses.  ``build_all`` therefore computes each one once per build,
+on a lazy ``localCheckpoint`` that the first reading action fills.
 """
 
 from __future__ import annotations

@@ -16,12 +16,26 @@ from musicflow_spark.plans.staging import stage
 def build_all(
     sources: dict[str, DataFrame], cfg: PipelineConfig | None = None
 ) -> dict[str, DataFrame]:
+    """Every model of one build, keyed by its reference name.
+
+    A model that two or more models read is computed once per build.
+    The two intermediates sit on a lazy ``localCheckpoint``: the first
+    action that reads one (a mart write, usually) stores its rows, and
+    the other readers (marts, analyses, the check suite) read those
+    rows instead of re-running its joins.  Not ``cache()``: a cache
+    entry is session-wide, so a later build over the same source paths,
+    rewritten, would match it and read stale rows, and someone would
+    have to unpersist it.  A checkpoint lives and dies with the frames
+    of this build.  Setting one up plans the intermediate physically,
+    so under AQE this call already runs its shuffle and broadcast
+    stages.
+    """
     cfg = cfg or PipelineConfig()
     stg = stage(sources)
     out: dict[str, DataFrame] = {f"stg__{k}": v for k, v in stg.items()}
 
-    int_join = intermediate.int_join_spotify_uris(stg)
-    int_useful = intermediate.int_useful_youtube_library(stg, cfg)
+    int_join = intermediate.int_join_spotify_uris(stg).localCheckpoint(eager=False)
+    int_useful = intermediate.int_useful_youtube_library(stg, cfg).localCheckpoint(eager=False)
     out["int_join_spotify_uris"] = int_join
     out["int_useful_youtube_library"] = int_useful
 

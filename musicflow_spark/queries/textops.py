@@ -114,7 +114,8 @@ FROM s{len(FIX_TITLE_STEPS)}
 def fix_title_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1+F3: the reference's 9-step title-rewrite chain with per-step
     blank-undo (spotify_elt.py:160-211) as a native regexp_replace /
-    when expression chain — zero UDFs, whole-stage codegen."""
+    when expression chain — zero UDFs.  The chain runs outside
+    whole-stage codegen: each blank guard is a ``transform`` lambda."""
     part = read_table(spark, sf_dir, "part")
     titled = part.select("p_partkey", _title_expr_spark().alias("title"))
     return with_fixed_title(titled, "title").select(

@@ -144,3 +144,25 @@ def build_sources(spark: SparkSession) -> dict[str, DataFrame]:
         name: spark.createDataFrame(rows, MUSICFLOW_SCHEMAS[name])
         for name, rows in data.items()
     }
+
+
+def count_plan_nodes(df: DataFrame, name: str, limit: int = 1_000_000) -> int:
+    """Occurrences of the Catalyst node ``name`` (an operator such as
+    ``Join`` or an expression such as ``RegExpReplace``) in ``df``'s
+    optimized plan.  Stops once past ``limit``, so an exponential
+    expression tree fails fast instead of being walked."""
+
+    def items(seq):
+        return [seq.apply(i) for i in range(seq.size())]
+
+    n, plans, exprs = 0, [df._jdf.queryExecution().optimizedPlan()], []
+    while (plans or exprs) and n <= limit:
+        if plans:
+            node = plans.pop()
+            plans += items(node.children())
+            exprs += items(node.expressions())
+        else:
+            node = exprs.pop()
+            exprs += items(node.children())
+        n += node.nodeName() == name
+    return n

@@ -1,5 +1,6 @@
-"""ADVICE r13 guard tests: the four low-severity contract gaps in
-operators/similarity.py now fail loudly instead of silently diverging."""
+"""ADVICE guard tests: the four low-severity contract gaps in
+operators/similarity.py, and tools/perf_tables.py's unusable records,
+now fail loudly instead of silently diverging."""
 
 from __future__ import annotations
 
@@ -59,3 +60,39 @@ def test_pq_encode_arrow_preserves_id_type(spark):
     assert out.schema["neighbor_id"].dataType.simpleString() == "int"
     rows = {r["neighbor_id"]: list(r["codes"]) for r in out.collect()}
     assert rows == {7: [0], 9: [1]}
+
+
+def _perf_tables(tmp_path, a: dict, b: dict):
+    import json
+    import os
+    import subprocess
+    import sys
+
+    paths = []
+    for name, rec in (("a.json", a), ("b.json", b)):
+        paths.append(str(tmp_path / name))
+        with open(paths[-1], "w") as fh:
+            json.dump(rec, fh)
+    tool = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "perf_tables.py")
+    return subprocess.run(
+        [sys.executable, tool, *paths], capture_output=True, text=True, check=False
+    )
+
+
+def test_perf_tables_rejects_zero_control(tmp_path):
+    ok = {"queries": {"q1": 2.0}, "control": {"sec": 1.0}}
+    zero = {"queries": {"q1": 2.0}, "control": {"sec": 0.0}}
+    done = _perf_tables(tmp_path, ok, zero)
+    assert done.returncode != 0
+    assert "b.json: control takes 0.0 s" in done.stderr
+    assert "Traceback" not in done.stderr
+
+
+def test_perf_tables_rejects_disjoint_records(tmp_path):
+    a = {"queries": {"q1": 2.0}, "control": {"sec": 1.0}}
+    b = {"queries": {"q2": 2.0}, "control": {"sec": 1.0}}
+    done = _perf_tables(tmp_path, a, b)
+    assert done.returncode != 0
+    assert "share no query" in done.stderr
+    assert "Traceback" not in done.stderr
+    assert _perf_tables(tmp_path, a, a).returncode == 0

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from musicflow_spark.config import PipelineConfig
 from musicflow_spark.matching import CatalogCandidateSource, MatchEngine
+from tests.fixtures import count_plan_nodes
 
 CFG = PipelineConfig()
 
@@ -283,3 +284,45 @@ def test_rest_candidate_source_schema_and_batching(spark):
     assert child["track_artists"] is None and child["album_uri"] is None
     second = rows[(1, 2)]
     assert second["item_duration_ms"] is None and second["children"] is None
+
+
+def test_strategy_rows_plan_is_linear_in_fixed_title_refs(spark):
+    """Over a prepared frame that is NOT checkpointed, Catalyst inlines
+    ``fixed_title`` into every strategy that names it.  Each inlined
+    copy must hold one regexp per rewrite step, not 2^9."""
+    from musicflow_spark.functions.strings import FIX_TITLE_STEPS, with_fixed_title
+    from musicflow_spark.matching.engine import TRACK_STRATEGIES
+
+    videos = spark.createDataFrame(
+        [(1, "Song (Live) | OST 1999 Full Album", "Band - Topic")],
+        "log_id long, title string, author string",
+    )
+    prepared = with_fixed_title(videos, "title").withColumn("artist", F.col("author"))
+    steps = len(FIX_TITLE_STEPS)
+    assert count_plan_nodes(prepared, "RegExpReplace", steps) == steps
+
+    engine = MatchEngine(CFG, source=None)
+    rows = engine._strategy_rows(prepared, TRACK_STRATEGIES)
+    # each strategy names fixed_title at most twice (its template and
+    # its only-if-fixed-differs guard), plus the passed-through column
+    bound = steps * (2 * len(TRACK_STRATEGIES) + 1)
+    assert count_plan_nodes(rows, "RegExpReplace", bound) <= bound
+    # the inlined plan and the one over materialised titles agree
+    stored = engine._strategy_rows(prepared.localCheckpoint(), TRACK_STRATEGIES)
+    assert sorted(rows.select("priority", "q").collect()) == sorted(
+        stored.select("priority", "q").collect()
+    )
+
+
+def test_fix_title_parts_matches_its_oracle(spark, sf_dir):
+    """The benchmarked query over the same chain agrees, row for row,
+    with its DuckDB oracle (one CTE per rewrite step)."""
+    import duckdb
+
+    from musicflow_spark.queries import get_queries
+    from tools.check_oracle import compare
+
+    q = next(q for q in get_queries() if q.name == "fix_title_parts")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW part AS SELECT * FROM '{sf_dir}/part.parquet'")
+    assert compare(q.name, q.spark(spark, sf_dir).toPandas(), con.execute(q.oracle).df()) == []

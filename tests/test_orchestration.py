@@ -99,7 +99,6 @@ def test_dagspec_rejects_cycles():
 
 
 # ------------------------------------- per-model materialization config
-@pytest.mark.slow
 def test_materialization_overrides(spark, musicflow_sources, tmp_path):
     import os
 

@@ -8,13 +8,26 @@ keep bug-compatibly.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
 from musicflow_spark.config import PipelineConfig
 from musicflow_spark.plans import build_all
+from tests.fixtures import count_plan_nodes
 
 CFG = PipelineConfig()
+
+#: the analyses that read an intermediate model
+INTERMEDIATE_READERS = (
+    "youtube_statistics",
+    "videos_saved_more_than_once",
+    "found_by_statistics",
+    "found_on_try_statistics",
+    "skipped_during_the_run",
+)
 
 
 @pytest.fixture(scope="module")
@@ -174,3 +187,48 @@ def test_found_statistics(models):
     assert sum(fbs.values()) == 12
     fot = {r["found_on_try"]: r["records_found"] for r in models["found_on_try_statistics"].collect()}
     assert fot[1] == 6 and fot[2] == 4
+
+
+# ------------------------------------- shared intermediates, once per build
+@pytest.mark.parametrize("name", INTERMEDIATE_READERS)
+def test_intermediate_readers_do_not_rerun_its_joins(models, name):
+    # the analysis reads the build's stored intermediate rows
+    assert count_plan_nodes(models[name], "Join") == 0
+
+
+def test_rebuild_over_rewritten_sources_reads_new_rows(spark, musicflow_sources, tmp_path):
+    """The stored intermediates belong to one build, not to the
+    session: after the source files are replaced behind the same
+    paths, a second build returns the new rows, where a session-wide
+    cached plan would still match and return the old ones."""
+    src = tmp_path / "src"
+
+    def land(dest, frames):
+        for name, df in frames.items():
+            df.write.parquet(str(dest / name))
+
+    def read():
+        return {name: spark.read.parquet(str(src / name)) for name in musicflow_sources}
+
+    def rows(df):
+        return sorted(df.collect(), key=str)
+
+    checked = ("int_join_spotify_uris", "int_useful_youtube_library",
+               "log_found_videos", "log_not_found_videos", *INTERMEDIATE_READERS)
+    land(src, musicflow_sources)
+    first = build_all(read(), CFG)
+    before = {name: rows(first[name]) for name in checked}
+
+    halved = dict(musicflow_sources)
+    halved["youtube_library"] = halved["youtube_library"].filter(F.col("id") % 2 == 0)
+    halved["spotify_log"] = halved["spotify_log"].filter(F.col("log_id") % 2 == 0)
+    land(tmp_path / "next", halved)
+    shutil.rmtree(src)
+    os.rename(tmp_path / "next", src)
+
+    second = build_all(read(), CFG)
+    expected = build_all(halved, CFG)
+    after = {name: rows(second[name]) for name in checked}
+    assert after == {name: rows(expected[name]) for name in checked}
+    assert after["int_join_spotify_uris"] != before["int_join_spotify_uris"]
+    assert after["int_useful_youtube_library"] != before["int_useful_youtube_library"]

@@ -17,7 +17,8 @@ Usage:
 Prints a markdown table of raw and control-normalized seconds for every
 query present in both records, the normalized speedup (>1 = B faster),
 and geomean rows.  Exits non-zero if either record lacks a usable
-control (so a truncated record can never silently produce a table).
+control (missing, or 0 s) or the records share no query, so a
+truncated record can never silently produce a table.
 """
 from __future__ import annotations
 
@@ -41,14 +42,18 @@ def control_sec(rec: dict, path: str, override: str | None) -> float:
     if override is not None:
         if override not in rec["queries"]:
             raise SystemExit(f"{path}: control override {override!r} not in queries")
-        return float(rec["queries"][override])
-    ctl = rec.get("control")
-    if not isinstance(ctl, dict) or "sec" not in ctl:
-        raise SystemExit(
-            f"{path}: no control block; pass --control-a/--control-b to pick a "
-            "control query present in the record"
-        )
-    return float(ctl["sec"])
+        sec = float(rec["queries"][override])
+    else:
+        ctl = rec.get("control")
+        if not isinstance(ctl, dict) or "sec" not in ctl:
+            raise SystemExit(
+                f"{path}: no control block; pass --control-a/--control-b to pick a "
+                "control query present in the record"
+            )
+        sec = float(ctl["sec"])
+    if sec <= 0:
+        raise SystemExit(f"{path}: control takes {sec} s; cannot normalise by it")
+    return sec
 
 
 def geomean(xs: list[float]) -> float:
@@ -71,6 +76,8 @@ def main() -> int:
     cb = control_sec(b, args.record_b, args.control_b)
 
     shared = sorted(set(a["queries"]) & set(b["queries"]))
+    if not shared:
+        raise SystemExit(f"{args.record_a} and {args.record_b} share no query")
     only_a = sorted(set(a["queries"]) - set(b["queries"]))
     only_b = sorted(set(b["queries"]) - set(a["queries"]))
 
