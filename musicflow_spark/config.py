@@ -11,7 +11,7 @@ dbt/models/marts/log_for_tableau.sql:38).
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -34,12 +34,10 @@ class PipelineConfig:
     #: search API page/batch limits (spotify_elt.py:221,376,418,611,927)
     search_limit_tracks: int = 50
     search_limit_albums: int = 10
-    sink_batch_size: int = 50
     #: titles excluded from the library (youtube_elt.py:210)
     deleted_titles: tuple[str, ...] = ("Deleted video", "Private video")
     #: playlist-title substring exclusion (youtube_elt.py:115)
     excluded_playlist_marker: str = "\U0001f4bc"  # 💼
-    extra: dict = field(default_factory=dict, compare=False)
 
     @classmethod
     def from_env(cls) -> "PipelineConfig":

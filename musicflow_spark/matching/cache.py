@@ -173,12 +173,16 @@ def match_with_cache(
     liked_albums: DataFrame | None = None,
     grouped_others: DataFrame | None = None,
 ) -> tuple[MatchResult, DataFrame]:
-    """Cache-aware matching: returns (result, merged_cache).
+    """The matcher's one entry point: returns (result, merged_cache).
 
     Cache hits never reach the CandidateSource; only miss videos run
     the search cascade.  Assembly sees hits and misses together, so
     statuses / guarded upserts / side-effect sets behave exactly as a
-    cold run over the same videos.
+    cold run over the same videos.  ``cache=None`` is that cold run:
+    every video is a miss.
+
+    videos / playlist_map: see ``MatchEngine.compute_matches``;
+    liked_tracks / liked_albums: (uri) sets saved before the run.
 
     ``grouped_others`` (extract_other_playlists grouping) runs the
     second pass the same way, cached under the youtube_playlist_id

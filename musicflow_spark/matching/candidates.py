@@ -134,17 +134,30 @@ class CatalogCandidateSource:
                 F.col("duration_ms").alias("item_duration_ms"),
                 "album_uri",
             ).withColumn("children", F.lit(None).cast(CANDIDATE_SCHEMA["children"].dataType))
-            title_col = "item_title"
         elif kind == "album":
             if self.albums is None:
                 return _empty(queries)
-            items = self._album_items()
-            title_col = "item_title"
+            items = self._collection_items(
+                self.albums,
+                "album_uri",
+                F.col("album_uri").alias("item_uri"),
+                F.col("album_title").alias("item_title"),
+                F.split(F.col("album_artists"), "; ").alias("item_artists"),
+                F.col("duration_ms").alias("item_duration_ms"),
+                F.col("album_uri"),
+            )
         elif kind == "playlist":
             if self.playlists is None:
                 return _empty(queries)
-            items = self._playlist_items()
-            title_col = "item_title"
+            items = self._collection_items(
+                self.playlists,
+                "playlist_uri",
+                F.col("playlist_uri").alias("item_uri"),
+                F.col("playlist_title").alias("item_title"),
+                F.array(F.col("playlist_owner")).alias("item_artists"),
+                F.col("duration_ms").alias("item_duration_ms"),
+                F.lit(None).cast("string").alias("album_uri"),
+            )
         else:  # pragma: no cover
             raise ValueError(kind)
 
@@ -160,8 +173,8 @@ class CatalogCandidateSource:
             ),
         ).filter(F.col("__tok__").isNotNull())
 
-        probe = q.join(self._index(items, title_col), "__tok__")
-        lt = F.lower(F.col(title_col))
+        probe = q.join(self._index(items, "item_title"), "__tok__")
+        lt = F.lower(F.col("item_title"))
         scored = (
             probe.withColumn(
                 "__score__",
@@ -201,10 +214,13 @@ class CatalogCandidateSource:
             )
         )
 
-    def _album_items(self) -> DataFrame:
+    def _collection_items(self, items: DataFrame, key: str, *fields: F.Column) -> DataFrame:
+        """Albums or playlists as search items: ``fields`` projected,
+        plus the child-track fan — the catalog tracks grouped by
+        ``key`` (album_uri / playlist_uri), empty when none."""
         children = (
-            self.tracks.filter(F.col("album_uri").isNotNull())
-            .groupBy("album_uri")
+            self.tracks.filter(F.col(key).isNotNull())
+            .groupBy(key)
             .agg(
                 F.array_sort(
                     F.collect_list(
@@ -219,41 +235,8 @@ class CatalogCandidateSource:
                 ).alias("children")
             )
         )
-        return self.albums.join(children, "album_uri", "left").select(
-            F.col("album_uri").alias("item_uri"),
-            F.col("album_title").alias("item_title"),
-            F.split(F.col("album_artists"), "; ").alias("item_artists"),
-            F.col("duration_ms").alias("item_duration_ms"),
-            F.col("album_uri"),
-            F.coalesce(
-                "children", F.array().cast(CANDIDATE_SCHEMA["children"].dataType)
-            ).alias("children"),
-        )
-
-    def _playlist_items(self) -> DataFrame:
-        children = (
-            self.tracks.filter(F.col("playlist_uri").isNotNull())
-            .groupBy("playlist_uri")
-            .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("track_uri"),
-                            F.col("track_title"),
-                            F.col("duration_ms"),
-                            F.col("track_artists"),
-                            F.col("album_uri"),
-                        )
-                    )
-                ).alias("children")
-            )
-        )
-        return self.playlists.join(children, "playlist_uri", "left").select(
-            F.col("playlist_uri").alias("item_uri"),
-            F.col("playlist_title").alias("item_title"),
-            F.array(F.col("playlist_owner")).alias("item_artists"),
-            F.col("duration_ms").alias("item_duration_ms"),
-            F.lit(None).cast("string").alias("album_uri"),
+        return items.join(children, key, "left").select(
+            *fields,
             F.coalesce(
                 "children", F.array().cast(CANDIDATE_SCHEMA["children"].dataType)
             ).alias("children"),

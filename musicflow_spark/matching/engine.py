@@ -120,46 +120,45 @@ def _q_expr(template: str) -> F.Column:
     return F.concat(*out)
 
 
+def _prepare_titles(frame: DataFrame) -> DataFrame:
+    """The title columns every strategy template reads: the fixed
+    title, the Topic-stripped artist and the OST flag."""
+    return (
+        with_fixed_title(frame, "title", "fixed_title")
+        .withColumn("artist", strip_topic_suffix("author"))
+        .withColumn("ost", is_ost("title"))
+    )
+
+
 class MatchEngine:
     def __init__(self, cfg: PipelineConfig, source: CandidateSource):
         self.cfg = cfg
         self.source = source
 
     # ------------------------------------------------------------ public
-    def match(
-        self,
-        videos: DataFrame,
-        playlist_map: DataFrame,
-        liked_tracks: DataFrame | None = None,
-        liked_albums: DataFrame | None = None,
-        grouped_others: DataFrame | None = None,
-    ) -> MatchResult:
-        """videos: (log_id, youtube_playlist_id, video_id, title,
-        author, description, duration_ms) — one row per library entry
-        of the current user (reference extract_videos,
-        spotify_elt.py:92-126).
-        playlist_map: (youtube_playlist_id, user_playlist_id) with the
-        'LM' pseudo-row (reference get_user_playlist_id :134-138).
-        grouped_others: one row per OTHER user's playlist (reference
-        extract_other_playlists :58-89 grouping) for the second match
-        pass — see compute_matches_others."""
-        matches = self.compute_matches(videos, playlist_map)
-        if grouped_others is not None:
-            matches = matches.unionByName(self.compute_matches_others(grouped_others))
-        return self.assemble(matches, liked_tracks, liked_albums)
-
     def compute_matches(self, videos: DataFrame, playlist_map: DataFrame) -> DataFrame:
-        """The search/score/accept stage alone: one unioned match-row
-        frame (``_match_schema`` shape) across the track/album/
-        playlist branches.  Split out so the cache layer (cache.py)
-        can bypass it for cache-hit videos."""
+        """The video pass's search/score/accept stage: one unioned
+        match-row frame (``_match_schema`` shape) across the track/
+        album/playlist branches.  The cache layer (cache.py,
+        ``match_with_cache``) calls it for the videos it has not seen.
+
+        videos: (log_id, youtube_playlist_id, video_id, title, author,
+        description, duration_ms) — one row per library entry of the
+        current user (reference extract_videos, spotify_elt.py:92-126).
+        playlist_map: (youtube_playlist_id, user_playlist_id) with the
+        'LM' pseudo-row (reference get_user_playlist_id :134-138)."""
         # prepared and the per-kind winner sets each feed 2+ downstream
         # consumers (the album winners gate the playlist pass; assembly
         # unions all three and fans into 7 outputs).  Materialize them
         # once — winners are tiny relative to the input, and truncating
         # the lineage here keeps Catalyst analysis linear instead of
         # re-planning the whole cascade per consumer.
-        prepared = self._prepare(videos, playlist_map).localCheckpoint(eager=True)
+        prepared = (
+            _prepare_titles(videos)
+            .join(F.broadcast(playlist_map), "youtube_playlist_id", "left")
+            .withColumn("user_playlist_id", F.coalesce("user_playlist_id", F.lit("LM")))
+            .localCheckpoint(eager=True)
+        )
         th = self.cfg.threshold_ms
         if th is None:
             track_videos, coll_videos = prepared, prepared.limit(0)
@@ -167,23 +166,12 @@ class MatchEngine:
             track_videos = prepared.filter(F.col("duration_ms") < th)
             coll_videos = prepared.filter(F.col("duration_ms") >= th)
 
-        track_matches = self._match_tracks(track_videos).localCheckpoint(eager=True)
-        album_matches = self._match_collections(coll_videos, kind="album").localCheckpoint(
-            eager=True
-        )
-        # playlist search only for videos the album pass missed
-        # (reference: find_other_playlist runs when find_album returns
-        # nothing, spotify_elt.py:826-834)
-        coll_missing = coll_videos.join(
-            album_matches.select("log_id"), "log_id", "left_anti"
-        )
-        playlist_matches = self._match_collections(
-            coll_missing, kind="playlist"
+        limit = self.cfg.search_limit_tracks
+        track_matches = self._match_kind(
+            track_videos, "track", TRACK_STRATEGIES, limit, self._track_scores()
         ).localCheckpoint(eager=True)
-
-        return (
-            track_matches.unionByName(album_matches, allowMissingColumns=True)
-            .unionByName(playlist_matches, allowMissingColumns=True)
+        return track_matches.unionByName(
+            self._albums_then_playlists(coll_videos, COLLECTION_STRATEGIES)
         )
 
     def compute_matches_others(self, grouped: DataFrame) -> DataFrame:
@@ -204,34 +192,35 @@ class MatchEngine:
         afterwards, all carrying the group's status (:886-889,914-916
         loop log_ids with one status)."""
         prepared = (
-            with_fixed_title(grouped, "title", "fixed_title")
-            .withColumn("artist", strip_topic_suffix("author"))
-            .withColumn("ost", is_ost("title"))
+            _prepare_titles(grouped)
             .withColumn("user_playlist_id", F.lit("LM"))
             .withColumn("log_id", F.element_at("log_ids", 1))
             .localCheckpoint(eager=True)
         )
-        album_matches = self._match_collections(
-            prepared, kind="album", strategies=OTHERS_COLLECTION_STRATEGIES, grouped=True
-        ).localCheckpoint(eager=True)
-        missing = prepared.join(album_matches.select("log_id"), "log_id", "left_anti")
-        playlist_matches = self._match_collections(
-            missing, kind="playlist", strategies=OTHERS_COLLECTION_STRATEGIES, grouped=True
-        ).localCheckpoint(eager=True)
-        return album_matches.unionByName(playlist_matches)
+        return self._albums_then_playlists(
+            prepared, OTHERS_COLLECTION_STRATEGIES, grouped=True
+        )
 
     # ------------------------------------------------------------ stages
-    def _prepare(self, videos: DataFrame, playlist_map: DataFrame) -> DataFrame:
-        vids = with_fixed_title(videos, "title", "fixed_title")
-        vids = (
-            vids.withColumn("artist", strip_topic_suffix("author"))
-            .withColumn("ost", is_ost("title"))
-            .join(F.broadcast(playlist_map), "youtube_playlist_id", "left")
-            .withColumn(
-                "user_playlist_id", F.coalesce("user_playlist_id", F.lit("LM"))
-            )
-        )
-        return vids
+    def _albums_then_playlists(
+        self, videos: DataFrame, strategies, grouped: bool = False
+    ) -> DataFrame:
+        """Album search, then playlist search for the videos the album
+        pass missed (reference: find_other_playlist runs when
+        find_album returns nothing, spotify_elt.py:826-834)."""
+
+        def winners(frame: DataFrame, kind: str) -> DataFrame:
+            if frame.isEmpty():
+                out = frame.sparkSession.createDataFrame([], self._match_schema())
+            else:
+                limit = self.cfg.search_limit_albums
+                scores = self._collection_scores(kind, grouped)
+                out = self._match_kind(frame, kind, strategies, limit, scores)
+            return out.localCheckpoint(eager=True)
+
+        albums = winners(videos, "album")
+        missing = videos.join(albums.select("log_id"), "log_id", "left_anti")
+        return albums.unionByName(winners(missing, "playlist"))
 
     def _strategy_rows(self, videos: DataFrame, strategies) -> DataFrame:
         structs = [
@@ -263,15 +252,33 @@ class MatchEngine:
             .withColumn("qid", F.col("log_id") * n + F.col("priority"))
         )
 
-    def _match_tracks(self, videos: DataFrame) -> DataFrame:
-        strat = self._strategy_rows(videos, TRACK_STRATEGIES)
-        cands = self.source.search(
-            strat.select("qid", "q"), "track", self.cfg.search_limit_tracks
-        ).filter(F.col("result_rank") == 1)
-        scored = self._score_tracks(strat.join(cands, "qid", "inner"))
-        return self._pick_winner(scored, kind="track")
+    def _match_kind(
+        self, videos: DataFrame, kind: str, strategies, limit: int, scores: dict[str, F.Column]
+    ) -> DataFrame:
+        """One kind's cascade: strategy rows -> search -> the top
+        candidate per query -> score -> the first accepted strategy
+        wins.  Every kind projects the same match-row columns; the
+        caller supplies the search limit and the scores
+        (``_track_scores`` / ``_collection_scores``)."""
+        strat = self._strategy_rows(videos, strategies)
+        cands = self.source.search(strat.select("qid", "q"), kind, limit).filter(
+            F.col("result_rank") == 1
+        )
+        scored = strat.join(cands, "qid", "inner").select(
+            "log_id",
+            "user_playlist_id",
+            "priority",
+            "search_type_id",
+            "q",
+            F.col("item_uri").alias("spotify_uri"),
+            "album_uri",
+            "item_title",
+            F.array_join(F.col("item_artists"), "; ").alias("item_artists_s"),
+            *[col.alias(name) for name, col in scores.items()],
+        )
+        return self._pick_winner(scored, kind=kind)
 
-    def _score_tracks(self, joined: DataFrame) -> DataFrame:
+    def _track_scores(self) -> dict[str, F.Column]:
         """The qsearch_track accept predicate (spotify_elt.py:262-309)
         as columns.  Candidates without a duration never accept but DO
         count as a returned result (reference :267-273 warns + breaks
@@ -297,45 +304,18 @@ class MatchEngine:
             (track_in_title & (F.col("ost") | (artists_in_title > 0) | (artists_in_channel > 0)))
             | (diff <= self.cfg.track_max_diff_ms)
         )
-        return joined.select(
-            "log_id",
-            "user_playlist_id",
-            "priority",
-            "search_type_id",
-            "q",
-            F.col("item_uri").alias("spotify_uri"),
-            F.col("album_uri"),
-            F.col("item_title").alias("item_title"),
-            F.array_join(F.col("item_artists"), "; ").alias("item_artists_s"),
-            F.col("item_duration_ms"),
-            diff.alias("difference_ms"),
-            F.lit(1).cast("long").alias("track_match"),  # pseudo (log_track :363-364)
-            F.lit(1).cast("long").alias("total_tracks"),
-            F.lit(None).cast(_CHILD_T).alias("children"),
-            F.lit(None).cast("array<bigint>").alias("log_ids"),
-            F.lit(0).alias("pass_no"),
-            accepted.alias("accepted"),
-        )
+        return {
+            "item_duration_ms": F.col("item_duration_ms"),
+            "difference_ms": diff,
+            "track_match": F.lit(1).cast("long"),  # pseudo (log_track :363-364)
+            "total_tracks": F.lit(1).cast("long"),
+            "children": F.lit(None).cast(_CHILD_T),
+            "log_ids": F.lit(None).cast("array<bigint>"),
+            "pass_no": F.lit(0),
+            "accepted": accepted,
+        }
 
-    def _match_collections(
-        self,
-        videos: DataFrame,
-        kind: str,
-        strategies=COLLECTION_STRATEGIES,
-        grouped: bool = False,
-    ) -> DataFrame:
-        if videos.isEmpty():
-            return videos.sparkSession.createDataFrame([], self._match_schema())
-        strat = self._strategy_rows(videos, strategies)
-        cands = self.source.search(
-            strat.select("qid", "q"), kind, self.cfg.search_limit_albums
-        ).filter(F.col("result_rank") == 1)
-        scored = self._score_collections(strat.join(cands, "qid", "inner"), kind, grouped)
-        return self._pick_winner(scored, kind=kind)
-
-    def _score_collections(
-        self, joined: DataFrame, kind: str, grouped: bool = False
-    ) -> DataFrame:
+    def _collection_scores(self, kind: str, grouped: bool) -> dict[str, F.Column]:
         """qsearch_album/qsearch_playlist scoring (spotify_elt.py:
         399-516,592-690): child-track fan -> duration delta vs the
         video, title-in-description match counting, the 60%/40s accept
@@ -387,35 +367,21 @@ class MatchEngine:
                 & (pct >= self.cfg.overlap_accept_pct)
             )
         )
-        return joined.select(
-            "log_id",
-            "user_playlist_id",
-            "priority",
-            "search_type_id",
-            "q",
-            F.col("item_uri").alias("spotify_uri"),
-            F.col("album_uri"),
-            "item_title",
-            F.array_join(F.col("item_artists"), "; ").alias("item_artists_s"),
-            child_sum.alias("item_duration_ms"),
-            F.abs(diff).alias("difference_ms"),
-            track_match_cnt.cast("long").alias("track_match"),
-            total_tracks.alias("total_tracks"),
-            children.alias("children"),
-            (
-                F.col("log_ids")
-                if grouped
-                else F.lit(None).cast("array<bigint>")
-            ).alias("log_ids"),
-            F.lit(1 if grouped else 0).alias("pass_no"),
-            accepted.alias("accepted"),
-        )
+        return {
+            "item_duration_ms": child_sum,
+            "difference_ms": F.abs(diff),
+            "track_match": track_match_cnt.cast("long"),
+            "total_tracks": total_tracks,
+            "children": children,
+            "log_ids": F.col("log_ids") if grouped else F.lit(None).cast("array<bigint>"),
+            "pass_no": F.lit(1 if grouped else 0),
+            "accepted": accepted,
+        }
 
     def _pick_winner(self, scored: DataFrame, kind: str) -> DataFrame:
         """First-hit-wins + found_on_try: the winner is the lowest
         accepted priority; found_on_try counts strategies at <= that
         priority that returned a candidate (reference step_num)."""
-        w_all = Window.partitionBy("log_id")
         w_rank = Window.partitionBy("log_id").orderBy(
             F.when(F.col("accepted"), 0).otherwise(1), "priority"
         )
@@ -453,8 +419,8 @@ class MatchEngine:
         liked_albums: DataFrame | None = None,
     ) -> MatchResult:
         """Statuses, log shaping, entity tables, and side-effect sets
-        from a unioned match-row frame (compute_matches output or the
-        cache layer's hit+miss union)."""
+        from a unioned match-row frame (the cache layer's hit+miss
+        union, ``match_with_cache``)."""
         spark = matches.sparkSession
         liked_tracks = liked_tracks or spark.createDataFrame([], "uri string")
         liked_albums = liked_albums or spark.createDataFrame([], "uri string")

@@ -376,7 +376,9 @@ def split_contamination(
     ``fingerprint(text)`` over the same df) — compositions whose
     exact-dedup tier already fingerprints the corpus share ONE
     normalize+md5 pass; the split tag attaches by id equi-join
-    instead of re-deriving the fingerprint (r14, guide §2.4)."""
+    instead of re-deriving the fingerprint (r14, guide §2.4).  Every
+    doc of ``df`` needs a non-null fp there: the plan raises a Spark
+    error when it runs otherwise."""
     from musicflow_spark.operators.dedup import jaccard_pairs
     from musicflow_spark.operators.textstats import fingerprint
 
@@ -384,9 +386,12 @@ def split_contamination(
         tagged = hash_split(df.select(id_col), id_col, weights, salt=salt).select(
             F.col(id_col).alias("doc"), "split"
         )
+        # left join: a doc that fps lacks fails the plan when it runs (no
+        # extra job) instead of dropping out of the probe silently
+        missing = F.raise_error(F.lit("fps has no fingerprint for some documents of df"))
         fp = tagged.join(
-            fps.select(F.col(id_col).alias("doc"), "fp"), "doc"
-        ).select("doc", "split", "fp")
+            fps.select(F.col(id_col).alias("doc"), "fp"), "doc", "left"
+        ).select("doc", "split", F.coalesce("fp", missing).alias("fp"))
     else:
         tagged = hash_split(df, id_col, weights, salt=salt).select(
             F.col(id_col).alias("doc"), F.col(text_col).alias("__text__"), "split"

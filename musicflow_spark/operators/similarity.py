@@ -505,9 +505,10 @@ def nearest_centroid_ids_arrow(
     float→double widening of the vector elements is exact.  Ties
     break (d2, cluster_id): ``cent_rows`` is required sorted by
     cluster_id and ``np.argmin`` takes the first minimum — the same
-    lexicographic rule as the native row_number window.  Assumes
-    NaN-free vectors (the corpus contract everywhere else; the
-    native window would order NaN d² last, np.argmin would pick it).
+    lexicographic rule as the native row_number window.  Requires
+    finite vectors (no NaN, no ±inf; the corpus contract everywhere
+    else): the native window would order NaN d² last while np.argmin
+    would pick it, so a non-finite batch raises ValueError.
 
     ``cent_rows``: list of (cluster_id, centroid: list[double]) —
     dimension-bounded by the same contract that lets the native tier
@@ -542,7 +543,7 @@ def nearest_centroid_ids_arrow(
                 .astype(_np.float64, copy=False)
                 .reshape(n, dim)
             )
-            # ADVICE r13: enforce the documented NaN-free contract —
+            # enforce the documented finite-vector contract —
             # the native window orders NaN d² LAST while np.argmin
             # would pick it, so a contract violation must error, not
             # silently flip an assignment (O(n·dim) check vs the

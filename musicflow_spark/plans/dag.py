@@ -1,7 +1,9 @@
 """Thin orchestration (SURVEY §3.3, §7.7): the reference splits work
 into Airflow tasks (dags/*_dag.py) and lets dbt order models by their
-ref() DAG; here both become one dependency-ordered task runner with a
-dbt-style materialization policy.
+ref() DAG; here both become one dependency-ordered task runner,
+``Pipeline``, with a dbt-style materialization policy.  Every DAG of
+the port is a ``Pipeline``: the main ELT below and the reference's
+small DAGs in ``plans/airflow_dags.py``.
 
 - ``ephemeral``  -> stays a DataFrame, not written to the warehouse
                     (dbt's ephemeral CTE).  Most such models stay
@@ -14,9 +16,9 @@ dbt-style materialization policy.
                     (dbt marts default; the read-back truncates
                     lineage exactly where dbt materializes)
 
-Airflow itself stays optional by design: each Task.fn is a plain
-callable, so wrapping one in an @task decorator is a one-liner in a
-deployment repo.  Nothing here imports airflow.
+Airflow itself stays optional by design: ``Pipeline.run_task`` is the
+one step that runs a task and materializes its outputs, both here and
+under ``airflow_dags.to_airflow``.  Nothing here imports airflow.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ from pyspark.sql import functions as F
 @dataclass
 class Task:
     name: str
-    fn: Callable[[dict], dict[str, DataFrame]]
+    fn: Callable[[dict], dict | None]
     deps: tuple[str, ...] = ()
     #: materialization per output model name; default ephemeral
     materialize: dict[str, str] = field(default_factory=dict)
@@ -44,9 +46,10 @@ class Pipeline:
     """Dependency-ordered task execution over a shared model context.
 
     ``run`` returns the context: every model name -> DataFrame, with
-    'table' models re-read from their written parquet."""
+    'table' models re-read from their written parquet.  Outputs that
+    are not DataFrames (a token, a flag) pass through as ephemeral."""
 
-    spark: SparkSession
+    name: str
     warehouse_dir: str | None = None
     tasks: list[Task] = field(default_factory=list)
     #: per-table-model run metrics (rows written), populated by run():
@@ -58,16 +61,22 @@ class Pipeline:
         self.tasks.append(task)
         return self
 
-    def run(self, initial: dict[str, DataFrame] | None = None) -> dict[str, DataFrame]:
+    def topo_order(self) -> list[str]:
+        return list(TopologicalSorter({t.name: set(t.deps) for t in self.tasks}).static_order())
+
+    def run(self, initial: dict | None = None) -> dict:
         by_name = {t.name: t for t in self.tasks}
-        order = TopologicalSorter({t.name: set(t.deps) for t in self.tasks})
-        ctx: dict[str, DataFrame] = dict(initial or {})
-        for name in order.static_order():
-            task = by_name[name]
-            outputs = task.fn(ctx) or {}
-            for model, df in outputs.items():
-                ctx[model] = self._materialize(model, df, task.materialize.get(model, "ephemeral"))
+        ctx = dict(initial or {})
+        for name in self.topo_order():
+            ctx.update(self.run_task(by_name[name], ctx))
         return ctx
+
+    def run_task(self, task: Task, ctx: dict) -> dict:
+        """Call one task on the context and materialize its outputs."""
+        return {
+            model: self._materialize(model, df, task.materialize.get(model, "ephemeral"))
+            for model, df in (task.fn(ctx) or {}).items()
+        }
 
     def _materialize(self, model: str, df: DataFrame, how: str) -> DataFrame:
         if how == "ephemeral":
@@ -84,7 +93,7 @@ class Pipeline:
                 "overwrite"
             ).parquet(path)
             self.metrics[model] = obs.get
-            return self.spark.read.parquet(path)
+            return df.sparkSession.read.parquet(path)
         raise ValueError(f"unknown materialization {how!r} for {model}")
 
 
@@ -107,8 +116,6 @@ def musicflow_pipeline(
     (model name -> 'ephemeral' | 'view' | 'table'), the dbt
     per-model-header / dbt_project.yml:24-33 config surface; defaults
     stay the dbt-equivalent ones (marts + engine tables as 'table')."""
-    from pyspark.sql import functions as F
-
     from musicflow_spark.matching import MatchEngine, load_cache, match_with_cache, save_cache
     from musicflow_spark.plans.pipeline import build_all
     from musicflow_spark.sources import ingest
@@ -228,7 +235,7 @@ def musicflow_pipeline(
         return out
 
     return (
-        Pipeline(spark, warehouse_dir)
+        Pipeline("musicflow_elt_dag", warehouse_dir)
         .add(Task("extract", extract, materialize=mat({}, extract_models)))
         .add(
             Task(

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from musicflow_spark.config import PipelineConfig
+from musicflow_spark.matching.cache import match_with_cache
 from musicflow_spark.matching.candidates import CatalogCandidateSource
 from musicflow_spark.matching.engine import MatchEngine
 from musicflow_spark.plans.intermediate import (
@@ -548,7 +549,7 @@ def match_cascade_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     videos, catalog, liked, playlist_map = _cascade_fixture(spark, sf_dir)
     cfg = PipelineConfig(threshold_ms=None)
     engine = MatchEngine(cfg, CatalogCandidateSource(catalog))
-    result = engine.match(videos, playlist_map, liked_tracks=liked)
+    result, _ = match_with_cache(engine, videos, playlist_map, liked_tracks=liked)
     return result.log
 
 
@@ -851,7 +852,7 @@ def collection_cascade_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cfg = PipelineConfig(threshold_ms=150_000)
     engine = MatchEngine(cfg, CatalogCandidateSource(tracks, albums, playlists))
-    result = engine.match(videos, playlist_map, liked_albums=liked_albums)
+    result, _ = match_with_cache(engine, videos, playlist_map, liked_albums=liked_albums)
     return result.log
 
 
@@ -1067,8 +1068,8 @@ def others_cascade_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
         "log_id bigint, youtube_playlist_id string, video_id string, "
         "title string, author string, description string, duration_ms bigint",
     )
-    result = engine.match(
-        empty_videos, playlist_map, liked_albums=liked_albums, grouped_others=grouped
+    result, _ = match_with_cache(
+        engine, empty_videos, playlist_map, liked_albums=liked_albums, grouped_others=grouped
     )
     return result.log
 

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from musicflow_spark.config import PipelineConfig
-from musicflow_spark.matching import CatalogCandidateSource, MatchEngine
+from musicflow_spark.matching import CatalogCandidateSource, MatchEngine, match_with_cache
 from tests.fixtures import count_plan_nodes
 
 CFG = PipelineConfig()
@@ -75,7 +75,7 @@ def result(spark, source, engine_inputs):
     videos, playlist_map = engine_inputs
     engine = MatchEngine(CFG, source)
     liked = spark.createDataFrame([("spotify:track:t03",)], "uri string")
-    return engine.match(videos, playlist_map, liked_tracks=liked)
+    return match_with_cache(engine, videos, playlist_map, liked_tracks=liked)[0]
 
 
 @pytest.fixture(scope="module")
@@ -204,7 +204,7 @@ def others_grouped(spark):
 def others_result(spark, source, engine_inputs, others_grouped):
     videos, playlist_map = engine_inputs
     engine = MatchEngine(CFG, source)
-    return engine.match(videos, playlist_map, grouped_others=others_grouped)
+    return match_with_cache(engine, videos, playlist_map, grouped_others=others_grouped)[0]
 
 
 def test_others_pass_matches_whole_playlists(others_result):

@@ -1,17 +1,17 @@
-"""Airflow-adapter specs, per-model materialization overrides, and
-the auth/token retry contract — the deployment-surface layer."""
+"""The reference's DAGs as Pipelines, per-model materialization
+overrides, and the auth/token retry contract — the deployment-surface
+layer."""
 
 from __future__ import annotations
 
 import pytest
 
 from musicflow_spark.plans.airflow_dags import (
-    DagSpec,
-    pipeline_dag_spec,
     setup_dag_spec,
     unlike_dag_spec,
     ytmusicapi_dag_spec,
 )
+from musicflow_spark.plans.dag import Pipeline, Task
 from musicflow_spark.sources.auth import (
     AuthError,
     TokenProvider,
@@ -20,7 +20,7 @@ from musicflow_spark.sources.auth import (
 )
 
 
-# ------------------------------------------------------------ dag specs
+# ------------------------------------------------------------- dags
 def test_ytmusicapi_dag_topology_and_handoff():
     seen = []
 
@@ -64,7 +64,7 @@ def test_setup_and_unlike_dag_shapes():
     assert order == ["auth", "populate", "unlike"]
 
 
-def test_pipeline_dag_spec_matches_pipeline_topology(spark, musicflow_sources, tmp_path):
+def test_musicflow_pipeline_topology(spark, musicflow_sources, tmp_path):
     from musicflow_spark.config import PipelineConfig
     from musicflow_spark.matching import CatalogCandidateSource
     from musicflow_spark.plans.dag import musicflow_pipeline
@@ -80,22 +80,69 @@ def test_pipeline_dag_spec_matches_pipeline_topology(spark, musicflow_sources, t
         ),
         str(tmp_path / "wh"),
     )
-    spec = pipeline_dag_spec(pipe)
-    # identical task graph, task for task
-    from graphlib import TopologicalSorter
+    # the Airflow task boundaries: youtube extract / spotify match / dbt run
+    assert pipe.topo_order() == ["extract", "match", "models"]
+    assert {t.name: t.deps for t in pipe.tasks} == {
+        "extract": (), "match": ("extract",), "models": ("match",),
+    }
 
-    want = list(TopologicalSorter({t.name: set(t.deps) for t in pipe.tasks}).static_order())
-    assert spec.topo_order() == want == ["extract", "match", "models"]
 
-
-def test_dagspec_rejects_cycles():
-    spec = DagSpec("bad").add("a", lambda c: None, deps=("b",)).add(
-        "b", lambda c: None, deps=("a",)
+def test_pipeline_rejects_cycles():
+    pipe = Pipeline("bad").add(Task("a", lambda c: None, deps=("b",))).add(
+        Task("b", lambda c: None, deps=("a",))
     )
     import graphlib
 
     with pytest.raises(graphlib.CycleError):
-        spec.topo_order()
+        pipe.topo_order()
+    with pytest.raises(graphlib.CycleError):
+        pipe.run()
+
+
+def test_to_airflow_runs_tasks_through_run_task(spark, tmp_path, monkeypatch):
+    """With a stand-in for ``airflow.decorators`` whose tasks run when
+    wired, the converted DAG runs in dependency order, hands outputs
+    downstream as XCom returns, and materializes them as
+    ``Pipeline.run`` does."""
+    import os
+    import sys
+    import types
+
+    from musicflow_spark.plans.airflow_dags import to_airflow
+
+    ran = []
+
+    def dag(dag_id, **kwargs):
+        def wrap(fn):
+            return lambda: (fn(), dag_id)[1]
+
+        return wrap
+
+    def task(task_id):
+        def wrap(fn):
+            def call(*upstream):
+                ran.append(task_id)
+                return fn(*upstream)
+
+            return call
+
+        return wrap
+
+    decorators = types.ModuleType("airflow.decorators")
+    decorators.dag, decorators.task = dag, task
+    monkeypatch.setitem(sys.modules, "airflow", types.ModuleType("airflow"))
+    monkeypatch.setitem(sys.modules, "airflow.decorators", decorators)
+
+    wh = str(tmp_path / "wh")
+    pipe = (
+        Pipeline("handoff", wh)
+        .add(Task("use", lambda ctx: {"n": ctx["m"].count()}, deps=("build",)))
+        .add(Task("build", lambda ctx: {"m": spark.range(5)}, materialize={"m": "table"}))
+    )
+    assert to_airflow(pipe) == "handoff"
+    assert ran == ["build", "use"]
+    assert os.path.isdir(os.path.join(wh, "m"))
+    assert pipe.metrics["m"]["rows"] == 5
 
 
 # ------------------------------------- per-model materialization config
@@ -193,45 +240,15 @@ def test_auth_retry_bounded_backoff_on_429():
     assert sleeps == [1.0, 2.0, 4.0]  # exponential, then give up
 
 
-@pytest.mark.slow
-def test_pipeline_dag_spec_executes_end_to_end(spark, musicflow_sources, tmp_path):
-    """Running the DAG-spec form must produce the same warehouse as
-    Pipeline.run — the adapter executes, not just topo-sorts."""
-    import os
-
-    from musicflow_spark.config import PipelineConfig
-    from musicflow_spark.matching import CatalogCandidateSource
-    from musicflow_spark.plans.dag import musicflow_pipeline
-
-    wh = str(tmp_path / "wh_spec")
-    pipe = musicflow_pipeline(
-        spark,
-        musicflow_sources,
-        PipelineConfig(),
-        CatalogCandidateSource(
-            musicflow_sources["spotify_tracks"],
-            musicflow_sources["spotify_albums"],
-            musicflow_sources["spotify_playlists_others"],
-        ),
-        wh,
-    )
-    ctx = pipeline_dag_spec(pipe).run()
-    assert os.path.isdir(os.path.join(wh, "log_for_tableau"))
-    assert ctx["spotify_log"].count() > 0
-    total = ctx["src__youtube_library"].count()
-    assert total == ctx["int_join_spotify_uris"].count() + ctx["log_not_found_videos"].count()
-
-
 def test_table_materialization_observes_row_metrics(spark, tmp_path):
     """Table-materialized models must report their written row count
     through Pipeline.metrics — collected via df.observe ON the write
     action, so no second scan happens."""
-    from musicflow_spark.plans.dag import Pipeline, Task
 
     def make(ctx):
         return {"m": spark.range(37).withColumnRenamed("id", "k")}
 
-    pipe = Pipeline(spark, warehouse_dir=str(tmp_path)).add(
+    pipe = Pipeline("metrics", warehouse_dir=str(tmp_path)).add(
         Task("build", make, materialize={"m": "table"})
     )
     ctx = pipe.run()

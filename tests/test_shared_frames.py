@@ -5,6 +5,8 @@ pass and one fingerprint pass through its whole front end)."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from musicflow_spark.operators.textstats import fingerprint, tokens
@@ -81,3 +83,15 @@ def test_split_contamination_fps_row_identical(spark):
         )
     )
     assert inline == shared
+
+
+def test_split_contamination_rejects_fps_missing_a_doc(spark):
+    """A doc that ``fps`` lacks must fail the probe loudly, not drop
+    out of it (an inner join on the id would lose it silently)."""
+    from musicflow_spark.operators.sampling import split_contamination
+
+    docs = _docs(spark)
+    fps = docs.filter(F.col("doc_id") != 2).select("doc_id", fingerprint("text").alias("fp"))
+    probe = split_contamination(docs, "doc_id", "text", {"train": 0.5, "val": 0.5}, fps=fps)
+    with pytest.raises(PySparkException, match="fps has no fingerprint"):
+        probe.collect()
