@@ -26,14 +26,13 @@ files, and ``save_cache`` finishes writing it before it removes them.
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from musicflow_spark.matching.engine import MatchEngine, MatchResult
+from musicflow_spark.sources.catalog import existing_table, replace_table
 
 #: the per-video payload serialized into cache JSON — everything in a
 #: match row except the per-library-row keys (log_id,
@@ -63,33 +62,17 @@ def empty_cache(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], CACHE_SCHEMA)
 
 
-def _tmp_path(path: str) -> str:
-    return f"{path}.__tmp__"
-
-
 def load_cache(spark: SparkSession, path: str) -> DataFrame:
     """Parquet-backed cache; missing path = cold cache (first run).
-
-    A flush that crashed after removing the old cache but before
-    renaming the new one into place leaves a finished copy under the
-    tmp path (its ``_SUCCESS`` marker shows the write completed); that
-    copy is moved into place here instead of starting cold."""
-    tmp = _tmp_path(path)
-    if not os.path.exists(path) and os.path.exists(os.path.join(tmp, "_SUCCESS")):
-        os.rename(tmp, path)
-    if not os.path.exists(path):
-        return empty_cache(spark)
-    return spark.read.parquet(path)
+    A flush that crashed mid-replace is finished by ``existing_table``."""
+    cache = existing_table(spark, path)
+    return empty_cache(spark) if cache is None else cache
 
 
 def save_cache(cache: DataFrame, path: str) -> None:
     """The reference flushes Redis at run end (spotify_elt.py:1210);
-    here the flush is one parquet overwrite of the merged cache."""
-    tmp = _tmp_path(path)
-    cache.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(tmp, path)
+    here the flush is one ``replace_table`` of the merged cache."""
+    replace_table(cache, path)
 
 
 def cache_entries(searched: DataFrame) -> DataFrame:

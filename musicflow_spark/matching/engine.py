@@ -43,6 +43,18 @@ from musicflow_spark.config import PipelineConfig
 from musicflow_spark.functions.strings import is_ost, strip_topic_suffix, with_fixed_title
 from musicflow_spark.matching.candidates import CandidateSource
 
+#: track accept: |duration delta| <= this (spotify_elt.py:290)
+TRACK_MAX_DIFF_MS = 5_000
+#: album/playlist accept: |duration delta| < this (spotify_elt.py:400,593)
+ALBUM_MAX_DIFF_MS = 40_000
+#: album/playlist accept: >= this percentage of titles matched, only
+#: when total_tracks >= OVERLAP_MIN_TRACKS (spotify_elt.py:461,662)
+OVERLAP_ACCEPT_PCT = 60.0
+OVERLAP_MIN_TRACKS = 4
+#: search API page/batch limits (spotify_elt.py:221,376,418,611,927)
+SEARCH_LIMIT_TRACKS = 50
+SEARCH_LIMIT_ALBUMS = 10
+
 TRACK_STRATEGIES = [
     # (priority, search_type_id, q template, only_if_fixed_differs)
     # reference: find_track, spotify_elt.py:219-243
@@ -166,9 +178,8 @@ class MatchEngine:
             track_videos = prepared.filter(F.col("duration_ms") < th)
             coll_videos = prepared.filter(F.col("duration_ms") >= th)
 
-        limit = self.cfg.search_limit_tracks
         track_matches = self._match_kind(
-            track_videos, "track", TRACK_STRATEGIES, limit, self._track_scores()
+            track_videos, "track", TRACK_STRATEGIES, SEARCH_LIMIT_TRACKS, self._track_scores()
         ).localCheckpoint(eager=True)
         return track_matches.unionByName(
             self._albums_then_playlists(coll_videos, COLLECTION_STRATEGIES)
@@ -213,9 +224,8 @@ class MatchEngine:
             if frame.isEmpty():
                 out = frame.sparkSession.createDataFrame([], self._match_schema())
             else:
-                limit = self.cfg.search_limit_albums
                 scores = self._collection_scores(kind, grouped)
-                out = self._match_kind(frame, kind, strategies, limit, scores)
+                out = self._match_kind(frame, kind, strategies, SEARCH_LIMIT_ALBUMS, scores)
             return out.localCheckpoint(eager=True)
 
         albums = winners(videos, "album")
@@ -302,7 +312,7 @@ class MatchEngine:
         )
         accepted = has_duration & (
             (track_in_title & (F.col("ost") | (artists_in_title > 0) | (artists_in_channel > 0)))
-            | (diff <= self.cfg.track_max_diff_ms)
+            | (diff <= TRACK_MAX_DIFF_MS)
         )
         return {
             "item_duration_ms": F.col("item_duration_ms"),
@@ -361,11 +371,8 @@ class MatchEngine:
         )
         accepted = (
             title_artist_clause
-            | (F.abs(diff) < self.cfg.album_max_diff_ms)
-            | (
-                (total_tracks >= self.cfg.overlap_min_tracks)
-                & (pct >= self.cfg.overlap_accept_pct)
-            )
+            | (F.abs(diff) < ALBUM_MAX_DIFF_MS)
+            | ((total_tracks >= OVERLAP_MIN_TRACKS) & (pct >= OVERLAP_ACCEPT_PCT))
         )
         return {
             "item_duration_ms": child_sum,

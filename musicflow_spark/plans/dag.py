@@ -1,9 +1,10 @@
 """Thin orchestration (SURVEY §3.3, §7.7): the reference splits work
 into Airflow tasks (dags/*_dag.py) and lets dbt order models by their
 ref() DAG; here both become one dependency-ordered task runner,
-``Pipeline``, with a dbt-style materialization policy.  Every DAG of
-the port is a ``Pipeline``: the main ELT below and the reference's
-small DAGs in ``plans/airflow_dags.py``.
+``Pipeline``.  Every DAG of the port is a ``Pipeline``: the main ELT
+below and the reference's small DAGs in ``plans/airflow_dags.py``.
+
+A task output is one of two things:
 
 - ``ephemeral``  -> stays a DataFrame, not written to the warehouse
                     (dbt's ephemeral CTE).  Most such models stay
@@ -11,10 +12,11 @@ small DAGs in ``plans/airflow_dags.py``.
                     intermediates, which several models read, sit on
                     ``build_all``'s lazy checkpoint, so their joins run
                     once per build however many models read them
-- ``view``       -> createOrReplaceTempView (dbt staging default)
-- ``table``      -> written parquet to the warehouse dir and re-read
+- ``table``      -> replaces its warehouse table through
+                    ``sources/catalog.py::replace_table`` and is re-read
                     (dbt marts default; the read-back truncates
-                    lineage exactly where dbt materializes)
+                    lineage exactly where dbt materializes).  A failed
+                    write leaves the previous table readable
 
 Airflow itself stays optional by design: ``Pipeline.run_task`` is the
 one step that runs a task and materializes its outputs, both here and
@@ -30,6 +32,8 @@ from graphlib import TopologicalSorter
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from musicflow_spark.sources.catalog import replace_table
 
 
 @dataclass
@@ -81,20 +85,15 @@ class Pipeline:
     def _materialize(self, model: str, df: DataFrame, how: str) -> DataFrame:
         if how == "ephemeral":
             return df
-        if how == "view":
-            df.createOrReplaceTempView(model)
-            return df
-        if how == "table":
-            if not self.warehouse_dir:
-                raise ValueError(f"table materialization for {model} needs warehouse_dir")
-            path = os.path.join(self.warehouse_dir, model)
-            obs = Observation()
-            df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                "overwrite"
-            ).parquet(path)
-            self.metrics[model] = obs.get
-            return df.sparkSession.read.parquet(path)
-        raise ValueError(f"unknown materialization {how!r} for {model}")
+        if how != "table":
+            raise ValueError(f"unknown materialization {how!r} for {model}")
+        if not self.warehouse_dir:
+            raise ValueError(f"table materialization for {model} needs warehouse_dir")
+        path = os.path.join(self.warehouse_dir, model)
+        obs = Observation()
+        replace_table(df.observe(obs, F.count(F.lit(1)).alias("rows")), path)
+        self.metrics[model] = obs.get
+        return df.sparkSession.read.parquet(path)
 
 
 def musicflow_pipeline(
@@ -104,7 +103,6 @@ def musicflow_pipeline(
     candidate_source,
     warehouse_dir: str,
     cache_path: str | None = None,
-    materializations: dict[str, str] | None = None,
 ) -> Pipeline:
     """The full reference flow as one Pipeline: extract-normalize ->
     match (cache-aware) -> load entity tables -> staged models ->
@@ -112,18 +110,16 @@ def musicflow_pipeline(
     (youtube extract / spotify match / dbt run) without importing
     Airflow.
 
-    ``materializations`` overrides the per-model choice
-    (model name -> 'ephemeral' | 'view' | 'table'), the dbt
-    per-model-header / dbt_project.yml:24-33 config surface; defaults
-    stay the dbt-equivalent ones (marts + engine tables as 'table')."""
+    As in dbt_project.yml:24-33, the engine tables and the marts are
+    tables and every other model is ephemeral."""
     from musicflow_spark.matching import MatchEngine, load_cache, match_with_cache, save_cache
-    from musicflow_spark.plans.pipeline import build_all
+    from musicflow_spark.plans.pipeline import MARTS, build_all
     from musicflow_spark.sources import ingest
 
     def extract(ctx: dict) -> dict[str, DataFrame]:
-        playlists = ingest.filter_visible_playlists(sources["youtube_playlists"], cfg)
+        playlists = ingest.filter_visible_playlists(sources["youtube_playlists"])
         videos = ingest.dedup_by_key(
-            ingest.filter_available_videos(sources["youtube_videos"], cfg), "video_id"
+            ingest.filter_available_videos(sources["youtube_videos"]), "video_id"
         )
         return {
             "src__youtube_playlists": playlists,
@@ -222,44 +218,17 @@ def musicflow_pipeline(
         }
         return build_all(model_sources, cfg)
 
-    marts = ("log_found_videos", "log_not_found_videos", "log_for_tableau")
-    overrides = dict(materializations or {})
-    extract_models = ("src__youtube_playlists", "src__youtube_videos", "src__youtube_library")
     match_models = ("spotify_log", "spotify_tracks", "spotify_albums", "spotify_playlists_others")
-
-    def mat(defaults: dict[str, str], owned: tuple[str, ...]) -> dict[str, str]:
-        # per-model override wins over the task default; overrides may
-        # also promote this task's ephemeral-by-default models
-        out = dict(defaults)
-        out.update({m: how for m, how in overrides.items() if m in owned})
-        return out
-
     return (
         Pipeline("musicflow_elt_dag", warehouse_dir)
-        .add(Task("extract", extract, materialize=mat({}, extract_models)))
+        .add(Task("extract", extract))
         .add(
             Task(
                 "match",
                 match,
                 deps=("extract",),
-                materialize=mat({m: "table" for m in match_models}, match_models),
+                materialize={m: "table" for m in match_models},
             )
         )
-        .add(
-            Task(
-                "models",
-                models,
-                deps=("match",),
-                # every dbt-layer model is produced by this task, so
-                # any override key that is not an extract/match output
-                # belongs here (staging views, intermediates, marts)
-                materialize=mat(
-                    {m: "table" for m in marts},
-                    tuple(
-                        m for m in overrides
-                        if m not in extract_models and m not in match_models
-                    ),
-                ),
-            )
-        )
+        .add(Task("models", models, deps=("match",), materialize={m: "table" for m in MARTS}))
     )

@@ -1,8 +1,7 @@
 """The dbt DAG as plain call order (SURVEY §3.3): sources -> staging
 -> intermediates -> marts -> analyses.  Returns every model keyed by
-its reference name; callers persist ('table') or register views
-('view') as they choose — materialization is a deployment decision,
-not a model property."""
+its reference name; callers persist the ones they choose as tables —
+materialization is a deployment decision, not a model property."""
 
 from __future__ import annotations
 
@@ -11,6 +10,9 @@ from pyspark.sql import DataFrame
 from musicflow_spark.config import PipelineConfig
 from musicflow_spark.plans import analyses, intermediate, marts
 from musicflow_spark.plans.staging import stage
+
+#: the three marts, the models every build writes to the warehouse
+MARTS = ("log_found_videos", "log_not_found_videos", "log_for_tableau")
 
 
 def build_all(

@@ -2,12 +2,15 @@
 
 The reference stores every table in BigQuery datasets and routes them
 with a dbt macro (reference: dbt/macros/generate_schema_name.sql:1-14).
-Here a catalog is a directory of parquet files; tables register as temp
-views so both the DataFrame API and ``spark.sql`` see one namespace.
+Here a catalog is a directory of parquet files.  Every table the
+program rewrites whole is replaced through :func:`replace_table` and
+read, where a replace may have been interrupted, through
+:func:`existing_table`.
 
 Scale note: reads are plain ``spark.read.parquet`` so Catalyst keeps
-predicate pushdown / column pruning / partition pruning; writers go
-through :func:`write_table` which exposes ``partition_by`` and
+predicate pushdown / column pruning / partition pruning; the
+partitioned writers (:func:`write_table`,
+:func:`overwrite_touched_partitions`) expose ``partition_by`` and
 ``bucket_by`` hooks for the 100 TB layout without changing call sites.
 """
 
@@ -57,16 +60,36 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Register every catalog table as a temp view; returns the frames."""
-    out: dict[str, DataFrame] = {}
-    for name in tables:
-        df = read_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
+def replace_table(df: DataFrame, path: str) -> None:
+    """Replace the parquet table at ``path`` with ``df``: the reference's
+    WRITE_TRUNCATE load (youtube_elt.py:336-362) for a directory table.
+
+    ``df`` is written whole to the sibling ``<path>.__tmp__`` first, so
+    it may read the table it replaces, and a failed write leaves the
+    old table readable.  Then the old table is removed and the copy
+    renamed into place.  Those two steps are not atomic: a crash
+    between them leaves only the finished copy, which the next
+    :func:`existing_table` moves into place."""
+    tmp = f"{path}.__tmp__"
+    df.write.mode("overwrite").parquet(tmp)
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.rename(tmp, path)
+
+
+def existing_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """The table at ``path``, or ``None`` when there is none.
+
+    If ``path`` is missing but a :func:`replace_table` copy finished
+    (its ``_SUCCESS`` marker shows the write completed), that copy is
+    moved into place first.  A copy without the marker is an
+    unfinished write and stays where it is."""
+    tmp = f"{path}.__tmp__"
+    if not os.path.exists(path) and os.path.exists(os.path.join(tmp, "_SUCCESS")):
+        os.rename(tmp, path)
+    if not os.path.exists(path):
+        return None
+    return spark.read.parquet(path)
 
 
 def write_table(
@@ -164,11 +187,11 @@ def compact_table(
 
     File count derives from the ON-DISK byte size (sum of part files,
     so compression is accounted for), the rewrite is a coalesce (no
-    shuffle — merges whole files), and the swap is the same tmp-dir
-    rename the streaming sinks use.  ``sort_within_by`` optionally
-    sorts WITHIN output files (sortWithinPartitions — still no global
-    shuffle) so min/max row-group stats become selective for those
-    columns.  Returns the output file count."""
+    shuffle — merges whole files), and the swap is :func:`replace_table`.
+    ``sort_within_by`` optionally sorts WITHIN output files
+    (sortWithinPartitions — still no global shuffle) so min/max
+    row-group stats become selective for those columns.  Returns the
+    output file count."""
     size = sum(
         os.path.getsize(os.path.join(root, f))
         for root, _, files in os.walk(path)
@@ -179,8 +202,5 @@ def compact_table(
     df = spark.read.parquet(path).coalesce(n_files)
     if sort_within_by:
         df = df.sortWithinPartitions(*sort_within_by)
-    tmp = f"{path}.__compact__"
-    df.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
+    replace_table(df, path)
     return n_files

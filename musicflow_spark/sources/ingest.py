@@ -8,8 +8,8 @@ Reference behaviors reproduced:
 - drop rows with null video id  (ytmusicapi_elt.py:97,125, P6)
 - synthesize the 'LM' Liked-Music pseudo-playlist row and union it
   (youtube_elt.py:291-302, U2)
-- dedup by natural key, last-write-wins replaced by deterministic
-  lowest-id-wins (dict upsert at youtube_elt.py:211,243, A7)
+- dedup by natural key, keeping an arbitrary row of each key where the
+  reference's dict upsert keeps the last (youtube_elt.py:211,243, A7)
 - zero-duration / null-type repair (ytmusicapi_elt.py:282-289, P8)
 """
 
@@ -18,18 +18,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from musicflow_spark.config import PipelineConfig
+#: titles excluded from the library (youtube_elt.py:210)
+DELETED_TITLES = ("Deleted video", "Private video")
+#: playlist-title substring exclusion (youtube_elt.py:115)
+EXCLUDED_PLAYLIST_MARKER = "\U0001f4bc"  # 💼
 
 
-def filter_available_videos(videos: DataFrame, cfg: PipelineConfig) -> DataFrame:
+def filter_available_videos(videos: DataFrame) -> DataFrame:
     """P4: remove rows whose title marks an unavailable video."""
-    return videos.filter(~F.col("title").isin(*cfg.deleted_titles))
+    return videos.filter(~F.col("title").isin(*DELETED_TITLES))
 
 
-def filter_visible_playlists(playlists: DataFrame, cfg: PipelineConfig) -> DataFrame:
+def filter_visible_playlists(playlists: DataFrame) -> DataFrame:
     """P5: remove playlists whose title carries the exclusion marker
     (substring containment, as in the reference)."""
-    return playlists.filter(~F.col("title").contains(cfg.excluded_playlist_marker))
+    return playlists.filter(~F.col("title").contains(EXCLUDED_PLAYLIST_MARKER))
 
 
 def filter_valid_tracks(tracks: DataFrame, id_col: str = "video_id") -> DataFrame:

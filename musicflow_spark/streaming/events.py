@@ -24,13 +24,13 @@ batch twin.
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from musicflow_spark.sources.catalog import existing_table, overwrite_touched_partitions, replace_table
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -223,27 +223,24 @@ def foreach_batch_upsert(path: str, keys: list[str]):
     parquet table by key (delete-matching + insert): the streaming
     upsert the reference approximates with WRITE_TRUNCATE reloads.
 
-    Parquet has no transactional MERGE, so the merge writes to a
-    sibling tmp dir and atomically swaps — on a lakehouse table format
-    (Delta/Iceberg) this function body becomes a single MERGE INTO.
+    Parquet has no transactional MERGE, so the merged table is swapped
+    in through ``replace_table``, and the next batch's
+    ``existing_table`` finishes a swap that was interrupted — on a
+    lakehouse table format (Delta/Iceberg) this function body becomes
+    a single MERGE INTO.
     Batches arriving for the same key overwrite (last write wins),
     which with update-mode aggregations converges to the exact final
     aggregate per key.
     """
 
     def sink(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
         batch = batch.localCheckpoint(eager=True)  # freeze before the swap
-        if os.path.exists(path):
-            existing = spark.read.parquet(path)
+        existing = existing_table(batch.sparkSession, path)
+        if existing is not None:
             merged = existing.join(batch.select(*keys), keys, "left_anti").unionByName(batch)
         else:
             merged = batch
-        tmp = f"{path}.__tmp__"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
+        replace_table(merged, path)
 
     return sink
 
@@ -259,15 +256,14 @@ def foreach_batch_rollup_merge(path: str, keys: list[str]):
     state, so the operator restarts from disk for free.
 
     Expects batches already shaped (keys..., measure columns); every
-    non-key column must be sum-mergeable.  Same tmp-dir atomic swap as
-    foreach_batch_upsert; on Delta/Iceberg this becomes MERGE INTO
+    non-key column must be sum-mergeable.  Same ``replace_table`` swap
+    as foreach_batch_upsert; on Delta/Iceberg this becomes MERGE INTO
     with ``+=`` set clauses."""
     from musicflow_spark.operators.scd import merge_partial_rollups
 
     metrics: list[dict] = []
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         # dbt-style per-batch row accounting, observed on the merge
         # action itself (no extra scan) — mirrors Pipeline.metrics
         obs = Observation()
@@ -277,15 +273,12 @@ def foreach_batch_rollup_merge(path: str, keys: list[str]):
             *[F.sum(c).alias(c) for c in val_cols]
         )
         parts = [partial]
-        if os.path.exists(path):
-            parts.append(spark.read.parquet(path))
+        existing = existing_table(batch.sparkSession, path)
+        if existing is not None:
+            parts.append(existing)
         merged = merge_partial_rollups(parts, keys).localCheckpoint(eager=True)
         metrics.append({"batch_id": batch_id, **obs.get})
-        tmp = f"{path}.__tmp__"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
+        replace_table(merged, path)
 
     sink.metrics = metrics
     return sink
@@ -307,7 +300,7 @@ def foreach_batch_sketch_merge(
     same output column -> aggregate Column over PARTIAL rows that
     unions already-built sketches (e.g. ``F.hll_union_agg(col)``).
     Each micro-batch builds per-key partials, unions them with the
-    materialized table, and atomically swaps — correct for
+    materialized table, and swaps through ``replace_table`` — correct for
     append-mode streams because sketch union is associative and
     commutative, so any arrival chunking yields a valid sketch of
     ALL arrivals (HLL register-max and theta min-hash unions are
@@ -321,24 +314,17 @@ def foreach_batch_sketch_merge(
     restart reads them from the table, and a year of quantile /
     distinct / set-overlap questions re-merges kilobyte partials
     instead of rescanning events."""
-    import shutil as _shutil
 
     def sink(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
         partial = batch.groupBy(*keys).agg(
             *[a.alias(c) for c, a in build_aggs.items()]
         )
-        if os.path.exists(path):
-            prev = spark.read.parquet(path)
+        prev = existing_table(batch.sparkSession, path)
+        if prev is not None:
             partial = partial.unionByName(prev).groupBy(*keys).agg(
                 *[a.alias(c) for c, a in merge_aggs.items()]
             )
-        merged = partial.localCheckpoint(eager=True)
-        tmp = f"{path}.__tmp__"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            _shutil.rmtree(path)
-        os.rename(tmp, path)
+        replace_table(partial.localCheckpoint(eager=True), path)
 
     return sink
 
@@ -353,8 +339,10 @@ def foreach_batch_merge_into(
     """The streaming tier of operators/mergeinto.py: each micro-batch
     is a CDC-style updates frame merged into the materialized table
     with full MERGE semantics — matched-update, matched-delete,
-    not-matched-insert, carry — then atomically swapped (on a
-    lakehouse format this body becomes a transactional MERGE INTO).
+    not-matched-insert, carry — then swapped in through
+    ``replace_table``, whose interrupted swap the next batch's
+    ``existing_table`` finishes (on a lakehouse format this body
+    becomes a transactional MERGE INTO).
 
     First batch bootstraps the table as pure inserts.  Convergence
     contract: if per-key updates arrive in source order within a batch
@@ -370,10 +358,9 @@ def foreach_batch_merge_into(
     from musicflow_spark.operators.mergeinto import merge_into
 
     def sink(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
         batch = batch.localCheckpoint(eager=True)
-        if os.path.exists(path):
-            base = spark.read.parquet(path)
+        base = existing_table(batch.sparkSession, path)
+        if base is not None:
             merged = merge_into(
                 base, batch, on=on,
                 update_set=update_set, delete_when=delete_when,
@@ -387,12 +374,7 @@ def foreach_batch_merge_into(
                 for name, c in (insert_set or {}).items()
             ]
             merged = batch.select(*cols)
-        merged = merged.localCheckpoint(eager=True)
-        tmp = f"{path}.__tmp__"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
+        replace_table(merged.localCheckpoint(eager=True), path)
 
     return sink
 
@@ -475,8 +457,6 @@ def foreach_batch_partitioned_delete(
 
     At 100 TB each micro-batch costs O(batch lookup + touched
     partitions), never an index rewrite."""
-    from musicflow_spark.sources.catalog import overwrite_touched_partitions
-
     part_cols = (
         [partition_col] if isinstance(partition_col, str) else list(partition_col)
     )
@@ -524,8 +504,10 @@ def foreach_batch_scd2(
     micro-batch is one dimension-refresh batch folded into the
     materialized Type-2 history with the check-strategy rules
     (changed -> close+reopen, unchanged -> no version, new -> insert,
-    absent -> untouched), then atomically swapped — the
-    foreach_batch_merge_into pattern with history semantics.  The
+    absent -> untouched), then swapped in through ``replace_table`` —
+    the foreach_batch_merge_into pattern with history semantics.  The
+    history must exist (seed it with ``scd2_init``); the next batch's
+    ``existing_table`` finishes an interrupted swap.  The
     batch's ``tick_col`` column (constant per batch by construction —
     one refresh file per trigger) becomes the merge's batch_id, so
     version stamps are source-defined rather than epoch-defined and
@@ -538,7 +520,6 @@ def foreach_batch_scd2(
     from musicflow_spark.operators.scd import scd2_merge
 
     def sink(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
         batch = batch.localCheckpoint(eager=True)
         # bounded 1-row collect: the batch's constant refresh tick.
         # A batch spanning TWO ticks (e.g. a restart re-batching
@@ -556,7 +537,9 @@ def foreach_batch_scd2(
                 f"micro-batch spans refresh ticks {r['lo']}..{tick}; "
                 "one refresh file per trigger is the sink's contract"
             )
-        history = spark.read.parquet(path)
+        history = existing_table(batch.sparkSession, path)
+        if history is None:
+            raise FileNotFoundError(f"no SCD-2 history at {path}; seed it with scd2_init")
         merged = scd2_merge(
             history,
             batch.drop(tick_col),
@@ -564,9 +547,6 @@ def foreach_batch_scd2(
             tracked,
             batch_id=int(tick),
         ).localCheckpoint(eager=True)
-        tmp = f"{path}.__tmp__"
-        merged.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(path)
-        os.rename(tmp, path)
+        replace_table(merged, path)
 
     return sink

@@ -9,7 +9,7 @@ Per micro-batch:
    (foreach_batch_upsert — last write per key wins, so replays and
    restarts are idempotent);
 2. the downstream models rebuild from the updated warehouse and
-   overwrite the mart tables.
+   replace the mart tables (``replace_table``).
 
 The per-batch mart rebuild is a deliberate correctness-first
 strategy: every mart involves cross-row state (dedup windows, unions,
@@ -27,11 +27,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from musicflow_spark.config import PipelineConfig
-from musicflow_spark.plans.pipeline import build_all
+from musicflow_spark.plans.pipeline import MARTS, build_all
 from musicflow_spark.schemas import MUSICFLOW_SCHEMAS
+from musicflow_spark.sources.catalog import replace_table
 from musicflow_spark.streaming.events import foreach_batch_upsert
-
-MARTS = ("log_found_videos", "log_not_found_videos", "log_for_tableau")
 
 
 def stream_log_to_marts(
@@ -62,9 +61,7 @@ def stream_log_to_marts(
         srcs["spotify_log"] = batch.sparkSession.read.parquet(log_path)
         models = build_all(srcs, cfg)
         for mart in MARTS:
-            models[mart].write.mode("overwrite").parquet(
-                os.path.join(warehouse_dir, mart)
-            )
+            replace_table(models[mart], os.path.join(warehouse_dir, mart))
 
     return (
         stream.writeStream.foreachBatch(process)

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from musicflow_spark.config import PipelineConfig
 from musicflow_spark.sources.ingest import (
     dedup_by_key,
     filter_available_videos,
@@ -14,15 +13,13 @@ from musicflow_spark.sources.ingest import (
     with_lm_row,
 )
 
-CFG = PipelineConfig()
-
 
 def test_unavailable_videos_dropped(spark):
     df = spark.createDataFrame(
         [("v1", "Real Song"), ("v2", "Deleted video"), ("v3", "Private video")],
         "video_id string, title string",
     )
-    got = {r["video_id"] for r in filter_available_videos(df, CFG).collect()}
+    got = {r["video_id"] for r in filter_available_videos(df).collect()}
     assert got == {"v1"}
 
 
@@ -30,7 +27,7 @@ def test_briefcase_playlists_dropped(spark):
     df = spark.createDataFrame(
         [("p1", "Work 💼 stuff"), ("p2", "Music")], "id string, title string"
     )
-    got = {r["id"] for r in filter_visible_playlists(df, CFG).collect()}
+    got = {r["id"] for r in filter_visible_playlists(df).collect()}
     assert got == {"p2"}
 
 

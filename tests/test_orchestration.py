@@ -145,39 +145,6 @@ def test_to_airflow_runs_tasks_through_run_task(spark, tmp_path, monkeypatch):
     assert pipe.metrics["m"]["rows"] == 5
 
 
-# ------------------------------------- per-model materialization config
-def test_materialization_overrides(spark, musicflow_sources, tmp_path):
-    import os
-
-    from musicflow_spark.config import PipelineConfig
-    from musicflow_spark.matching import CatalogCandidateSource
-    from musicflow_spark.plans.dag import musicflow_pipeline
-
-    wh = str(tmp_path / "wh")
-    pipe = musicflow_pipeline(
-        spark,
-        musicflow_sources,
-        PipelineConfig(),
-        CatalogCandidateSource(
-            musicflow_sources["spotify_tracks"],
-            musicflow_sources["spotify_albums"],
-            musicflow_sources["spotify_playlists_others"],
-        ),
-        wh,
-        materializations={
-            # demote a mart to view, promote an intermediate to table
-            "log_for_tableau": "view",
-            "int_join_spotify_uris": "table",
-        },
-    )
-    ctx = pipe.run()
-    assert os.path.isdir(os.path.join(wh, "int_join_spotify_uris"))
-    assert not os.path.isdir(os.path.join(wh, "log_for_tableau"))
-    # demoted mart still queryable as a temp view, row-identical
-    via_view = spark.table("log_for_tableau").count()
-    assert via_view == ctx["log_for_tableau"].count()
-
-
 # ------------------------------------------------- auth/retry contract
 def test_token_provider_refreshes_on_expiry_fake_clock():
     now = [0.0]

@@ -154,6 +154,34 @@ def test_bucketed_join_runs_shuffle_free(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
+def test_replace_table_recovers_only_a_finished_copy(spark, tmp_path):
+    """``existing_table`` reads a table, finishes a replace that crashed
+    between removing the table and renaming its finished copy, and
+    leaves an unfinished copy (no ``_SUCCESS``) where it is."""
+    import os
+    import shutil
+
+    from musicflow_spark.sources.catalog import existing_table, replace_table
+
+    path = str(tmp_path / "t")
+    tmp = f"{path}.__tmp__"
+    assert existing_table(spark, path) is None
+    replace_table(spark.range(3), path)
+    replace_table(spark.range(5), path)
+    assert sorted(r.id for r in existing_table(spark, path).collect()) == list(range(5))
+    assert not os.path.exists(tmp)
+
+    os.rename(path, tmp)  # the state such a crash leaves
+    assert sorted(r.id for r in existing_table(spark, path).collect()) == list(range(5))
+    assert not os.path.exists(tmp)
+
+    shutil.rmtree(path)
+    spark.range(2).write.parquet(tmp)
+    os.remove(os.path.join(tmp, "_SUCCESS"))
+    assert existing_table(spark, path) is None
+    assert not os.path.exists(path) and os.path.isdir(tmp)
+
+
 def test_partitioned_write_prunes_partitions(spark, tmp_path):
     """Partition pruning, proven on the plan: events written
     partitionBy(event_type), a single-type query must scan ONE

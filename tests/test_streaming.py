@@ -156,6 +156,88 @@ def test_foreach_batch_upsert_sink(spark, stream_dir, tmp_path):
     assert got == want
 
 
+#: three (k, d) micro-batches for the whole-table fold sinks; the bits
+#: of d are disjoint, so summing and or-ing them fold to the same value
+FOLD_BATCHES = [[(1, 1), (2, 2)], [(2, 4), (3, 8)], [(3, 16), (4, 32)]]
+FOLD_SUMS = {(1, 1), (2, 6), (3, 24), (4, 32)}
+
+
+def _scd2_sink(spark, path):
+    from musicflow_spark.operators.scd import scd2_init
+    from musicflow_spark.streaming.events import foreach_batch_scd2
+
+    scd2_init(spark.createDataFrame([(1, 1)], "k int, d bigint"), 0).write.parquet(path)
+    sink = foreach_batch_scd2(path, "k", ["d"])
+    # each batch is refresh tick batch_id
+    return lambda batch, batch_id: sink(batch.withColumn("tick", F.lit(batch_id)), batch_id)
+
+
+def _fold_sinks():
+    from musicflow_spark.streaming.events import (
+        foreach_batch_merge_into,
+        foreach_batch_rollup_merge,
+        foreach_batch_sketch_merge,
+    )
+
+    bit_or = {"d": F.bit_or("d")}
+    return {
+        # sink factory (spark, path) -> sink, and the table's rows
+        # after folding FOLD_BATCHES
+        "upsert": (
+            lambda spark, p: foreach_batch_upsert(p, ["k"]),
+            {(1, 1), (2, 4), (3, 16), (4, 32)},
+        ),
+        "rollup_merge": (lambda spark, p: foreach_batch_rollup_merge(p, ["k"]), FOLD_SUMS),
+        "sketch_merge": (
+            lambda spark, p: foreach_batch_sketch_merge(p, ["k"], bit_or, bit_or),
+            FOLD_SUMS,
+        ),
+        "merge_into": (
+            lambda spark, p: foreach_batch_merge_into(
+                p, ["k"], update_set={"v": F.col("v") + F.col("d")}, insert_set={"v": F.col("d")}
+            ),
+            FOLD_SUMS,
+        ),
+        # (k, d, valid_from, valid_to) over the seed (1, 1) at tick 0
+        "scd2": (
+            _scd2_sink,
+            {(1, 1, 0, None), (2, 2, 1, 2), (2, 4, 2, None), (3, 8, 2, 3),
+             (3, 16, 3, None), (4, 32, 3, None)},
+        ),
+    }
+
+
+@pytest.mark.parametrize("kind", ["upsert", "rollup_merge", "sketch_merge", "merge_into", "scd2"])
+def test_fold_sink_survives_crash_between_remove_and_rename(spark, tmp_path, monkeypatch, kind):
+    # a batch that crashes after the old table is removed but before
+    # its finished copy is renamed into place must lose no row: the
+    # next batch folds into that copy
+    import os
+
+    make_sink, want = _fold_sinks()[kind]
+    path = str(tmp_path / kind)
+    sink = make_sink(spark, path)
+    batches = [spark.createDataFrame(rows, "k int, d bigint") for rows in FOLD_BATCHES]
+    sink(batches[0], 1)
+
+    real_rename = os.rename
+    crashed = []
+
+    def rename_crashing_once(src, dst):
+        if not crashed and dst == path:
+            crashed.append(src)
+            raise OSError("injected crash before the rename")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename_crashing_once)
+    with pytest.raises(OSError, match="injected"):
+        sink(batches[1], 2)
+    assert not os.path.exists(path)
+
+    sink(batches[2], 3)
+    assert {tuple(r) for r in spark.read.parquet(path).collect()} == want
+
+
 @pytest.mark.slow
 def test_streaming_marts_converge_to_batch(spark, musicflow_sources, tmp_path):
     """Log rows arriving as a 2-chunk stream must leave the warehouse
