@@ -15,13 +15,16 @@ the same video in two playlists is one cache entry, exactly one
 search — playlist-dependent fields (log_id, status, membership) are
 recomputed at assembly, never cached.
 
-The one materialisation: ``match_with_cache`` checkpoints the unioned
-hit and searched-miss rows eagerly, before assembly.  Every output it
-returns, and the new cache entries, then read that checkpoint, not
-the cache files the hits were decoded from, so ``save_cache`` may
-replace those files as soon as the call returns and the outputs stay
-readable.  Only the old-entry half of the merged cache reads the old
-files, and ``save_cache`` finishes writing it before it removes them.
+One lookup per pass: ``_match_pass`` checkpoints its left join of
+the pass's rows against the cache once, eagerly, with a hit flag.  The
+hit and miss rows, and the probe that skips the engine when nothing
+is new, are filters of that checkpoint, so the match rows (and every
+output and new cache entry read from them) never read the cache
+files the hits were decoded from.  ``save_cache`` may therefore
+replace those files as soon as ``match_with_cache`` returns, and the
+outputs stay readable.  Only the old-entry half of the merged cache
+reads the old files, and ``save_cache`` finishes writing it before it
+removes them.
 """
 
 from __future__ import annotations
@@ -32,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from musicflow_spark.matching.engine import MatchEngine, MatchResult
+from musicflow_spark.session import empty_frame
 from musicflow_spark.sources.catalog import existing_table, replace_table
 
 #: the per-video payload serialized into cache JSON — everything in a
@@ -58,15 +62,11 @@ PAYLOAD_SCHEMA = (
 CACHE_SCHEMA = "video_id string, payload string"
 
 
-def empty_cache(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], CACHE_SCHEMA)
-
-
 def load_cache(spark: SparkSession, path: str) -> DataFrame:
     """Parquet-backed cache; missing path = cold cache (first run).
     A flush that crashed mid-replace is finished by ``existing_table``."""
-    cache = existing_table(spark, path)
-    return empty_cache(spark) if cache is None else cache
+    cache = existing_table(spark, path, CACHE_SCHEMA)
+    return empty_frame(spark, CACHE_SCHEMA) if cache is None else cache
 
 
 def save_cache(cache: DataFrame, path: str) -> None:
@@ -117,16 +117,21 @@ def _match_pass(
     ``__key__`` (null on hit rows).  Match rows are those with a
     ``kind``; the searched rows are the pass's new cache entries.
 
-    ``keyed`` carries ``log_id`` and the cache ``key``.  Hits decode
-    their payload, and ``add_context`` adds the pass's
-    ``user_playlist_id``, ``log_ids`` and ``pass_no``; the cached
-    negative verdicts (null payload) yield no row.  Misses go through
-    ``compute`` (the engine), which never runs when every key is
-    cached."""
-    hits = keyed.join(cache.withColumnRenamed("video_id", key), key, "inner")
-    misses = keyed.join(cache.select(F.col("video_id").alias(key)), key, "left_anti")
+    ``keyed`` carries ``log_id`` and the cache ``key``.  Its left join
+    to the cache is checkpointed once (the module docstring's one
+    lookup); hits and misses are filters of it.  Hits decode their
+    payload, and ``add_context`` adds the pass's ``user_playlist_id``,
+    ``log_ids`` and ``pass_no``; the cached negative verdicts (null
+    payload) yield no row.  Misses go through ``compute`` (the
+    engine), which never runs when every key is cached."""
+    looked_up = keyed.join(
+        cache.select(F.col("video_id").alias(key), "payload", F.lit(True).alias("__hit__")),
+        key,
+        "left",
+    ).localCheckpoint(eager=True)
+    misses = looked_up.filter(F.col("__hit__").isNull()).drop("payload", "__hit__")
     hit_matches = add_context(
-        hits.filter(F.col("payload").isNotNull()).withColumn(
+        looked_up.filter(F.col("payload").isNotNull()).withColumn(
             "__m__", F.from_json("payload", PAYLOAD_SCHEMA)
         )
     ).select(
@@ -138,7 +143,7 @@ def _match_pass(
         F.lit(None).cast("string").alias("__key__"),
     )
     if misses.isEmpty():
-        miss_matches = keyed.sparkSession.createDataFrame([], MatchEngine._match_schema())
+        miss_matches = empty_frame(keyed.sparkSession, MatchEngine._match_schema())
     else:
         miss_matches = compute(misses)
     searched = misses.select("log_id", F.col(key).alias("__key__")).join(
@@ -171,7 +176,7 @@ def match_with_cache(
     second pass the same way, cached under the youtube_playlist_id
     key — the reference memoizes that pass per playlist id in the
     same Redis db (spotify_elt.py:863-884)."""
-    cache = cache if cache is not None else empty_cache(videos.sparkSession)
+    cache = cache if cache is not None else empty_frame(videos.sparkSession, CACHE_SCHEMA)
 
     rows = _match_pass(
         videos,
@@ -199,9 +204,9 @@ def match_with_cache(
         )
         rows = rows.unionByName(g_rows)
 
-    # the one materialisation (module docstring): outputs must not read
-    # the cache files that save_cache replaces
-    rows = rows.localCheckpoint(eager=True)
+    # the flush and every output read the rows: computed once, by
+    # whichever of them runs first
+    rows = rows.localCheckpoint(eager=False)
     result = engine.assemble(
         rows.filter(F.col("kind").isNotNull()).drop("__key__"), liked_tracks, liked_albums
     )

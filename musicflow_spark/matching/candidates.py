@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from musicflow_spark.session import empty_frame
+
 #: candidate schema common to all sources; `children` carries the
 #: child-track fan (empty for kind='track')
 CANDIDATE_SCHEMA = T.StructType(
@@ -244,7 +246,7 @@ class CatalogCandidateSource:
 
 
 def _empty(queries: DataFrame) -> DataFrame:
-    return queries.sparkSession.createDataFrame([], CANDIDATE_SCHEMA)
+    return empty_frame(queries.sparkSession, CANDIDATE_SCHEMA)
 
 
 class RestCandidateSource:

@@ -26,10 +26,18 @@ catalog join.  The reference's miss-driven API-call saving lives one
 layer up: the match cache (cache.py) hands the engine only the videos
 it has not seen, so search calls stay limited to cache misses.
 
-The seven eager ``localCheckpoint``s and the ``isEmpty`` probes stay:
-on incremental_sync (shared 4-core host), one checkpoint for the three
+The engine's eager ``localCheckpoint``s (each pass's prepared frame
+and each kind's winners, seven when both passes search) and the
+``isEmpty`` probe before each collection search stay: on
+incremental_sync (shared 4-core host), one checkpoint for the three
 winner sets was no faster over three pairs, and dropping every
 checkpoint made the traced match task slower (45 s against 28-38 s).
+The track cascade shares nothing with the album-then-playlist
+cascade, so ``compute_matches`` runs the two side by side from Python
+threads (``session.run_concurrently``): their small jobs fill the
+cores that one cascade alone leaves idle.  ``assemble`` puts its
+shared ``with_status`` frame on a lazy checkpoint, so the outputs
+that read it do not replay the match rows' union.
 """
 
 from __future__ import annotations
@@ -42,6 +50,7 @@ from pyspark.sql import functions as F
 from musicflow_spark.config import PipelineConfig
 from musicflow_spark.functions.strings import is_ost, strip_topic_suffix, with_fixed_title
 from musicflow_spark.matching.candidates import CandidateSource
+from musicflow_spark.session import empty_frame, run_concurrently
 
 #: track accept: |duration delta| <= this (spotify_elt.py:290)
 TRACK_MAX_DIFF_MS = 5_000
@@ -178,12 +187,13 @@ class MatchEngine:
             track_videos = prepared.filter(F.col("duration_ms") < th)
             coll_videos = prepared.filter(F.col("duration_ms") >= th)
 
-        track_matches = self._match_kind(
-            track_videos, "track", TRACK_STRATEGIES, SEARCH_LIMIT_TRACKS, self._track_scores()
-        ).localCheckpoint(eager=True)
-        return track_matches.unionByName(
-            self._albums_then_playlists(coll_videos, COLLECTION_STRATEGIES)
+        tracks, collections = run_concurrently(
+            lambda: self._match_kind(
+                track_videos, "track", TRACK_STRATEGIES, SEARCH_LIMIT_TRACKS, self._track_scores()
+            ).localCheckpoint(eager=True),
+            lambda: self._albums_then_playlists(coll_videos, COLLECTION_STRATEGIES),
         )
+        return tracks.unionByName(collections)
 
     def compute_matches_others(self, grouped: DataFrame) -> DataFrame:
         """The reference's SECOND pass — other users' playlists
@@ -222,7 +232,7 @@ class MatchEngine:
 
         def winners(frame: DataFrame, kind: str) -> DataFrame:
             if frame.isEmpty():
-                out = frame.sparkSession.createDataFrame([], self._match_schema())
+                out = empty_frame(frame.sparkSession, self._match_schema())
             else:
                 scores = self._collection_scores(kind, grouped)
                 out = self._match_kind(frame, kind, strategies, SEARCH_LIMIT_ALBUMS, scores)
@@ -429,8 +439,8 @@ class MatchEngine:
         from a unioned match-row frame (the cache layer's hit+miss
         union, ``match_with_cache``)."""
         spark = matches.sparkSession
-        liked_tracks = liked_tracks or spark.createDataFrame([], "uri string")
-        liked_albums = liked_albums or spark.createDataFrame([], "uri string")
+        liked_tracks = liked_tracks or empty_frame(spark, "uri string")
+        liked_albums = liked_albums or empty_frame(spark, "uri string")
 
         # ---- statuses (collect_*: liked-before check first, then the
         # saved-during membership probe over earlier log rows)
@@ -469,6 +479,9 @@ class MatchEngine:
                 .otherwise("saved"),
             )
             .drop("liked", "occ")
+            # every output below reads it: computed once, by the first
+            # action over any of them
+            .localCheckpoint(eager=False)
         )
 
         # group-grain rows (other-playlists pass) fan out one log row

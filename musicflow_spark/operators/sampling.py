@@ -397,16 +397,25 @@ def split_contamination(
             F.col(id_col).alias("doc"), F.col(text_col).alias("__text__"), "split"
         )
         fp = tagged.select("doc", "split", fingerprint("__text__").alias("fp"))
-    train_fp = fp.filter(F.col("split") == train_split).select(
-        F.col("doc").alias("train_id"), "fp"
-    )
-    eval_fp = fp.filter(F.col("split") != train_split)
-    exact = eval_fp.join(train_fp, "fp").select(
-        F.col("doc").alias("eval_id"),
-        "split",
-        "train_id",
-        F.lit("exact").alias("kind"),
-        F.lit(None).cast("double").alias("jaccard"),
+    # fp is read once: each eval doc takes the train docs that share its
+    # fingerprint from a window over fp, and ``exact`` is read once
+    # below.  A self-join (or a second read of ``exact``) computes fp
+    # again, and with ``fps`` its check could then fail in two stages
+    # at once, which AQE reports as a different error
+    is_train = F.col("split") == train_split
+    exact = (
+        fp.withColumn(
+            "__train__",
+            F.collect_list(F.when(is_train, F.col("doc"))).over(Window.partitionBy("fp")),
+        )
+        .filter(~is_train)
+        .select(
+            F.col("doc").alias("eval_id"),
+            "split",
+            F.explode("__train__").alias("train_id"),
+            F.lit("exact").alias("kind"),
+            F.lit(None).cast("double").alias("jaccard"),
+        )
     )
 
     if pairs is None:
@@ -437,9 +446,15 @@ def split_contamination(
             F.lit("near").alias("kind"),
             F.col("jaccard"),
         )
-        .join(exact.select("eval_id", "train_id"), ["eval_id", "train_id"], "left_anti")
     )
-    return exact.unionByName(near)
+    # a pair both tiers report is kept once, as exact
+    exact_first = Window.partitionBy("eval_id", "train_id").orderBy(F.col("kind") != "exact")
+    return (
+        exact.unionByName(near)
+        .withColumn("__rn__", F.row_number().over(exact_first))
+        .filter(F.col("__rn__") == 1)
+        .drop("__rn__")
+    )
 
 
 def mixture_interleave(

@@ -14,9 +14,16 @@ A task output is one of two things:
                     once per build however many models read them
 - ``table``      -> replaces its warehouse table through
                     ``sources/catalog.py::replace_table`` and is re-read
-                    (dbt marts default; the read-back truncates
-                    lineage exactly where dbt materializes).  A failed
-                    write leaves the previous table readable
+                    with the schema it was written with (dbt marts
+                    default; the read-back truncates lineage exactly
+                    where dbt materializes).  A failed write leaves the
+                    previous table readable
+
+A task's table writes are independent Spark actions, so ``run_task``
+submits them together from Python threads (``session.run_concurrently``,
+dbt's ``threads``): their small jobs share the cores instead of
+queueing.  Each thread inherits the caller's job group.  When a write
+fails, the others still finish, and ``run_task`` raises the failure.
 
 Airflow itself stays optional by design: ``Pipeline.run_task`` is the
 one step that runs a task and materializes its outputs, both here and
@@ -28,11 +35,13 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import partial
 from graphlib import TopologicalSorter
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from musicflow_spark.session import run_concurrently
 from musicflow_spark.sources.catalog import replace_table
 
 
@@ -76,11 +85,17 @@ class Pipeline:
         return ctx
 
     def run_task(self, task: Task, ctx: dict) -> dict:
-        """Call one task on the context and materialize its outputs."""
-        return {
-            model: self._materialize(model, df, task.materialize.get(model, "ephemeral"))
-            for model, df in (task.fn(ctx) or {}).items()
-        }
+        """Call one task on the context and materialize its outputs; the
+        'table' writes are submitted together (``run_concurrently``)."""
+        out = task.fn(ctx) or {}
+        how = {model: task.materialize.get(model, "ephemeral") for model in out}
+        done = {m: self._materialize(m, df, how[m]) for m, df in out.items() if how[m] != "table"}
+        tables = [model for model in out if how[model] == "table"]
+        written = run_concurrently(
+            *(partial(self._materialize, model, out[model], "table") for model in tables)
+        )
+        done.update(zip(tables, written))
+        return {model: done[model] for model in out}
 
     def _materialize(self, model: str, df: DataFrame, how: str) -> DataFrame:
         if how == "ephemeral":
@@ -93,7 +108,7 @@ class Pipeline:
         obs = Observation()
         replace_table(df.observe(obs, F.count(F.lit(1)).alias("rows")), path)
         self.metrics[model] = obs.get
-        return df.sparkSession.read.parquet(path)
+        return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def musicflow_pipeline(
@@ -198,8 +213,9 @@ def musicflow_pipeline(
             "spotify_playlists_others": result.playlists_others,
         }
         if cache_path:
-            # safe before the outputs are written: match_with_cache
-            # already detached them from the cache files replaced here
+            # safe before the outputs are written: they read
+            # match_with_cache's lookup checkpoints, not the cache files
+            # replaced here
             save_cache(new_cache, cache_path)
         return outputs
 

@@ -11,13 +11,23 @@ spark-submit, so nothing here is local-only in design:
 - Arrow enabled for every pandas boundary (Pandas UDFs, toPandas).
 - Session timezone pinned UTC so timestamp semantics match the
   DuckDB oracle and are cluster-invariant.
+
+Two helpers keep the sync free of fixed per-action waste:
+:func:`empty_frame` builds an empty frame in the JVM alone, and
+:func:`run_concurrently` submits independent actions from Python
+threads, so small jobs share the cores instead of queueing.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -55,3 +65,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def empty_frame(spark: SparkSession, schema: str | StructType) -> DataFrame:
+    """An empty frame of ``schema`` (a DDL string or a StructType),
+    every column nullable.  It plans to an empty ``LocalTableScan``
+    (``OptimizeLimitZero`` folds the ``limit(0)``), so unlike
+    ``createDataFrame([], schema)`` it starts no Python worker."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return (
+        spark.range(1)
+        .select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields])
+        .limit(0)
+    )
+
+
+def run_concurrently(*thunks: Callable[[], object]) -> list:
+    """Call each thunk on its own Python thread and return their results
+    in order, so independent Spark actions run side by side.  Each
+    thread inherits the caller's local properties (job group,
+    scheduler pool) and the active session's tags.  Every thunk runs
+    to its end; then the first failure, in thunk order, is raised."""
+    if len(thunks) < 2:
+        return [t() for t in thunks]
+    session = SparkSession.getActiveSession()
+    inherit = inheritable_thread_target if session is None else inheritable_thread_target(session)
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(inherit(t)) for t in thunks]
+    return [f.result() for f in futures]

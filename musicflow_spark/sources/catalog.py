@@ -20,6 +20,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: the driver-generated synthetic tables (TESTDATA.md)
 TESTDATA_TABLES = (
@@ -77,19 +78,23 @@ def replace_table(df: DataFrame, path: str) -> None:
     os.rename(tmp, path)
 
 
-def existing_table(spark: SparkSession, path: str) -> DataFrame | None:
+def existing_table(
+    spark: SparkSession, path: str, schema: str | StructType | None = None
+) -> DataFrame | None:
     """The table at ``path``, or ``None`` when there is none.
 
     If ``path`` is missing but a :func:`replace_table` copy finished
     (its ``_SUCCESS`` marker shows the write completed), that copy is
     moved into place first.  A copy without the marker is an
-    unfinished write and stays where it is."""
+    unfinished write and stays where it is.  A given ``schema`` is
+    read as is; without one, Spark runs a job to infer it."""
     tmp = f"{path}.__tmp__"
     if not os.path.exists(path) and os.path.exists(os.path.join(tmp, "_SUCCESS")):
         os.rename(tmp, path)
     if not os.path.exists(path):
         return None
-    return spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def write_table(

@@ -96,6 +96,56 @@ def test_warm_cache_reproduces_cold_run_without_search(spark, setup, tmp_path):
     assert cache2.count() == cache.count()
 
 
+def _outputs(result):
+    return {
+        name: sorted(tuple(r) for r in getattr(result, name).collect())
+        for name in ("log", "tracks", "albums", "playlists_others")
+    }
+
+
+#: the planner runs nothing before an action: no AQE stage runs while a
+#: lazy checkpoint is planned, and the small cache is not broadcast
+#: (a broadcast is read when its plan is prepared)
+PLAN_ONLY = {"spark.sql.adaptive.enabled": "false", "spark.sql.autoBroadcastJoinThreshold": "-1"}
+
+
+@pytest.mark.parametrize("conf", [{}, PLAN_ONLY], ids=["default", "plan-only"])
+def test_outputs_survive_a_flush_over_the_cache_they_read(spark, setup, tmp_path, conf):
+    """The outputs of a warm ``match_with_cache`` never read the cache
+    files their hits were decoded from, so a flush that replaces those
+    files leaves them readable and unchanged.  The second warm call's
+    outputs are read only after the flush; under ``PLAN_ONLY`` nothing
+    of theirs has run by then, so only the lookup checkpoint keeps
+    them off the replaced files."""
+    previous = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        _check_outputs_survive_a_flush(spark, setup, tmp_path)
+    finally:
+        for k, v in previous.items():
+            spark.conf.set(k, v)
+
+
+def _check_outputs_survive_a_flush(spark, setup, tmp_path):
+    source, videos, playlist_map = setup
+    engine = MatchEngine(CFG, source)
+    _, cache = match_with_cache(engine, videos, playlist_map)
+    path = str(tmp_path / "match_cache")
+    save_cache(cache, path)
+
+    read_first, new_cache = match_with_cache(
+        engine, videos, playlist_map, cache=load_cache(spark, path)
+    )
+    read_after, _ = match_with_cache(engine, videos, playlist_map, cache=load_cache(spark, path))
+    expected = _outputs(read_first)
+    assert expected["log"] and expected["tracks"]
+
+    save_cache(new_cache, path)
+    assert _outputs(read_first) == expected
+    assert _outputs(read_after) == expected
+
+
 def test_only_new_videos_are_searched(spark, setup):
     source, videos, playlist_map = setup
     engine = MatchEngine(CFG, source)

@@ -221,3 +221,59 @@ def test_table_materialization_observes_row_metrics(spark, tmp_path):
     ctx = pipe.run()
     assert ctx["m"].count() == 37
     assert pipe.metrics["m"]["rows"] == 37
+
+
+def _three_tables(spark, wh, build):
+    return Pipeline("three", warehouse_dir=wh).add(
+        Task("build", build, materialize={m: "table" for m in ("a", "b", "c")})
+    )
+
+
+def test_table_writes_run_in_the_callers_job_group(spark, tmp_path):
+    """The concurrent writes of a multi-table task inherit the caller's
+    job group: no write job of the task runs ungrouped."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def build(ctx):
+        return {m: spark.range(n).withColumnRenamed("id", "k") for m, n in zip("abc", (3, 5, 7))}
+
+    pipe = _three_tables(spark, str(tmp_path), build)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("concurrent-writes", "three table writes")
+    try:
+        ctx = pipe.run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert len(tracker.getJobIdsForGroup("concurrent-writes")) >= 3
+    assert {m: pipe.metrics[m]["rows"] for m in "abc"} == {"a": 3, "b": 5, "c": 7}
+    assert {m: ctx[m].count() for m in "abc"} == {"a": 3, "b": 5, "c": 7}
+
+
+def test_failed_table_write_raises_and_keeps_every_table_readable(spark, tmp_path):
+    """One write of a task fails: ``run_task`` raises, the task's other
+    tables are written, and the failed table keeps its previous rows."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    wh = str(tmp_path)
+    _three_tables(spark, wh, lambda ctx: {m: spark.range(2) for m in "abc"}).run()
+
+    def build(ctx):
+        out = {m: spark.range(4) for m in "abc"}
+        out["b"] = spark.range(4).select(
+            F.when(F.col("id") >= 0, F.raise_error(F.lit("write b failed")))
+            .otherwise(F.col("id"))
+            .alias("id")
+        )
+        return out
+
+    pipe = _three_tables(spark, wh, build)
+    with pytest.raises(Exception, match="write b failed"):
+        pipe.run()
+    rows = {m: spark.read.parquet(os.path.join(wh, m)).count() for m in "abc"}
+    assert rows == {"a": 4, "b": 2, "c": 4}
+    assert set(pipe.metrics) == {"a", "c"}

@@ -1,0 +1,76 @@
+"""The session helpers the sync path relies on: an empty frame that
+starts no Python worker, and concurrent submission of independent
+actions from Python threads."""
+
+from __future__ import annotations
+
+import pathlib
+import re
+import threading
+
+import pytest
+from pyspark.sql.types import StructType
+
+from musicflow_spark.session import empty_frame, run_concurrently
+
+PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "musicflow_spark"
+#: the sync-and-analyse path: a Python worker started here is fixed
+#: cost on every sync
+PAPER_PATH = ("sources", "functions", "plans", "matching", "checks")
+
+
+DDL = "uri string, n bigint, children array<struct<track_uri:string,ms:bigint>>"
+
+
+@pytest.mark.parametrize("as_struct", [False, True], ids=["ddl", "struct"])
+def test_empty_frame_plans_to_an_empty_local_scan(spark, as_struct):
+    schema = StructType.fromDDL(DDL)
+    df = empty_frame(spark, schema if as_struct else DDL)
+    assert df.schema == schema
+    assert df.collect() == []
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan <empty>" in plan
+    assert "Range" not in plan
+
+
+def test_run_concurrently_runs_thunks_side_by_side_and_keeps_order(spark):
+    # every thunk waits for all the others: run one after another,
+    # the barrier would time out
+    barrier = threading.Barrier(4, timeout=30)
+
+    def thunk(i):
+        def run():
+            barrier.wait()
+            return i * i
+
+        return run
+
+    assert run_concurrently(*(thunk(i) for i in range(4))) == [0, 1, 4, 9]
+    assert run_concurrently() == []
+
+
+def test_run_concurrently_finishes_every_thunk_then_raises_the_first_failure(spark):
+    done = []
+
+    def fail(msg):
+        def run():
+            raise ValueError(msg)
+
+        return run
+
+    with pytest.raises(ValueError, match="first"):
+        run_concurrently(fail("first"), lambda: done.append(1), fail("second"))
+    assert done == [1]
+
+
+def test_paper_path_builds_no_empty_frame_from_python_rows():
+    """``createDataFrame([] ...)`` plans a Python RDD, and running it
+    starts Python workers: the paper path uses ``empty_frame``."""
+    pattern = re.compile(r"createDataFrame\(\s*\[\s*\]")
+    offenders = [
+        str(path.relative_to(PACKAGE))
+        for pkg in PAPER_PATH
+        for path in sorted((PACKAGE / pkg).rglob("*.py"))
+        if pattern.search(path.read_text())
+    ]
+    assert offenders == []
