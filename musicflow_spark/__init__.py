@@ -8,14 +8,14 @@ dbt + a Python fuzzy matcher) as an idiomatic Spark engine:
                   as pure DataFrame -> DataFrame functions.
 - ``matching/``   the Spotify-search fuzzy matcher, set-oriented:
                   native expression chains + candidate DataFrames +
-                  window-rank cascades instead of row-at-a-time loops.
+                  window-rank cascades instead of row-at-a-time loops,
+                  and the parquet match cache both passes look up.
 - ``operators/``  large-scale training-data operators (dedup families,
                   similarity search, text analysis, multimodal columns).
-- ``sources/``    connectors: parquet warehouse, paginated-REST adapter,
-                  kv match-cache.
+- ``sources/``    connectors: parquet warehouse, paginated-REST adapter.
 - ``functions/``  scalar expression library: fix_title chain, time formatting,
                   ISO-8601 durations.
-- ``quality/``    declarative data-quality check runner (the dbt-test
+- ``checks/``     declarative data-quality check runner (the dbt-test
                   semantics: unique / not_null / accepted_values /
                   relationships / expression / equal_rowcount...).
 - ``streaming/``  Structured Streaming over the events table

@@ -15,26 +15,28 @@ the same video in two playlists is one cache entry, exactly one
 search — playlist-dependent fields (log_id, status, membership) are
 recomputed at assembly, never cached.
 
-One lookup per pass: ``_match_pass`` checkpoints its left join of
-the pass's rows against the cache once, eagerly, with a hit flag.  The
-hit and miss rows, and the probe that skips the engine when nothing
-is new, are filters of that checkpoint, so the match rows (and every
-output and new cache entry read from them) never read the cache
-files the hits were decoded from.  ``save_cache`` may therefore
-replace those files as soon as ``match_with_cache`` returns, and the
-outputs stay readable.  Only the old-entry half of the merged cache
-reads the old files, and ``save_cache`` finishes writing it before it
-removes them.
+One lookup for both passes: ``match_with_cache`` puts the video rows
+and the grouped other-playlist rows in one request frame, each row
+with its match context and cache key, and checkpoints that frame's
+left join against the cache once, eagerly, with a hit flag.  The hit
+rows, each pass's misses and the probes that skip the engine when a
+pass has nothing new are filters of that checkpoint, so the match
+rows (and every output and new cache entry read from them) never read
+the cache files the hits were decoded from.  ``save_cache`` may
+therefore replace those files as soon as ``match_with_cache``
+returns, and the outputs stay readable.  Only the old-entry half of
+the merged cache reads the old files, and ``save_cache`` finishes
+writing it before it removes them.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from musicflow_spark.matching.engine import MatchEngine, MatchResult
+from musicflow_spark.matching.engine import MATCH_COLUMNS, MATCH_SCHEMA, MatchEngine, MatchResult
 from musicflow_spark.session import empty_frame
 from musicflow_spark.sources.catalog import existing_table, replace_table
 
@@ -47,14 +49,11 @@ PAYLOAD_FIELDS = [
     "total_tracks", "children", "found_on_try", "kind",
 ]
 
-PAYLOAD_SCHEMA = (
-    "search_type_id bigint, q string, spotify_uri string, album_uri string, "
-    "item_title string, item_artists_s string, item_duration_ms bigint, "
-    "difference_ms bigint, track_match bigint, total_tracks bigint, "
-    "children array<struct<track_uri:string,track_title:string,duration_ms:bigint,"
-    "track_artists:string,album_uri:string>>, "
-    "found_on_try bigint, kind string"
-)
+PAYLOAD_SCHEMA = ", ".join(f"{c} {MATCH_COLUMNS[c]}" for c in PAYLOAD_FIELDS)
+
+#: what a request row carries besides its pass's own columns: the
+#: match context the engine passes through to its match rows
+CONTEXT = ("log_id", "user_playlist_id", "log_ids", "pass_no")
 
 #: one store, two key namespaces — video_id for the video pass and
 #: youtube_playlist_id for the other-playlists pass, exactly like the
@@ -76,7 +75,7 @@ def save_cache(cache: DataFrame, path: str) -> None:
 
 
 def cache_entries(searched: DataFrame) -> DataFrame:
-    """Searched rows (``_match_pass``) -> cache rows: one per ``__key__``.
+    """Searched rows (``match_with_cache``) -> cache rows: one per ``__key__``.
 
     Matched keys store the JSON payload (lowest log_id wins when the
     video sits in several playlists — payloads are identical by
@@ -105,53 +104,6 @@ def cache_entries(searched: DataFrame) -> DataFrame:
     )
 
 
-def _match_pass(
-    keyed: DataFrame,
-    key: str,
-    cache: DataFrame,
-    compute: Callable[[DataFrame], DataFrame],
-    add_context: Callable[[DataFrame], DataFrame],
-) -> DataFrame:
-    """One cache-aware match pass: the decoded hit rows plus one row
-    per searched miss, matched or not, with its cache key in
-    ``__key__`` (null on hit rows).  Match rows are those with a
-    ``kind``; the searched rows are the pass's new cache entries.
-
-    ``keyed`` carries ``log_id`` and the cache ``key``.  Its left join
-    to the cache is checkpointed once (the module docstring's one
-    lookup); hits and misses are filters of it.  Hits decode their
-    payload, and ``add_context`` adds the pass's ``user_playlist_id``,
-    ``log_ids`` and ``pass_no``; the cached negative verdicts (null
-    payload) yield no row.  Misses go through ``compute`` (the
-    engine), which never runs when every key is cached."""
-    looked_up = keyed.join(
-        cache.select(F.col("video_id").alias(key), "payload", F.lit(True).alias("__hit__")),
-        key,
-        "left",
-    ).localCheckpoint(eager=True)
-    misses = looked_up.filter(F.col("__hit__").isNull()).drop("payload", "__hit__")
-    hit_matches = add_context(
-        looked_up.filter(F.col("payload").isNotNull()).withColumn(
-            "__m__", F.from_json("payload", PAYLOAD_SCHEMA)
-        )
-    ).select(
-        "log_id",
-        "user_playlist_id",
-        *[F.col(f"__m__.{c}").alias(c) for c in PAYLOAD_FIELDS],
-        "log_ids",
-        "pass_no",
-        F.lit(None).cast("string").alias("__key__"),
-    )
-    if misses.isEmpty():
-        miss_matches = empty_frame(keyed.sparkSession, MatchEngine._match_schema())
-    else:
-        miss_matches = compute(misses)
-    searched = misses.select("log_id", F.col(key).alias("__key__")).join(
-        miss_matches, "log_id", "left"
-    )
-    return hit_matches.unionByName(searched.select(*hit_matches.columns))
-
-
 def match_with_cache(
     engine: MatchEngine,
     videos: DataFrame,
@@ -169,44 +121,70 @@ def match_with_cache(
     cold run over the same videos.  ``cache=None`` is that cold run:
     every video is a miss.
 
-    videos / playlist_map: see ``MatchEngine.compute_matches``;
+    videos: (log_id, youtube_playlist_id, video_id, title, author,
+    description, duration_ms), see ``MatchEngine.compute_matches``;
+    playlist_map: (youtube_playlist_id, user_playlist_id) with the
+    'LM' pseudo-row (reference get_user_playlist_id,
+    spotify_elt.py:134-138), unmapped playlists go to 'LM';
     liked_tracks / liked_albums: (uri) sets saved before the run.
 
-    ``grouped_others`` (extract_other_playlists grouping) runs the
-    second pass the same way, cached under the youtube_playlist_id
-    key — the reference memoizes that pass per playlist id in the
-    same Redis db (spotify_elt.py:863-884)."""
-    cache = cache if cache is not None else empty_frame(videos.sparkSession, CACHE_SCHEMA)
+    ``grouped_others`` (extract_other_playlists grouping) is the
+    second pass, cached under the youtube_playlist_id key — the
+    reference memoizes that pass per playlist id in the same Redis db
+    (spotify_elt.py:863-884).
 
-    rows = _match_pass(
-        videos,
-        "video_id",
-        cache,
-        lambda misses: engine.compute_matches(misses, playlist_map),
-        lambda hits: (
-            hits.join(F.broadcast(playlist_map), "youtube_playlist_id", "left")
-            .withColumn("user_playlist_id", F.coalesce("user_playlist_id", F.lit("LM")))
-            .withColumn("log_ids", F.lit(None).cast("array<bigint>"))
-            .withColumn("pass_no", F.lit(0))
-        ),
+    Both passes share one lookup (the module docstring).  Each pass's
+    misses, in its own columns plus ``CONTEXT``, go to its engine
+    entry point, which never runs when the pass has no miss.  The
+    assembly and the flush read the hits' match rows (null
+    ``__key__``) plus one row per searched miss, matched or not."""
+    spark = videos.sparkSession
+    cache = cache if cache is not None else empty_frame(spark, CACHE_SCHEMA)
+
+    passes = [(videos.columns, engine.compute_matches)]
+    requests = (
+        videos.join(F.broadcast(playlist_map), "youtube_playlist_id", "left")
+        .withColumn("user_playlist_id", F.coalesce("user_playlist_id", F.lit("LM")))
+        .withColumn("log_ids", F.lit(None).cast("array<bigint>"))
+        .withColumn("pass_no", F.lit(0))
+        .withColumn("__key__", F.col("video_id"))
     )
     if grouped_others is not None:
-        # group entries reuse the video cache shape with the playlist
-        # id in the key column
-        g_rows = _match_pass(
-            grouped_others.withColumn("log_id", F.element_at("log_ids", 1)),
-            "youtube_playlist_id",
-            cache,
-            engine.compute_matches_others,
-            lambda hits: hits.withColumn("user_playlist_id", F.lit("LM")).withColumn(
-                "pass_no", F.lit(1)
-            ),
+        passes.append((grouped_others.columns, engine.compute_matches_others))
+        # a group's match row stands for its first log id
+        groups = (
+            grouped_others.withColumn("log_id", F.element_at("log_ids", 1))
+            .withColumn("user_playlist_id", F.lit("LM"))
+            .withColumn("pass_no", F.lit(1))
+            .withColumn("__key__", F.col("youtube_playlist_id"))
         )
-        rows = rows.unionByName(g_rows)
+        requests = requests.unionByName(groups, allowMissingColumns=True)
+
+    looked_up = requests.join(
+        cache.select(F.col("video_id").alias("__key__"), "payload", F.lit(True).alias("__hit__")),
+        "__key__",
+        "left",
+    ).localCheckpoint(eager=True)
+    payload = F.from_json("payload", PAYLOAD_SCHEMA)
+    hits = looked_up.filter(F.col("payload").isNotNull()).select(
+        *[payload[c].alias(c) if c in PAYLOAD_FIELDS else F.col(c) for c in MATCH_COLUMNS],
+        F.lit(None).cast("string").alias("__key__"),
+    )
+    misses = looked_up.filter(F.col("__hit__").isNull())
+    computed = []
+    for pass_no, (columns, compute) in enumerate(passes):
+        pass_misses = misses.filter(F.col("pass_no") == pass_no)
+        if not pass_misses.isEmpty():
+            own = [*columns, *(c for c in CONTEXT if c not in columns)]
+            computed.append(compute(pass_misses.select(*own)))
+    miss_matches = reduce(DataFrame.unionByName, computed, empty_frame(spark, MATCH_SCHEMA))
+    searched = misses.select("log_id", "pass_no", "__key__").join(
+        miss_matches, ["log_id", "pass_no"], "left"
+    )
 
     # the flush and every output read the rows: computed once, by
     # whichever of them runs first
-    rows = rows.localCheckpoint(eager=False)
+    rows = hits.unionByName(searched).localCheckpoint(eager=False)
     result = engine.assemble(
         rows.filter(F.col("kind").isNotNull()).drop("__key__"), liked_tracks, liked_albums
     )

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from musicflow_spark.config import PipelineConfig
 from musicflow_spark.functions.strings import is_ost, strip_topic_suffix, with_fixed_title
-from musicflow_spark.matching.candidates import CandidateSource
+from musicflow_spark.matching.candidates import CANDIDATE_SCHEMA, CandidateSource
 from musicflow_spark.session import empty_frame, run_concurrently
 
 #: track accept: |duration delta| <= this (spotify_elt.py:290)
@@ -89,11 +89,20 @@ OTHERS_COLLECTION_STRATEGIES = COLLECTION_STRATEGIES + [
     (2, 6, "{author} {fixed}", False),
 ]
 
-#: the children element type shared by schema strings below
-_CHILD_T = (
-    "array<struct<track_uri:string,track_title:string,duration_ms:bigint,"
-    "track_artists:string,album_uri:string>>"
-)
+#: the child-track fan of a collection match, as the candidates carry it
+_CHILD_T = CANDIDATE_SCHEMA["children"].dataType.simpleString()
+
+#: the match row, column -> type: what ``compute_matches`` /
+#: ``compute_matches_others`` return and ``assemble`` reads (the cache
+#: layer adds the request's ``__key__``)
+MATCH_COLUMNS = {
+    "log_id": "bigint", "user_playlist_id": "string", "search_type_id": "bigint",
+    "q": "string", "spotify_uri": "string", "album_uri": "string", "item_title": "string",
+    "item_artists_s": "string", "item_duration_ms": "bigint", "difference_ms": "bigint",
+    "track_match": "bigint", "total_tracks": "bigint", "children": _CHILD_T,
+    "log_ids": "array<bigint>", "pass_no": "int", "found_on_try": "bigint", "kind": "string",
+}
+MATCH_SCHEMA = ", ".join(f"{c} {t}" for c, t in MATCH_COLUMNS.items())
 
 
 @dataclass
@@ -157,29 +166,25 @@ class MatchEngine:
         self.source = source
 
     # ------------------------------------------------------------ public
-    def compute_matches(self, videos: DataFrame, playlist_map: DataFrame) -> DataFrame:
+    def compute_matches(self, videos: DataFrame) -> DataFrame:
         """The video pass's search/score/accept stage: one unioned
-        match-row frame (``_match_schema`` shape) across the track/
-        album/playlist branches.  The cache layer (cache.py,
+        match-row frame (``MATCH_SCHEMA``) across the track/album/
+        playlist branches.  The cache layer (cache.py,
         ``match_with_cache``) calls it for the videos it has not seen.
 
-        videos: (log_id, youtube_playlist_id, video_id, title, author,
+        videos: (youtube_playlist_id, video_id, title, author,
         description, duration_ms) — one row per library entry of the
-        current user (reference extract_videos, spotify_elt.py:92-126).
-        playlist_map: (youtube_playlist_id, user_playlist_id) with the
-        'LM' pseudo-row (reference get_user_playlist_id :134-138)."""
+        current user (reference extract_videos, spotify_elt.py:92-126)
+        — plus the match context each row carries from the cache
+        layer: log_id, user_playlist_id (reference get_user_playlist_id
+        :134-138, 'LM' when unmapped), log_ids and pass_no."""
         # prepared and the per-kind winner sets each feed 2+ downstream
         # consumers (the album winners gate the playlist pass; assembly
         # unions all three and fans into 7 outputs).  Materialize them
         # once — winners are tiny relative to the input, and truncating
         # the lineage here keeps Catalyst analysis linear instead of
         # re-planning the whole cascade per consumer.
-        prepared = (
-            _prepare_titles(videos)
-            .join(F.broadcast(playlist_map), "youtube_playlist_id", "left")
-            .withColumn("user_playlist_id", F.coalesce("user_playlist_id", F.lit("LM")))
-            .localCheckpoint(eager=True)
-        )
+        prepared = _prepare_titles(videos).localCheckpoint(eager=True)
         th = self.cfg.threshold_ms
         if th is None:
             track_videos, coll_videos = prepared, prepared.limit(0)
@@ -205,19 +210,16 @@ class MatchEngine:
         grouped: (youtube_playlist_id, title, author, total_tracks,
         track_titles: array<string> of LOWERCASED video titles in
         log-id order, log_ids: array<bigint> sorted, duration_ms:
-        summed video duration) — the extract_other_playlists grouping.
+        summed video duration) — the extract_other_playlists grouping —
+        plus the match context from the cache layer: log_id (the
+        group's first log id), user_playlist_id ('LM') and pass_no.
 
-        Match rows come back at GROUP grain (log_id = first log id, so
+        Match rows come back at GROUP grain (one log_id per group, so
         statuses dedup per group exactly like the reference's shared
         log membership probe); assemble() fans log rows out per log_id
         afterwards, all carrying the group's status (:886-889,914-916
         loop log_ids with one status)."""
-        prepared = (
-            _prepare_titles(grouped)
-            .withColumn("user_playlist_id", F.lit("LM"))
-            .withColumn("log_id", F.element_at("log_ids", 1))
-            .localCheckpoint(eager=True)
-        )
+        prepared = _prepare_titles(grouped).localCheckpoint(eager=True)
         return self._albums_then_playlists(
             prepared, OTHERS_COLLECTION_STRATEGIES, grouped=True
         )
@@ -232,7 +234,7 @@ class MatchEngine:
 
         def winners(frame: DataFrame, kind: str) -> DataFrame:
             if frame.isEmpty():
-                out = empty_frame(frame.sparkSession, self._match_schema())
+                out = empty_frame(frame.sparkSession, MATCH_SCHEMA)
             else:
                 scores = self._collection_scores(kind, grouped)
                 out = self._match_kind(frame, kind, strategies, SEARCH_LIMIT_ALBUMS, scores)
@@ -277,9 +279,9 @@ class MatchEngine:
     ) -> DataFrame:
         """One kind's cascade: strategy rows -> search -> the top
         candidate per query -> score -> the first accepted strategy
-        wins.  Every kind projects the same match-row columns; the
-        caller supplies the search limit and the scores
-        (``_track_scores`` / ``_collection_scores``)."""
+        wins.  Every kind projects the same match-row columns, the
+        rows' match context included; the caller supplies the search
+        limit and the scores (``_track_scores`` / ``_collection_scores``)."""
         strat = self._strategy_rows(videos, strategies)
         cands = self.source.search(strat.select("qid", "q"), kind, limit).filter(
             F.col("result_rank") == 1
@@ -287,6 +289,8 @@ class MatchEngine:
         scored = strat.join(cands, "qid", "inner").select(
             "log_id",
             "user_playlist_id",
+            "log_ids",
+            "pass_no",
             "priority",
             "search_type_id",
             "q",
@@ -330,8 +334,6 @@ class MatchEngine:
             "track_match": F.lit(1).cast("long"),  # pseudo (log_track :363-364)
             "total_tracks": F.lit(1).cast("long"),
             "children": F.lit(None).cast(_CHILD_T),
-            "log_ids": F.lit(None).cast("array<bigint>"),
-            "pass_no": F.lit(0),
             "accepted": accepted,
         }
 
@@ -390,8 +392,6 @@ class MatchEngine:
             "track_match": track_match_cnt.cast("long"),
             "total_tracks": total_tracks,
             "children": children,
-            "log_ids": F.col("log_ids") if grouped else F.lit(None).cast("array<bigint>"),
-            "pass_no": F.lit(1 if grouped else 0),
             "accepted": accepted,
         }
 
@@ -414,18 +414,6 @@ class MatchEngine:
             .filter(F.col("accepted"))
             .drop("rn", "accepted", "priority")
             .withColumn("kind", F.lit(kind))
-        )
-
-    @staticmethod
-    def _match_schema() -> str:
-        return (
-            "log_id bigint, user_playlist_id string, search_type_id bigint, q string, "
-            "spotify_uri string, album_uri string, item_title string, "
-            "item_artists_s string, item_duration_ms bigint, difference_ms bigint, "
-            "track_match bigint, total_tracks bigint, "
-            f"children {_CHILD_T}, "
-            "log_ids array<bigint>, pass_no int, "
-            "found_on_try bigint, kind string"
         )
 
     # ---------------------------------------------------------- assembly

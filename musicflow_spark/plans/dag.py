@@ -214,7 +214,7 @@ def musicflow_pipeline(
         }
         if cache_path:
             # safe before the outputs are written: they read
-            # match_with_cache's lookup checkpoints, not the cache files
+            # match_with_cache's lookup checkpoint, not the cache files
             # replaced here
             save_cache(new_cache, cache_path)
         return outputs

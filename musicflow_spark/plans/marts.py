@@ -118,26 +118,21 @@ def log_not_found_videos(int_useful: DataFrame, stg_spotify_log: DataFrame) -> D
     )
 
 
-def log_for_tableau(
-    stg: dict[str, DataFrame],
-    cfg: PipelineConfig,
-    deterministic_ids: bool = False,
-) -> DataFrame:
+def log_for_tableau(stg: dict[str, DataFrame], cfg: PipelineConfig) -> DataFrame:
     """reference: dbt/models/marts/log_for_tableau.sql.
 
     Ownership routing on the configured channel name (env_var there,
     typed config here); other-users branch is a wide DISTINCT (its
     GROUP BY has no aggregates); union; global surrogate id via
     row_number over search_type_id (W1 — single-partition, exactly as
-    the reference computes it; ties keep arbitrary-but-fixed order).
+    the reference computes it).
 
-    ``deterministic_ids`` extends the W1 window ordering with a full
-    tiebreak chain over the output columns, making the id assignment
-    replayable (the driver-oracle query needs hash-stable ids).  An
+    The W1 order breaks search_type_id ties with a nulls-last chain
+    over the output columns, so the ids do not depend on how the
+    sources are partitioned and a rerun assigns the same ones.  An
     admissible refinement: BigQuery's tie order is arbitrary, so any
-    fixed total order — here nulls-last over every payload column —
-    is a valid instance of the reference semantics; rows with fully
-    identical payloads remain interchangeable either way."""
+    fixed total order is a valid instance of the reference semantics;
+    rows with fully identical payloads remain interchangeable."""
     yl = stg["youtube_library"]
     yp = stg["youtube_playlists"]
     yv = stg["youtube_videos"]
@@ -224,20 +219,15 @@ def log_for_tableau(
         )
     )
     unioned = current.unionByName(other)
-    order_cols = [F.col("search_type_id").asc_nulls_last()]
-    if deterministic_ids:
-        order_cols += [
-            F.col(c).asc_nulls_last()
-            for c in (
-                "log_id", "video_id", "youtube_type", "music_type",
-                "spotify_type", "found_on_try", "difference_ms",
-                "track_match", "total_tracks",
-            )
-        ]
+    order_cols = [
+        F.col(c).asc_nulls_last()
+        for c in (
+            "search_type_id", "log_id", "video_id", "youtube_type", "music_type",
+            "spotify_type", "found_on_try", "difference_ms", "track_match", "total_tracks",
+        )
+    ]
     return unioned.select(
-        F.row_number()
-        .over(Window.orderBy(*order_cols))
-        .alias("id"),
+        F.row_number().over(Window.orderBy(*order_cols)).alias("id"),
         "log_id",
         "video_id",
         "youtube_type",

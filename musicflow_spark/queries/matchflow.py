@@ -342,11 +342,9 @@ def log_for_tableau_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1/F15/F18 + P2/U1 end to end: the REAL log_for_tableau over
     the derived fixture (reference: log_for_tableau.sql:87-110 —
     ownership routing, other-users DISTINCT, union, global surrogate
-    row_number, log-scale zero fix).  deterministic_ids=True extends
-    the W1 tie order to a full output-column chain so the id
-    assignment is replayable (documented admissible refinement)."""
+    row_number over its full tiebreak chain, log-scale zero fix)."""
     cfg = PipelineConfig(threshold_ms=150_000, your_channel_name="your_channel")
-    return log_for_tableau(_mart_stage(spark, sf_dir), cfg, deterministic_ids=True)
+    return log_for_tableau(_mart_stage(spark, sf_dir), cfg)
 
 
 LOG_FOR_TABLEAU_MART_SQL = (

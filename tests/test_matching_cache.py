@@ -180,9 +180,9 @@ def test_cache_key_is_video_not_library_row(spark, setup):
     assert cache.filter(F.col("payload").isNotNull()).count() == matched_videos
 
 
-def test_grouped_others_cached_under_playlist_key(spark, setup):
-    source, videos, playlist_map = setup
-    grouped = spark.createDataFrame(
+def _grouped_others(spark):
+    """Two other-user playlists: PL_other1 matches, PL_other2 does not."""
+    return spark.createDataFrame(
         [
             (
                 "PL_other1", "Blues Collection", "other_user_a", 2,
@@ -198,6 +198,11 @@ def test_grouped_others_cached_under_playlist_key(spark, setup):
         "total_tracks bigint, track_titles array<string>, "
         "log_ids array<bigint>, duration_ms bigint",
     )
+
+
+def test_grouped_others_cached_under_playlist_key(spark, setup):
+    source, videos, playlist_map = setup
+    grouped = _grouped_others(spark)
     engine = MatchEngine(CFG, source)
     cold, cache = match_with_cache(
         engine, videos, playlist_map, grouped_others=grouped
@@ -218,6 +223,54 @@ def test_grouped_others_cached_under_playlist_key(spark, setup):
     # the grouped hit fanned out per log id on the warm path too
     warm_ids = {r["log_id"] for r in warm.log.collect()}
     assert {9, 21} <= warm_ids and 10 not in warm_ids
+
+
+class OnePassEngine(MatchEngine):
+    """Lets one engine entry point run and raises in the other: proves
+    that a fully cached pass never reaches its own entry point."""
+
+    def __init__(self, source, allowed: str):
+        super().__init__(CFG, source)
+        self.allowed = allowed
+        self.called: list[str] = []
+
+    def _reached(self, entry: str) -> None:
+        assert entry == self.allowed, f"{entry} ran for a fully cached pass"
+        self.called.append(entry)
+
+    def compute_matches(self, videos):
+        self._reached("compute_matches")
+        return super().compute_matches(videos)
+
+    def compute_matches_others(self, grouped):
+        self._reached("compute_matches_others")
+        return super().compute_matches_others(grouped)
+
+
+@pytest.mark.parametrize(
+    "uncached, allowed",
+    [("PL_other1", "compute_matches_others"), ("v01", "compute_matches")],
+    ids=["new-group", "new-video"],
+)
+def test_mixed_warm_state_searches_only_the_pass_with_misses(spark, setup, uncached, allowed):
+    """One pass fully cached, the other with one new key (a group, or a
+    video that sits in two playlists): only the pass with the miss
+    reaches the engine, and the log equals the cold run's."""
+    source, videos, playlist_map = setup
+    grouped = _grouped_others(spark)
+    cold, cache = match_with_cache(
+        MatchEngine(CFG, source), videos, playlist_map, grouped_others=grouped
+    )
+    engine = OnePassEngine(source, allowed)
+    warm, _ = match_with_cache(
+        engine,
+        videos,
+        playlist_map,
+        cache=cache.filter(F.col("video_id") != uncached),
+        grouped_others=grouped,
+    )
+    assert _log_rows(warm) == _log_rows(cold)
+    assert engine.called == [allowed]
 
 
 def test_crashed_flush_recovers_finished_copy(spark, tmp_path, monkeypatch):

@@ -137,6 +137,21 @@ def test_log_for_tableau_routing_and_logscale(models):
     assert ids == list(range(1, len(rows) + 1))
 
 
+def test_log_for_tableau_ids_do_not_depend_on_partitioning(musicflow_sources):
+    """The W1 surrogate id is reproducible: the same sources split into
+    1 and into 7 partitions give the same rows, ids included (ties on
+    search_type_id used to take whatever order the shuffle read)."""
+
+    def rows(n: int) -> list[tuple]:
+        split = {name: df.repartition(n) for name, df in musicflow_sources.items()}
+        lft = build_all(split, CFG)["log_for_tableau"]
+        return sorted(lft.collect(), key=lambda r: r["id"])
+
+    one = rows(1)
+    assert len({r["search_type_id"] for r in one}) < len(one), "no tie to break"
+    assert rows(7) == one
+
+
 def test_accepted_values(models):
     # dbt accepted_values mirrors
     st = {r["spotify_type"] for r in models["int_join_spotify_uris"].select("spotify_type").collect()}
