@@ -6,27 +6,27 @@ searched videos (spotify_elt.py:772-774,797,823,850; flushed at
 Spark shape: a parquet cache table ``(video_id, payload)`` where
 payload is the JSON-encoded match struct (F21: to_json/from_json with
 an explicit schema — the exact idiom the reference uses for Redis
-values).  A run left-joins its videos against the cache: hits
-reconstruct match rows directly from the payload (NO search
-round-trips — preserving the reference's API-cost property), misses
-run the engine; the union feeds the normal assembly, and the new
-cache is the old one plus the misses' results.  Keyed by video_id:
-the same video in two playlists is one cache entry, exactly one
-search — playlist-dependent fields (log_id, status, membership) are
-recomputed at assembly, never cached.
+values).  A run left-joins its library rows against the cache; only
+the keys that miss run the engine (NO search round-trips for hits —
+preserving the reference's API-cost property), and the new cache is
+the old one plus one entry per searched key.  Keyed by video_id: the
+same video in two playlists is one cache entry and exactly one search
+— the engine matches keys, and playlist-dependent fields (log_id,
+status, membership) are recomputed at assembly, never cached.
 
 One lookup for both passes: ``match_with_cache`` puts the video rows
 and the grouped other-playlist rows in one request frame, each row
 with its match context and cache key, and checkpoints that frame's
-left join against the cache once, eagerly, with a hit flag.  The hit
-rows, each pass's misses and the probes that skip the engine when a
-pass has nothing new are filters of that checkpoint, so the match
-rows (and every output and new cache entry read from them) never read
-the cache files the hits were decoded from.  ``save_cache`` may
-therefore replace those files as soon as ``match_with_cache``
-returns, and the outputs stay readable.  Only the old-entry half of
-the merged cache reads the old files, and ``save_cache`` finishes
-writing it before it removes them.
+left join against the cache once, eagerly, with a hit flag.  The
+hits, each pass's misses to search and the probes that skip the
+engine when a pass has nothing new are filters of that checkpoint.
+
+One decode path: every request row reads its key's JSON payload, a
+hit's from the checkpoint and a miss's from the new entry its search
+produced, and one ``from_json`` select decodes them all.  Nothing the
+outputs read touches the cache files, so ``save_cache`` may replace
+them as soon as ``match_with_cache`` returns; only the old-entry half
+of the merged cache reads them, and ``save_cache`` writes it first.
 """
 
 from __future__ import annotations
@@ -40,19 +40,14 @@ from musicflow_spark.matching.engine import MATCH_COLUMNS, MATCH_SCHEMA, MatchEn
 from musicflow_spark.session import empty_frame
 from musicflow_spark.sources.catalog import existing_table, replace_table
 
-#: the per-video payload serialized into cache JSON — everything in a
-#: match row except the per-library-row keys (log_id,
-#: user_playlist_id), which are run-dependent
-PAYLOAD_FIELDS = [
-    "search_type_id", "q", "spotify_uri", "album_uri", "item_title",
-    "item_artists_s", "item_duration_ms", "difference_ms", "track_match",
-    "total_tracks", "children", "found_on_try", "kind",
-]
+#: the per-key payload serialized into cache JSON — every match-row
+#: column but the log_id the search ran for
+PAYLOAD_FIELDS = [c for c in MATCH_COLUMNS if c != "log_id"]
 
 PAYLOAD_SCHEMA = ", ".join(f"{c} {MATCH_COLUMNS[c]}" for c in PAYLOAD_FIELDS)
 
-#: what a request row carries besides its pass's own columns: the
-#: match context the engine passes through to its match rows
+#: what a request row carries to ``assemble`` besides its payload:
+#: the library row's match context, recomputed every run
 CONTEXT = ("log_id", "user_playlist_id", "log_ids", "pass_no")
 
 #: one store, two key namespaces — video_id for the video pass and
@@ -74,36 +69,6 @@ def save_cache(cache: DataFrame, path: str) -> None:
     replace_table(cache, path)
 
 
-def cache_entries(searched: DataFrame) -> DataFrame:
-    """Searched rows (``match_with_cache``) -> cache rows: one per ``__key__``.
-
-    Matched keys store the JSON payload (lowest log_id wins when the
-    video sits in several playlists — payloads are identical by
-    construction).  Keys the search did NOT match are cached with a
-    null payload: the reference re-searches misses on every restart
-    (Redis only memoizes hits, spotify_elt.py:772-797); caching the
-    negative verdict is a deliberate improvement that makes warm
-    reruns zero-API-call — flagged here because it diverges."""
-    return (
-        searched.withColumn(
-            "__rn__",
-            F.row_number().over(
-                Window.partitionBy("__key__").orderBy(
-                    F.col("kind").isNull().cast("int"), "log_id"
-                )
-            ),
-        )
-        .filter(F.col("__rn__") == 1)
-        .select(
-            F.col("__key__").alias("video_id"),
-            F.when(
-                F.col("kind").isNotNull(),
-                F.to_json(F.struct(*[F.col(c) for c in PAYLOAD_FIELDS])),
-            ).alias("payload"),
-        )
-    )
-
-
 def match_with_cache(
     engine: MatchEngine,
     videos: DataFrame,
@@ -115,7 +80,7 @@ def match_with_cache(
 ) -> tuple[MatchResult, DataFrame]:
     """The matcher's one entry point: returns (result, merged_cache).
 
-    Cache hits never reach the CandidateSource; only miss videos run
+    Cache hits never reach the CandidateSource; only missed keys run
     the search cascade.  Assembly sees hits and misses together, so
     statuses / guarded upserts / side-effect sets behave exactly as a
     cold run over the same videos.  ``cache=None`` is that cold run:
@@ -133,11 +98,13 @@ def match_with_cache(
     reference memoizes that pass per playlist id in the same Redis db
     (spotify_elt.py:863-884).
 
-    Both passes share one lookup (the module docstring).  Each pass's
-    misses, in its own columns plus ``CONTEXT``, go to its engine
-    entry point, which never runs when the pass has no miss.  The
-    assembly and the flush read the hits' match rows (null
-    ``__key__``) plus one row per searched miss, matched or not."""
+    Both passes share one lookup (the module docstring).  A missed key
+    is searched once, for the lowest log_id that requests it, in its
+    pass's own columns plus ``log_id``; a pass with no miss never calls
+    its engine entry point.  A key searched and not matched is cached
+    with a null payload: the reference re-searches it on every restart
+    (spotify_elt.py:772-797), a deliberate divergence that makes warm
+    reruns zero-API-call."""
     spark = videos.sparkSession
     cache = cache if cache is not None else empty_frame(spark, CACHE_SCHEMA)
 
@@ -150,7 +117,7 @@ def match_with_cache(
         .withColumn("__key__", F.col("video_id"))
     )
     if grouped_others is not None:
-        passes.append((grouped_others.columns, engine.compute_matches_others))
+        passes.append(([*grouped_others.columns, "log_id"], engine.compute_matches_others))
         # a group's match row stands for its first log id
         groups = (
             grouped_others.withColumn("log_id", F.element_at("log_ids", 1))
@@ -160,39 +127,48 @@ def match_with_cache(
         )
         requests = requests.unionByName(groups, allowMissingColumns=True)
 
-    looked_up = requests.join(
-        cache.select(F.col("video_id").alias("__key__"), "payload", F.lit(True).alias("__hit__")),
-        "__key__",
-        "left",
-    ).localCheckpoint(eager=True)
-    payload = F.from_json("payload", PAYLOAD_SCHEMA)
-    hits = looked_up.filter(F.col("payload").isNotNull()).select(
-        *[payload[c].alias(c) if c in PAYLOAD_FIELDS else F.col(c) for c in MATCH_COLUMNS],
-        F.lit(None).cast("string").alias("__key__"),
+    # min, not first: the flag must not depend on row order
+    first = F.col("log_id") == F.min("log_id").over(Window.partitionBy("__key__"))
+    looked_up = (
+        requests.withColumn("__first__", first)
+        .join(
+            cache.select(F.col("video_id").alias("__key__"), "payload", F.lit(True).alias("__hit__")),
+            "__key__",
+            "left",
+        )
+        .localCheckpoint(eager=True)
     )
     misses = looked_up.filter(F.col("__hit__").isNull())
+    searched = misses.filter("__first__")
     computed = []
     for pass_no, (columns, compute) in enumerate(passes):
-        pass_misses = misses.filter(F.col("pass_no") == pass_no)
-        if not pass_misses.isEmpty():
-            own = [*columns, *(c for c in CONTEXT if c not in columns)]
-            computed.append(compute(pass_misses.select(*own)))
-    miss_matches = reduce(DataFrame.unionByName, computed, empty_frame(spark, MATCH_SCHEMA))
-    searched = misses.select("log_id", "pass_no", "__key__").join(
-        miss_matches, ["log_id", "pass_no"], "left"
+        pass_searched = searched.filter(F.col("pass_no") == pass_no)
+        if not pass_searched.isEmpty():
+            computed.append(compute(pass_searched.select(*columns)))
+    matches = reduce(DataFrame.unionByName, computed, empty_frame(spark, MATCH_SCHEMA))
+    # the flush and every output read the new entries: computed once,
+    # by whichever of them runs first
+    new_entries = (
+        searched.select("log_id", F.col("__key__").alias("video_id"))
+        .join(matches, "log_id", "left")
+        .select(
+            "video_id",
+            F.when(F.col("kind").isNotNull(), F.to_json(F.struct(*PAYLOAD_FIELDS))).alias("payload"),
+        )
+        .localCheckpoint(eager=False)
     )
 
-    # the flush and every output read the rows: computed once, by
-    # whichever of them runs first
-    rows = hits.unionByName(searched).localCheckpoint(eager=False)
-    result = engine.assemble(
-        rows.filter(F.col("kind").isNotNull()).drop("__key__"), liked_tracks, liked_albums
+    # every request row reads its key's payload: a hit's from the
+    # lookup, a miss's from its key's new entry
+    payloads = looked_up.filter(F.col("__hit__")).select(*CONTEXT, "payload").unionByName(
+        misses.select(*CONTEXT, "__key__")
+        .join(new_entries.withColumnRenamed("video_id", "__key__"), "__key__")
+        .drop("__key__")
     )
-    new_entries = cache_entries(rows.filter(F.col("__key__").isNotNull()))
-    # misses are disjoint from the cache by construction; keep the
-    # merge an explicit prefer-new anti-join rather than an arbitrary
-    # dropDuplicates so re-merging the same run is idempotent
-    merged = cache.join(new_entries.select("video_id"), "video_id", "left_anti").unionByName(
-        new_entries
+    payload = F.from_json("payload", PAYLOAD_SCHEMA)
+    rows = payloads.filter(F.col("payload").isNotNull()).select(
+        *CONTEXT, *[payload[c].alias(c) for c in PAYLOAD_FIELDS]
     )
-    return result, merged
+    result = engine.assemble(rows, liked_tracks, liked_albums)
+    # a new entry's key missed the cache, so the union holds each key once
+    return result, cache.unionByName(new_entries)

@@ -23,8 +23,9 @@ Here each stage is a DataFrame transform:
 Cost note (SURVEY §7 watch-list #4): one eager cascade evaluates every
 strategy set-at-a-time, which is optimal when search is a local
 catalog join.  The reference's miss-driven API-call saving lives one
-layer up: the match cache (cache.py) hands the engine only the videos
-it has not seen, so search calls stay limited to cache misses.
+layer up: the match cache (cache.py) hands the engine one row per key
+it has not seen, so search calls stay limited to cache misses and a
+video in several playlists is searched once.
 
 The engine's eager ``localCheckpoint``s (each pass's prepared frame
 and each kind's winners, seven when both passes search) and the
@@ -93,14 +94,13 @@ OTHERS_COLLECTION_STRATEGIES = COLLECTION_STRATEGIES + [
 _CHILD_T = CANDIDATE_SCHEMA["children"].dataType.simpleString()
 
 #: the match row, column -> type: what ``compute_matches`` /
-#: ``compute_matches_others`` return and ``assemble`` reads (the cache
-#: layer adds the request's ``__key__``)
+#: ``compute_matches_others`` return per matched key — the searched
+#: row's ``log_id``, then the cached payload (``cache.PAYLOAD_FIELDS``)
 MATCH_COLUMNS = {
-    "log_id": "bigint", "user_playlist_id": "string", "search_type_id": "bigint",
-    "q": "string", "spotify_uri": "string", "album_uri": "string", "item_title": "string",
-    "item_artists_s": "string", "item_duration_ms": "bigint", "difference_ms": "bigint",
-    "track_match": "bigint", "total_tracks": "bigint", "children": _CHILD_T,
-    "log_ids": "array<bigint>", "pass_no": "int", "found_on_try": "bigint", "kind": "string",
+    "log_id": "bigint", "search_type_id": "bigint", "q": "string", "spotify_uri": "string",
+    "album_uri": "string", "item_title": "string", "item_artists_s": "string",
+    "item_duration_ms": "bigint", "difference_ms": "bigint", "track_match": "bigint",
+    "total_tracks": "bigint", "children": _CHILD_T, "found_on_try": "bigint", "kind": "string",
 }
 MATCH_SCHEMA = ", ".join(f"{c} {t}" for c, t in MATCH_COLUMNS.items())
 
@@ -121,7 +121,7 @@ class MatchResult:
     #: like_playlists :935-943; it stores the playlist id, the engine
     #: keeps the uri like every other side-effect set)
     playlists_to_like: DataFrame
-    playlist_additions: DataFrame  # (user_playlist_id, track_uri)
+    playlist_additions: DataFrame  # tracks to add to the user's mapped playlists
 
 
 def _q_expr(template: str) -> F.Column:
@@ -172,12 +172,12 @@ class MatchEngine:
         playlist branches.  The cache layer (cache.py,
         ``match_with_cache``) calls it for the videos it has not seen.
 
-        videos: (youtube_playlist_id, video_id, title, author,
-        description, duration_ms) — one row per library entry of the
-        current user (reference extract_videos, spotify_elt.py:92-126)
-        — plus the match context each row carries from the cache
-        layer: log_id, user_playlist_id (reference get_user_playlist_id
-        :134-138, 'LM' when unmapped), log_ids and pass_no."""
+        videos: (log_id, youtube_playlist_id, video_id, title, author,
+        description, duration_ms) — the current user's library rows
+        (reference extract_videos, spotify_elt.py:92-126), one per
+        video: the row with the video's lowest log_id stands for every
+        playlist that holds it.  ``log_id`` is the only key the match
+        rows carry back."""
         # prepared and the per-kind winner sets each feed 2+ downstream
         # consumers (the album winners gate the playlist pass; assembly
         # unions all three and fans into 7 outputs).  Materialize them
@@ -209,16 +209,16 @@ class MatchEngine:
 
         grouped: (youtube_playlist_id, title, author, total_tracks,
         track_titles: array<string> of LOWERCASED video titles in
-        log-id order, log_ids: array<bigint> sorted, duration_ms:
-        summed video duration) — the extract_other_playlists grouping —
-        plus the match context from the cache layer: log_id (the
-        group's first log id), user_playlist_id ('LM') and pass_no.
+        log-id order, duration_ms: summed video duration) — the
+        extract_other_playlists grouping, one row per playlist — plus
+        log_id, the group's first library row id.  Other columns pass
+        unread.
 
-        Match rows come back at GROUP grain (one log_id per group, so
+        Match rows come back at GROUP grain, keyed by that log_id (so
         statuses dedup per group exactly like the reference's shared
-        log membership probe); assemble() fans log rows out per log_id
-        afterwards, all carrying the group's status (:886-889,914-916
-        loop log_ids with one status)."""
+        log membership probe); assemble() fans log rows out per
+        library row afterwards, all carrying the group's status
+        (:886-889,914-916 loop the group's log ids with one status)."""
         prepared = _prepare_titles(grouped).localCheckpoint(eager=True)
         return self._albums_then_playlists(
             prepared, OTHERS_COLLECTION_STRATEGIES, grouped=True
@@ -279,18 +279,15 @@ class MatchEngine:
     ) -> DataFrame:
         """One kind's cascade: strategy rows -> search -> the top
         candidate per query -> score -> the first accepted strategy
-        wins.  Every kind projects the same match-row columns, the
-        rows' match context included; the caller supplies the search
-        limit and the scores (``_track_scores`` / ``_collection_scores``)."""
+        wins.  Every kind projects the same match-row columns
+        (``MATCH_COLUMNS``); the caller supplies the search limit and
+        the scores (``_track_scores`` / ``_collection_scores``)."""
         strat = self._strategy_rows(videos, strategies)
         cands = self.source.search(strat.select("qid", "q"), kind, limit).filter(
             F.col("result_rank") == 1
         )
         scored = strat.join(cands, "qid", "inner").select(
             "log_id",
-            "user_playlist_id",
-            "log_ids",
-            "pass_no",
             "priority",
             "search_type_id",
             "q",
@@ -424,8 +421,10 @@ class MatchEngine:
         liked_albums: DataFrame | None = None,
     ) -> MatchResult:
         """Statuses, log shaping, entity tables, and side-effect sets
-        from a unioned match-row frame (the cache layer's hit+miss
-        union, ``match_with_cache``)."""
+        from one decoded row per matched library request (the cache
+        layer's hit+miss union, ``match_with_cache``): the payload
+        fields plus the request's context — log_id, user_playlist_id,
+        log_ids (a group's library rows, null for a video) and pass_no."""
         spark = matches.sparkSession
         liked_tracks = liked_tracks or empty_frame(spark, "uri string")
         liked_albums = liked_albums or empty_frame(spark, "uri string")
@@ -443,9 +442,7 @@ class MatchEngine:
         # pass (spotify_elt.py:1135-1143) and its during-run dedup is
         # insertion order over the shared log lists — pass_no first
         # mirrors that, log_id orders within a pass
-        w_dup = Window.partitionBy("spotify_uri", "user_playlist_id").orderBy(
-            F.coalesce(F.col("pass_no"), F.lit(0)), "log_id"
-        )
+        w_dup = Window.partitionBy("spotify_uri", "user_playlist_id").orderBy("pass_no", "log_id")
         with_status = (
             matches.join(
                 F.broadcast(liked),

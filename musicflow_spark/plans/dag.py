@@ -143,51 +143,39 @@ def musicflow_pipeline(
         }
 
     def match(ctx: dict) -> dict[str, DataFrame]:
-        lib = ctx["src__youtube_library"]
-        yp = ctx["src__youtube_playlists"]
-        videos = (
-            lib.join(yp, "youtube_playlist_id")
-            .filter((F.col("author") == cfg.your_channel_name) | F.col("author").isNull())
-            .select("id", "youtube_playlist_id", "video_id")
-            .join(ctx["src__youtube_videos"], "video_id")
-            .select(
-                F.col("id").alias("log_id"), "youtube_playlist_id", "video_id",
-                "title", "author", "description", "duration_ms",
-            )
-        )
-        playlist_map = sources["playlist_ids"].select(
-            "youtube_playlist_id", F.col("spotify_playlist_id").alias("user_playlist_id")
-        )
-        # second pass: OTHER users' playlists matched as whole albums/
-        # playlists — the extract_other_playlists grouping
-        # (spotify_elt.py:58-89): per playlist, video titles lowered in
-        # log-id order, log ids, summed duration
-        others_lib = (
-            lib.join(
-                yp.select(
+        # one library join: the user's own rows (author = your channel,
+        # or null for the 'LM' pseudo-playlist) are the video pass, the
+        # other users' playlists the second pass — the
+        # extract_other_playlists grouping (spotify_elt.py:58-89): per
+        # playlist, video titles lowered in log-id order, log ids,
+        # summed duration
+        library = (
+            ctx["src__youtube_library"]
+            .join(
+                ctx["src__youtube_playlists"].select(
                     "youtube_playlist_id",
                     F.col("title").alias("pl_title"),
                     F.col("author").alias("pl_author"),
                 ),
                 "youtube_playlist_id",
             )
-            .filter(
-                F.col("pl_author").isNotNull()
-                & (F.col("pl_author") != cfg.your_channel_name)
-            )
-            .join(
-                ctx["src__youtube_videos"].select(
-                    "video_id", F.col("title").alias("v_title"), "duration_ms"
-                ),
-                "video_id",
-            )
+            .join(ctx["src__youtube_videos"], "video_id")
+        )
+        own = (F.col("pl_author") == cfg.your_channel_name) | F.col("pl_author").isNull()
+        videos = library.filter(own).select(
+            F.col("id").alias("log_id"), "youtube_playlist_id", "video_id",
+            "title", "author", "description", "duration_ms",
+        )
+        playlist_map = sources["playlist_ids"].select(
+            "youtube_playlist_id", F.col("spotify_playlist_id").alias("user_playlist_id")
         )
         grouped_others = (
-            others_lib.groupBy("youtube_playlist_id", "pl_title", "pl_author")
+            library.filter(~own)
+            .groupBy("youtube_playlist_id", "pl_title", "pl_author")
             .agg(
                 F.count(F.lit(1)).alias("total_tracks"),
                 F.array_sort(
-                    F.collect_list(F.struct(F.col("id"), F.lower("v_title").alias("t")))
+                    F.collect_list(F.struct(F.col("id"), F.lower("title").alias("t")))
                 ).alias("__o__"),
                 F.sum("duration_ms").alias("duration_ms"),
             )

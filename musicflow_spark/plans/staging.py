@@ -12,27 +12,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-_STAGING_COLUMNS: dict[str, list[str]] = {
-    "youtube_playlists": ["youtube_playlist_id", "type", "title", "author", "year"],
-    "youtube_videos": ["video_id", "type", "title", "author", "description", "duration_ms"],
-    "youtube_library": ["id", "youtube_playlist_id", "video_id"],
-    "search_types": ["search_type_id", "search_type_name"],
-    "spotify_albums": ["album_uri", "album_title", "album_artists", "duration_ms", "total_tracks"],
-    "spotify_playlists_others": ["playlist_uri", "playlist_title", "playlist_owner", "duration_ms", "total_tracks"],
-    "spotify_tracks": ["track_uri", "album_uri", "playlist_uri", "track_title", "track_artists", "duration_ms"],
-    "spotify_playlists": ["spotify_playlist_id", "title"],
-    "playlist_ids": ["id", "youtube_playlist_id", "spotify_playlist_id"],
-    "spotify_log": [
-        "log_id", "album_uri", "playlist_uri", "track_uri", "found_on_try",
-        "difference_ms", "track_match", "total_tracks", "q", "search_type_id", "status",
-    ],
-}
+from musicflow_spark.schemas import MUSICFLOW_SCHEMAS
 
 
 def stage(sources: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """source tables -> staged views (column-projected)."""
+    """source tables -> staged views, each projected to its table's
+    declared columns (``schemas.MUSICFLOW_SCHEMAS``), in order."""
     return {
-        name: sources[name].select(*cols)
-        for name, cols in _STAGING_COLUMNS.items()
+        name: sources[name].select(*schema.fieldNames())
+        for name, schema in MUSICFLOW_SCHEMAS.items()
         if name in sources
     }

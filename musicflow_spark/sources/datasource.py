@@ -35,13 +35,15 @@ subclass overriding ``_get``.
 from __future__ import annotations
 
 import json
+import math
 import time
 import urllib.error
 import urllib.parse
 import urllib.request
 from collections.abc import Iterator, Sequence
-
 from dataclasses import dataclass
+from datetime import datetime, timezone
+from email.utils import parsedate_to_datetime
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -54,6 +56,41 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 _RETRYABLE = {429, 500, 502, 503, 504}
+
+
+def retry_after_s(value: str | None, fallback: float) -> float:
+    """``Retry-After`` delay-seconds or HTTP-date (RFC 9110 §10.2.3) ->
+    seconds to wait, at least 0; ``fallback`` when absent or neither."""
+    try:
+        seconds = float(value)
+    except (TypeError, ValueError):
+        try:
+            when = parsedate_to_datetime(value)
+        except (TypeError, ValueError):
+            return fallback
+        if when.tzinfo is None:
+            when = when.replace(tzinfo=timezone.utc)
+        seconds = (when - datetime.now(timezone.utc)).total_seconds()
+    return max(seconds, 0.0) if math.isfinite(seconds) else fallback
+
+
+def request_with_retry(
+    url: str, headers: dict, max_retries: int, body: bytes | None = None
+) -> bytes:
+    """GET ``url`` (POST when ``body`` is given) -> the response body;
+    transient codes retry with ``Retry-After`` or a doubling delay."""
+    delay = 0.2
+    for attempt in range(max_retries + 1):
+        try:
+            req = urllib.request.Request(url, data=body, headers=headers)
+            with urllib.request.urlopen(req) as r:
+                return r.read()
+        except urllib.error.HTTPError as e:
+            if e.code not in _RETRYABLE or attempt == max_retries:
+                raise
+            time.sleep(retry_after_s(e.headers.get("Retry-After"), delay))
+            delay = min(delay * 2, 5.0)
+    raise RuntimeError("unreachable")
 
 
 class OffsetSlice(InputPartition):
@@ -110,19 +147,7 @@ class OffsetRestReader(DataSourceReader):
         return [OffsetSlice(offsets[i::n]) for i in range(n)]
 
     def _get(self, url: str) -> dict:
-        delay = 0.2
-        for attempt in range(self.max_retries + 1):
-            try:
-                req = urllib.request.Request(url, headers=self.headers)
-                with urllib.request.urlopen(req) as r:
-                    return json.loads(r.read())
-            except urllib.error.HTTPError as e:
-                if e.code not in _RETRYABLE or attempt == self.max_retries:
-                    raise
-                ra = e.headers.get("Retry-After")
-                time.sleep(float(ra) if ra else delay)
-                delay = min(delay * 2, 5.0)
-        raise RuntimeError("unreachable")
+        return json.loads(request_with_retry(url, self.headers, self.max_retries))
 
     def read(self, partition: OffsetSlice) -> Iterator[tuple]:
         for off in partition.offsets:
@@ -195,25 +220,8 @@ class BatchRestWriter(DataSourceWriter):
             raise ValueError(f"need batch_size >= 1, got {self.batch_size}")
 
     def _post(self, url: str, payload: dict) -> None:
-        body = json.dumps(payload).encode()
-        delay = 0.2
-        for attempt in range(self.max_retries + 1):
-            try:
-                req = urllib.request.Request(
-                    url,
-                    data=body,
-                    headers={"Content-Type": "application/json", **self.headers},
-                    method="POST",
-                )
-                with urllib.request.urlopen(req):
-                    return
-            except urllib.error.HTTPError as e:
-                if e.code not in _RETRYABLE or attempt == self.max_retries:
-                    raise
-                ra = e.headers.get("Retry-After")
-                time.sleep(float(ra) if ra else delay)
-                delay = min(delay * 2, 5.0)
-        raise RuntimeError("unreachable")
+        headers = {"Content-Type": "application/json", **self.headers}
+        request_with_retry(url, headers, self.max_retries, json.dumps(payload).encode())
 
     def write(self, iterator: Iterator) -> RestCommit:
         from pyspark import TaskContext

@@ -180,6 +180,59 @@ def test_cache_key_is_video_not_library_row(spark, setup):
     assert cache.filter(F.col("payload").isNotNull()).count() == matched_videos
 
 
+#: the cold log of ``setup``'s library, one row per matched library
+#: row in ``LOG_COLS`` order: searching each key once leaves it as it
+#: was when every library row ran its own search
+COLD_LOG = [
+    (0, "spotify:track:t01", None, None, 1, 0, "track:Bohemian Song  artist:QueenBand", 1000, 1, 1, "saved"),
+    (1, "spotify:track:t03", None, None, 1, 0, "track:Moonlight    Piano Version artist:PianoChan", 1000, 1, 1, "saved"),
+    (2, "spotify:track:t01", None, None, 1, 0, "track:Bohemian Song  artist:QueenBand", 1000, 1, 1, "saved"),
+    (3, "spotify:track:t02", None, None, 1, 0, "track:Stairway to Jazz  artist:LedBand", 2000, 1, 1, "saved"),
+    (4, "spotify:track:t04", None, None, 1, 0, "track:Hotel Coastline 'Remastered ' artist:EaglesFan", 1000, 1, 1, "saved"),
+    (5, "spotify:track:t05", None, None, 1, 0, "track:Take Five  The Classic artist:BrubeckArchive", 1000, 1, 1, "saved"),
+    (6, "spotify:track:t08", None, None, 1, 0, "track:Autumn Leaves artist:JazzHub", 500, 1, 1, "saved"),
+    (7, "spotify:track:t08", None, None, 1, 0, "track:Autumn Leaves artist:JazzHub", 500, 1, 1, "saved"),
+    (8, None, "spotify:album:a10", None, 1, 2, "Dark Side  ", 0, 4, 4, "saved"),
+]
+
+
+class CountingEngine(MatchEngine):
+    """Keeps the frame each video-pass search receives."""
+
+    def __init__(self, source):
+        super().__init__(CFG, source)
+        self.inputs = []
+
+    def compute_matches(self, videos):
+        self.inputs.append(videos)
+        return super().compute_matches(videos)
+
+
+def test_a_key_is_searched_once(spark, setup):
+    """v01 sits in LM (log 0) and PL_rock (log 2): the engine searches
+    it once, for log 0, and both library rows still get their own log
+    row, status and playlist."""
+    source, videos, playlist_map = setup
+    engine = CountingEngine(source)
+    result, _ = match_with_cache(engine, videos, playlist_map)
+
+    (searched,) = engine.inputs
+    per_video = searched.groupBy("video_id").count()
+    assert per_video.filter(F.col("count") > 1).isEmpty()
+    assert searched.count() == videos.select("video_id").distinct().count()
+    assert {r["log_id"] for r in searched.filter(F.col("video_id") == "v01").collect()} == {0}
+
+    log = {r["log_id"]: r for r in result.log.collect()}
+    assert log[0]["track_uri"] == log[2]["track_uri"] == "spotify:track:t01"
+    assert log[0]["status"] == log[2]["status"] == "saved"
+    # log 0 is the LM row (liked), log 2 the PL_rock row (added to sp_rock)
+    assert "spotify:track:t01" in {r["track_uri"] for r in result.tracks_to_like.collect()}
+    assert ("sp_rock", "spotify:track:t01") in {
+        tuple(r) for r in result.playlist_additions.collect()
+    }
+    assert _log_rows(result) == COLD_LOG
+
+
 def _grouped_others(spark):
     """Two other-user playlists: PL_other1 matches, PL_other2 does not."""
     return spark.createDataFrame(

@@ -39,6 +39,7 @@ PAGES = {
     "p3": ([{"id": 5, "name": "e"}, {"id": 6, "name": "f"}], None),
 }
 OFFSET_TOTAL = 23
+BUSY_UNTIL = "Wed, 21 Oct 2015 07:28:00 GMT"
 
 
 class _State:
@@ -56,12 +57,26 @@ class _State:
         self.stream_total = 0  # mutable: tests grow it between batches
         self.sink_events: list = []  # ordered ("data", items) / ("commit", body)
         self.sink_429s_left = 0
+        self.busy_left: dict[str, int] = {}  # method -> 503s still to send
+        self.busy_served: dict[str, int] = {}
 
 
 def _make_handler(state: _State):
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *a):  # silence per-request stderr spam
             pass
+
+        def _busy(self):
+            """/busy: 503 with an HTTP-date Retry-After (a past date, so
+            a client waits 0 s) while the method has 503s left."""
+            with state.lock:
+                m = self.command
+                state.busy_served[m] = state.busy_served.get(m, 0) + 1
+                left = state.busy_left.get(m, 0)
+                state.busy_left[m] = max(left - 1, 0)
+            if left > 0:
+                return self._json(503, {"error": "busy"}, {"Retry-After": BUSY_UNTIL})
+            return self._json(200, {"items": [{"id": 1, "name": "a"}]})
 
         def _json(self, code: int, payload, headers: dict | None = None):
             body = json.dumps(payload).encode()
@@ -80,6 +95,8 @@ def _make_handler(state: _State):
         def do_GET(self):  # noqa: N802 (BaseHTTPRequestHandler API)
             url = urllib.parse.urlparse(self.path)
             q = urllib.parse.parse_qs(url.query)
+            if url.path == "/busy":
+                return self._busy()
             if url.path == "/token":
                 with state.lock:
                     state.minted += 1
@@ -144,6 +161,8 @@ def _make_handler(state: _State):
                 self.rfile.read(int(self.headers.get("Content-Length", "0")) or 0)
                 or b"{}"
             )
+            if url.path == "/busy":
+                return self._busy()
             if url.path == "/sink":
                 with state.lock:
                     if state.sink_429s_left > 0:
@@ -403,6 +422,26 @@ def test_python_datasource_retries_transient_errors(spark, rest_server):
     assert len(payload["items"]) == 3
     with pytest.raises(urllib.error.HTTPError):
         rd._get(f"{base}/nope")
+
+
+def test_python_datasource_retries_an_http_date_retry_after(spark, rest_server):
+    """RFC 9110 lets Retry-After be an HTTP-date, not only seconds: a
+    503 carrying one is retried like any transient error, by the
+    reader's GET and the writer's POST alike."""
+    base, state = rest_server
+    from pyspark.sql.types import StructType
+
+    from musicflow_spark.sources.datasource import BatchRestWriter, OffsetRestReader
+
+    schema = StructType.fromDDL(ITEM_SCHEMA)
+    with state.lock:
+        state.busy_left = {"GET": 1, "POST": 1}
+        state.busy_served = {}
+    rd = OffsetRestReader(schema, {"url": f"{base}/busy", "total": "1"})
+    assert rd._get(f"{base}/busy")["items"] == [{"id": 1, "name": "a"}]
+    BatchRestWriter(schema, {"url": f"{base}/busy"})._post(f"{base}/busy", {"items": []})
+    with state.lock:
+        assert state.busy_served == {"GET": 2, "POST": 2}
 
 
 def test_python_datasource_streams_incrementally(spark, rest_server, tmp_path):
