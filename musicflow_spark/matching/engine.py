@@ -43,6 +43,7 @@ that read it do not replay the match rows' union.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
@@ -126,28 +127,9 @@ class MatchResult:
 
 def _q_expr(template: str) -> F.Column:
     """Render a strategy template from the prepared video columns."""
-    out: list[F.Column] = []
-    rest = template
-    keys = (
-        ("{fixed}", F.col("fixed_title")),
-        ("{raw}", F.col("title")),
-        ("{artist}", F.col("artist")),
-        ("{author}", F.col("author")),
-    )
-    while rest:
-        for key, col in keys:
-            if rest.startswith(key):
-                out.append(col)
-                rest = rest[len(key) :]
-                break
-        else:
-            nxt = min(
-                [i for i in (rest.find(k) for k, _ in keys) if i >= 0],
-                default=len(rest),
-            )
-            out.append(F.lit(rest[:nxt]))
-            rest = rest[nxt:]
-    return F.concat(*out)
+    keys = {"{fixed}": "fixed_title", "{raw}": "title", "{artist}": "artist", "{author}": "author"}
+    parts = re.split(r"(\{\w+\})", template)
+    return F.concat(*[F.col(keys[p]) if p in keys else F.lit(p) for p in parts if p])
 
 
 def _prepare_titles(frame: DataFrame) -> DataFrame:
@@ -185,12 +167,9 @@ class MatchEngine:
         # the lineage here keeps Catalyst analysis linear instead of
         # re-planning the whole cascade per consumer.
         prepared = _prepare_titles(videos).localCheckpoint(eager=True)
-        th = self.cfg.threshold_ms
-        if th is None:
-            track_videos, coll_videos = prepared, prepared.limit(0)
-        else:
-            track_videos = prepared.filter(F.col("duration_ms") < th)
-            coll_videos = prepared.filter(F.col("duration_ms") >= th)
+        routed = self.cfg.estimated_type(F.col("duration_ms"))
+        track_videos = prepared.filter(routed == "Track")
+        coll_videos = prepared.filter(routed == "Album/Playlist")
 
         tracks, collections = run_concurrently(
             lambda: self._match_kind(
@@ -257,22 +236,9 @@ class MatchEngine:
             for priority, st_id, tpl, only_diff in strategies
         ]
         n = len(strategies)
-        return (
-            videos.withColumn(
-                "__strat__",
-                F.filter(F.array(*structs), lambda s: s.isNotNull()),
-            )
-            .select("*", F.explode("__strat__").alias("s"))
-            .drop("__strat__")
-            .select(
-                "*",
-                F.col("s.priority").alias("priority"),
-                F.col("s.search_type_id").alias("search_type_id"),
-                F.col("s.q").alias("q"),
-            )
-            .drop("s")
-            .withColumn("qid", F.col("log_id") * n + F.col("priority"))
-        )
+        return videos.select(
+            "*", F.inline(F.filter(F.array(*structs), lambda s: s.isNotNull()))
+        ).withColumn("qid", F.col("log_id") * n + F.col("priority"))
 
     def _match_kind(
         self, videos: DataFrame, kind: str, strategies, limit: int, scores: dict[str, F.Column]
@@ -496,39 +462,31 @@ class MatchEngine:
             F.col("item_duration_ms").alias("duration_ms"),
             F.col("log_id"),
         )
-        album_children = (
-            with_status.filter(F.col("kind") == "album")
-            .select("spotify_uri", "log_id", "item_artists_s", F.explode("children").alias("c"))
+        is_album = F.col("kind") == "album"
+        children = (
+            with_status.filter(F.col("kind") != "track")
+            .select("*", F.explode("children").alias("c"))
             .select(
                 F.col("c.track_uri").alias("track_uri"),
-                F.col("spotify_uri").alias("album_uri"),
-                F.lit(None).cast("string").alias("playlist_uri"),
+                # album children sit on the album; playlist children
+                # keep their OWN album_uri + artists (log_other_playlist
+                # tracks_info, spotify_elt.py:727-739 stores each
+                # child's artists and album)
+                F.when(is_album, F.col("spotify_uri"))
+                .otherwise(F.col("c.album_uri"))
+                .alias("album_uri"),
+                F.when(~is_album, F.col("spotify_uri")).alias("playlist_uri"),
                 F.col("c.track_title").alias("track_title"),
-                # the ALBUM's artists on every child — "not always
-                # correct, but we don't iterate for every artist on
-                # every track" (log_album spotify_elt.py:544-556)
-                F.col("item_artists_s").alias("track_artists"),
+                # the ALBUM's artists on every album child — "not
+                # always correct, but we don't iterate for every artist
+                # on every track" (log_album spotify_elt.py:544-556)
+                F.when(is_album, F.col("item_artists_s"))
+                .otherwise(F.coalesce(F.col("c.track_artists"), F.lit("")))
+                .alias("track_artists"),
                 F.col("c.duration_ms").alias("duration_ms"),
                 F.col("log_id"),
             )
         )
-        playlist_children = (
-            with_status.filter(F.col("kind") == "playlist")
-            .select("spotify_uri", "log_id", F.explode("children").alias("c"))
-            .select(
-                F.col("c.track_uri").alias("track_uri"),
-                # playlist children keep their OWN album_uri + artists
-                # (log_other_playlist tracks_info, spotify_elt.py:
-                # 727-739 stores each child's artists and album)
-                F.col("c.album_uri").alias("album_uri"),
-                F.col("spotify_uri").alias("playlist_uri"),
-                F.col("c.track_title").alias("track_title"),
-                F.coalesce(F.col("c.track_artists"), F.lit("")).alias("track_artists"),
-                F.col("c.duration_ms").alias("duration_ms"),
-                F.col("log_id"),
-            )
-        )
-        all_tracks = track_rows.unionByName(album_children).unionByName(playlist_children)
         # guarded upsert: prefer rows carrying a playlist_uri, then
         # first write (log order) — reference log_track :345-355,
         # log_album :531-541, log_other_playlist :735-741
@@ -536,47 +494,38 @@ class MatchEngine:
             F.col("playlist_uri").isNull().cast("int"), "log_id"
         )
         tracks = (
-            all_tracks.withColumn("rn", F.row_number().over(w_upsert))
+            track_rows.unionByName(children)
+            .withColumn("rn", F.row_number().over(w_upsert))
             .filter(F.col("rn") == 1)
             .drop("rn", "log_id")
         )
 
-        w_first = Window.partitionBy("spotify_uri").orderBy("log_id")
-        albums = (
-            with_status.filter(F.col("kind") == "album")
-            .withColumn("rn", F.row_number().over(w_first))
-            .filter(F.col("rn") == 1)
-            .select(
-                F.col("spotify_uri").alias("album_uri"),
-                F.col("item_title").alias("album_title"),
-                F.col("item_artists_s").alias("album_artists"),
-                F.col("item_duration_ms").alias("duration_ms"),
-                F.size("children").cast("long").alias("total_tracks"),
+        def first_per_uri(kind: str, uri: str, title: str, owner: str) -> DataFrame:
+            """Each matched ``kind`` uri's first write, in log order."""
+            w_first = Window.partitionBy("spotify_uri").orderBy("log_id")
+            return (
+                with_status.filter(F.col("kind") == kind)
+                .withColumn("rn", F.row_number().over(w_first))
+                .filter(F.col("rn") == 1)
+                .select(
+                    F.col("spotify_uri").alias(uri),
+                    F.col("item_title").alias(title),
+                    F.col("item_artists_s").alias(owner),
+                    F.col("item_duration_ms").alias("duration_ms"),
+                    F.size("children").cast("long").alias("total_tracks"),
+                )
             )
-        )
-        playlists_others = (
-            with_status.filter(F.col("kind") == "playlist")
-            .withColumn("rn", F.row_number().over(w_first))
-            .filter(F.col("rn") == 1)
-            .select(
-                F.col("spotify_uri").alias("playlist_uri"),
-                F.col("item_title").alias("playlist_title"),
-                F.col("item_artists_s").alias("playlist_owner"),
-                F.col("item_duration_ms").alias("duration_ms"),
-                F.size("children").cast("long").alias("total_tracks"),
-            )
-        )
 
+        # ---- side-effect sets: what to like (saved via 'LM') and what
+        # to add to the user's mapped playlists
         saved = with_status.filter(F.col("status") == "saved")
-        tracks_to_like = saved.filter(
-            (F.col("kind") == "track") & (F.col("user_playlist_id") == "LM")
-        ).select(F.col("spotify_uri").alias("track_uri"))
-        albums_to_like = saved.filter(
-            (F.col("kind") == "album") & (F.col("user_playlist_id") == "LM")
-        ).select(F.col("spotify_uri").alias("album_uri"))
-        playlists_to_like = saved.filter(
-            (F.col("kind") == "playlist") & (F.col("user_playlist_id") == "LM")
-        ).select(F.col("spotify_uri").alias("playlist_uri"))
+        liked_saves = saved.filter(F.col("user_playlist_id") == "LM")
+        to_like = {
+            kind: liked_saves.filter(F.col("kind") == kind).select(
+                F.col("spotify_uri").alias(f"{kind}_uri")
+            )
+            for kind in ("track", "album", "playlist")
+        }
         direct_adds = saved.filter(
             (F.col("kind") == "track") & (F.col("user_playlist_id") != "LM")
         ).select("user_playlist_id", F.col("spotify_uri").alias("track_uri"))
@@ -592,11 +541,13 @@ class MatchEngine:
         return MatchResult(
             log=log,
             tracks=tracks,
-            albums=albums,
-            playlists_others=playlists_others,
-            tracks_to_like=tracks_to_like,
-            albums_to_like=albums_to_like,
-            playlists_to_like=playlists_to_like,
+            albums=first_per_uri("album", "album_uri", "album_title", "album_artists"),
+            playlists_others=first_per_uri(
+                "playlist", "playlist_uri", "playlist_title", "playlist_owner"
+            ),
+            tracks_to_like=to_like["track"],
+            albums_to_like=to_like["album"],
+            playlists_to_like=to_like["playlist"],
             playlist_additions=playlist_additions,
         )
 

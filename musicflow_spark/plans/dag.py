@@ -41,6 +41,7 @@ from graphlib import TopologicalSorter
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from musicflow_spark.schemas import MUSICFLOW_SCHEMAS
 from musicflow_spark.session import run_concurrently
 from musicflow_spark.sources.catalog import replace_table
 
@@ -111,6 +112,30 @@ class Pipeline:
         return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
+#: every source table the sync reads
+SYNC_SOURCES = (
+    "youtube_playlists", "youtube_videos", "youtube_library",
+    "search_types", "spotify_playlists", "playlist_ids",
+)
+
+
+def check_source_contracts(sources: dict[str, DataFrame]) -> None:
+    """Fail at the edge on a broken input contract: each sync source
+    must carry its ``schemas.MUSICFLOW_SCHEMAS`` columns and types
+    (nullability aside; extra columns pass).  Reads schemas only, so no
+    job runs; one ``ValueError`` lists each missing or mistyped column."""
+    problems = []
+    for name in SYNC_SOURCES:
+        actual = {f.name: f.dataType.simpleString() for f in sources[name].schema.fields}
+        for want in MUSICFLOW_SCHEMAS[name].fields:
+            expected = want.dataType.simpleString()
+            if actual.get(want.name) != expected:
+                got = actual.get(want.name, "no such column")
+                problems.append(f"{name}.{want.name}: expected {expected}, got {got}")
+    if problems:
+        raise ValueError("source contract broken:\n  " + "\n  ".join(problems))
+
+
 def musicflow_pipeline(
     spark: SparkSession,
     sources: dict[str, DataFrame],
@@ -128,10 +153,16 @@ def musicflow_pipeline(
     As in dbt_project.yml:24-33, the engine tables and the marts are
     tables and every other model is ephemeral."""
     from musicflow_spark.matching import MatchEngine, load_cache, match_with_cache, save_cache
+    from musicflow_spark.plans.intermediate import int_useful_youtube_library
     from musicflow_spark.plans.pipeline import MARTS, build_all
     from musicflow_spark.sources import ingest
 
+    def synced(ctx: dict) -> dict[str, DataFrame]:
+        """The sync's sources, the extracted tables in place of theirs."""
+        return {n: ctx.get(f"src__{n}", sources[n]) for n in SYNC_SOURCES}
+
     def extract(ctx: dict) -> dict[str, DataFrame]:
+        check_source_contracts(sources)
         playlists = ingest.filter_visible_playlists(sources["youtube_playlists"])
         videos = ingest.dedup_by_key(
             ingest.filter_available_videos(sources["youtube_videos"]), "video_id"
@@ -143,25 +174,13 @@ def musicflow_pipeline(
         }
 
     def match(ctx: dict) -> dict[str, DataFrame]:
-        # one library join: the user's own rows (author = your channel,
-        # or null for the 'LM' pseudo-playlist) are the video pass, the
-        # other users' playlists the second pass — the
+        # the models' library join: the user's own rows are the video
+        # pass, the other users' playlists the second pass — the
         # extract_other_playlists grouping (spotify_elt.py:58-89): per
         # playlist, video titles lowered in log-id order, log ids,
         # summed duration
-        library = (
-            ctx["src__youtube_library"]
-            .join(
-                ctx["src__youtube_playlists"].select(
-                    "youtube_playlist_id",
-                    F.col("title").alias("pl_title"),
-                    F.col("author").alias("pl_author"),
-                ),
-                "youtube_playlist_id",
-            )
-            .join(ctx["src__youtube_videos"], "video_id")
-        )
-        own = (F.col("pl_author") == cfg.your_channel_name) | F.col("pl_author").isNull()
+        library = int_useful_youtube_library(synced(ctx), cfg)
+        own = cfg.owns(F.col("playlist_author"))
         videos = library.filter(own).select(
             F.col("id").alias("log_id"), "youtube_playlist_id", "video_id",
             "title", "author", "description", "duration_ms",
@@ -171,7 +190,7 @@ def musicflow_pipeline(
         )
         grouped_others = (
             library.filter(~own)
-            .groupBy("youtube_playlist_id", "pl_title", "pl_author")
+            .groupBy("youtube_playlist_id", "playlist_name", "playlist_author")
             .agg(
                 F.count(F.lit(1)).alias("total_tracks"),
                 F.array_sort(
@@ -181,8 +200,8 @@ def musicflow_pipeline(
             )
             .select(
                 "youtube_playlist_id",
-                F.col("pl_title").alias("title"),
-                F.col("pl_author").alias("author"),
+                F.col("playlist_name").alias("title"),
+                F.col("playlist_author").alias("author"),
                 "total_tracks",
                 F.transform("__o__", lambda s: s["t"]).alias("track_titles"),
                 F.transform("__o__", lambda s: s["id"]).alias("log_ids"),
@@ -208,19 +227,7 @@ def musicflow_pipeline(
         return outputs
 
     def models(ctx: dict) -> dict[str, DataFrame]:
-        model_sources = {
-            "youtube_playlists": ctx["src__youtube_playlists"],
-            "youtube_videos": ctx["src__youtube_videos"],
-            "youtube_library": ctx["src__youtube_library"],
-            "search_types": sources["search_types"],
-            "spotify_playlists": sources["spotify_playlists"],
-            "playlist_ids": sources["playlist_ids"],
-            "spotify_log": ctx["spotify_log"],
-            "spotify_tracks": ctx["spotify_tracks"],
-            "spotify_albums": ctx["spotify_albums"],
-            "spotify_playlists_others": ctx["spotify_playlists_others"],
-        }
-        return build_all(model_sources, cfg)
+        return build_all({**synced(ctx), **{m: ctx[m] for m in match_models}}, cfg)
 
     match_models = ("spotify_log", "spotify_tracks", "spotify_albums", "spotify_playlists_others")
     return (

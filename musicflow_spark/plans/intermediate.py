@@ -11,12 +11,24 @@ on a lazy ``localCheckpoint`` that the first reading action fills.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from musicflow_spark.config import PipelineConfig
 from musicflow_spark.functions.portable import pround
 from musicflow_spark.functions.timeutils import ms_to_clock
+
+
+def spotify_type(album_uri: Column, playlist_uri: Column, track_uri: Column) -> Column:
+    """The polymorphic-uri discriminator from a log row's null pattern:
+    'Album', 'Playlist' or 'Track' after the first non-null uri, null
+    when none is set (reference: int_join_spotify_uris.sql:69-73,
+    log_for_tableau.sql)."""
+    return (
+        F.when(album_uri.isNotNull(), "Album")
+        .when(playlist_uri.isNotNull(), "Playlist")
+        .when(track_uri.isNotNull(), "Track")
+    )
 
 
 def int_join_spotify_uris(stg: dict[str, DataFrame]) -> DataFrame:
@@ -79,11 +91,7 @@ def int_join_spotify_uris(stg: dict[str, DataFrame]) -> DataFrame:
         yv["description"],
         yv["duration_ms"].alias("video_duration"),
         sty["search_type_name"],
-        # spotify_type discriminator from the null pattern (sql:69-73)
-        F.when(sl["album_uri"].isNotNull(), "Album")
-        .when(sl["playlist_uri"].isNotNull(), "Playlist")
-        .when(sl["track_uri"].isNotNull(), "Track")
-        .alias("spotify_type"),
+        spotify_type(sl["album_uri"], sl["playlist_uri"], sl["track_uri"]).alias("spotify_type"),
         # polymorphic-FK coalesce (sql:75-78)
         F.coalesce(sl["album_uri"], sl["playlist_uri"], sl["track_uri"]).alias("spotify_uri"),
         F.coalesce(sa["album_title"], spo["playlist_title"], st["track_title"]).alias("spotify_title"),
@@ -109,20 +117,13 @@ def int_useful_youtube_library(
     """Library triple join + duration-threshold routing (reference:
     dbt/models/intermediate/int_useful_youtube_library.sql:5-31;
     threshold injected via DBT_THRESHOLD_MS env var there, typed
-    config here).  cfg.threshold_ms None reproduces the reference's
-    'no threshold => everything is a Track' switch
-    (spotify_elt.py:779)."""
+    config here, ``PipelineConfig.estimated_type``).  The one library
+    join of the port: the match task reads its request rows from it
+    over the extracted sources, and ``log_for_tableau`` reads it from
+    the build."""
     yl = stg["youtube_library"]
     yp = stg["youtube_playlists"]
     yv = stg["youtube_videos"]
-    th = cfg.threshold_ms
-    estimated = (
-        F.lit("Track")
-        if th is None
-        else F.when(yv["duration_ms"] < th, "Track").when(
-            yv["duration_ms"] >= th, "Album/Playlist"
-        )
-    )
     return (
         yl.join(F.broadcast(yp), yl["youtube_playlist_id"] == yp["youtube_playlist_id"], "inner")
         .join(yv, yl["video_id"] == yv["video_id"], "inner")
@@ -137,6 +138,6 @@ def int_useful_youtube_library(
             yv["author"],
             yv["description"],
             yv["duration_ms"],
-            estimated.alias("estimated_type"),
+            cfg.estimated_type(yv["duration_ms"]).alias("estimated_type"),
         )
     )

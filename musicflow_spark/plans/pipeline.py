@@ -45,7 +45,7 @@ def build_all(
     out["log_not_found_videos"] = marts.log_not_found_videos(
         int_useful, stg["spotify_log"]
     )
-    out["log_for_tableau"] = marts.log_for_tableau(stg, cfg)
+    out["log_for_tableau"] = marts.log_for_tableau(int_useful, stg, cfg)
 
     out["most_saved_channels"] = analyses.most_saved_channels(stg["youtube_videos"])
     out["youtube_statistics"] = analyses.youtube_statistics(int_useful)

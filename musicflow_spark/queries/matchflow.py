@@ -343,8 +343,9 @@ def log_for_tableau_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     the derived fixture (reference: log_for_tableau.sql:87-110 —
     ownership routing, other-users DISTINCT, union, global surrogate
     row_number over its full tiebreak chain, log-scale zero fix)."""
+    stg = _mart_stage(spark, sf_dir)
     cfg = PipelineConfig(threshold_ms=150_000, your_channel_name="your_channel")
-    return log_for_tableau(_mart_stage(spark, sf_dir), cfg)
+    return log_for_tableau(int_useful_youtube_library(stg, cfg), stg, cfg)
 
 
 LOG_FOR_TABLEAU_MART_SQL = (

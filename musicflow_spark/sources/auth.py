@@ -25,6 +25,20 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 
+#: ceilings on one wait and on one call's total wait, in seconds: past
+#: either a call fails instead of stalling as long as Retry-After asks
+MAX_WAIT_S = 60.0
+MAX_TOTAL_WAIT_S = 300.0
+
+
+def bounded_wait(call: str, asked, wait: float, waited: float) -> float:
+    """``waited + wait``, or a ``TimeoutError`` naming ``call`` and the
+    server's value ``asked`` when that passes a ceiling."""
+    if wait > MAX_WAIT_S or waited + wait > MAX_TOTAL_WAIT_S:
+        raise TimeoutError(f"{call}: server asked to wait {asked!r}, past the retry ceiling")
+    return waited + wait
+
+
 class AuthError(Exception):
     """The API rejected the credential (HTTP 401 shape)."""
 
@@ -81,7 +95,9 @@ def with_auth_retry(
       401-refresh loop, youtube_elt.py:71-81); a second AuthError
       propagates (re-auth needs a human, :75-80).
     - TransientError -> exponential backoff (or the server's
-      retry_after), at most ``max_transient_retries`` times.
+      retry_after), at most ``max_transient_retries`` times; a wait
+      past ``MAX_WAIT_S``, or a total past ``MAX_TOTAL_WAIT_S``, raises
+      ``TimeoutError`` instead (``bounded_wait``).
 
     Returns ``wrapped(*args)`` — the token argument is managed here,
     so call sites stay credential-free."""
@@ -89,6 +105,7 @@ def with_auth_retry(
     def wrapped(*args, **kwargs):
         refreshed = False
         transient = 0
+        waited = 0.0
         while True:
             token = provider.get()
             try:
@@ -101,7 +118,10 @@ def with_auth_retry(
             except TransientError as e:
                 if transient >= max_transient_retries:
                     raise
-                sleep(e.retry_after if e.retry_after is not None else backoff * 2**transient)
+                wait = e.retry_after if e.retry_after is not None else backoff * 2**transient
+                call = getattr(fetch, "__name__", repr(fetch))
+                waited = bounded_wait(call, e.retry_after, wait, waited)
+                sleep(wait)
                 transient += 1
 
     return wrapped

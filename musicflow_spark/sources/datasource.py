@@ -55,6 +55,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from musicflow_spark.sources.auth import bounded_wait
+
 _RETRYABLE = {429, 500, 502, 503, 504}
 
 
@@ -78,8 +80,9 @@ def request_with_retry(
     url: str, headers: dict, max_retries: int, body: bytes | None = None
 ) -> bytes:
     """GET ``url`` (POST when ``body`` is given) -> the response body;
-    transient codes retry with ``Retry-After`` or a doubling delay."""
-    delay = 0.2
+    transient codes retry with ``Retry-After`` or a doubling delay, up
+    to the ceilings of ``auth.bounded_wait``."""
+    delay, waited = 0.2, 0.0
     for attempt in range(max_retries + 1):
         try:
             req = urllib.request.Request(url, data=body, headers=headers)
@@ -88,7 +91,10 @@ def request_with_retry(
         except urllib.error.HTTPError as e:
             if e.code not in _RETRYABLE or attempt == max_retries:
                 raise
-            time.sleep(retry_after_s(e.headers.get("Retry-After"), delay))
+            asked = e.headers.get("Retry-After")
+            wait = retry_after_s(asked, delay)
+            waited = bounded_wait(url, asked, wait, waited)
+            time.sleep(wait)
             delay = min(delay * 2, 5.0)
     raise RuntimeError("unreachable")
 

@@ -9,7 +9,8 @@ Per micro-batch:
    (foreach_batch_upsert — last write per key wins, so replays and
    restarts are idempotent);
 2. the downstream models rebuild from the updated warehouse and
-   replace the mart tables (``replace_table``).
+   replace the mart tables through a one-task ``Pipeline``, the
+   sync's own materialization path (``Pipeline.run_task``).
 
 The per-batch mart rebuild is a deliberate correctness-first
 strategy: every mart involves cross-row state (dedup windows, unions,
@@ -27,9 +28,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from musicflow_spark.config import PipelineConfig
+from musicflow_spark.plans.dag import Pipeline, Task, musicflow_pipeline
 from musicflow_spark.plans.pipeline import MARTS, build_all
 from musicflow_spark.schemas import MUSICFLOW_SCHEMAS
-from musicflow_spark.sources.catalog import replace_table
 from musicflow_spark.streaming.events import foreach_batch_upsert
 
 
@@ -57,11 +58,11 @@ def stream_log_to_marts(
 
     def process(batch: DataFrame, batch_id: int) -> None:
         upsert_log(batch, batch_id)
-        srcs = dict(static_sources)
-        srcs["spotify_log"] = batch.sparkSession.read.parquet(log_path)
-        models = build_all(srcs, cfg)
-        for mart in MARTS:
-            replace_table(models[mart], os.path.join(warehouse_dir, mart))
+        srcs = {**static_sources, "spotify_log": batch.sparkSession.read.parquet(log_path)}
+        models = Task(
+            "models", lambda ctx: build_all(srcs, cfg), materialize={m: "table" for m in MARTS}
+        )
+        Pipeline("stream_log_to_marts", warehouse_dir).add(models).run()
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -102,8 +103,6 @@ def stream_library_to_marts(
     incremental models.
 
     Returns the availableNow StreamingQuery (caller awaits)."""
-    from musicflow_spark.plans.dag import musicflow_pipeline
-
     schema = MUSICFLOW_SCHEMAS["youtube_library"]
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:

@@ -207,6 +207,30 @@ def test_auth_retry_bounded_backoff_on_429():
     assert sleeps == [1.0, 2.0, 4.0]  # exponential, then give up
 
 
+def test_auth_retry_fails_a_wait_past_the_ceiling():
+    """A server's retry_after past MAX_WAIT_S, or retries whose waits
+    add up past MAX_TOTAL_WAIT_S, raise TimeoutError naming the call
+    and the server's value instead of sleeping that long."""
+    p = TokenProvider(refresh_fn=lambda: ("t", 100.0))
+    sleeps = []
+
+    def day_off(token):
+        raise TransientError("429", retry_after=86_400.0)
+
+    with pytest.raises(TimeoutError, match="day_off: server asked to wait 86400.0"):
+        with_auth_retry(day_off, p, sleep=sleeps.append)()
+    assert sleeps == []
+
+    from musicflow_spark.sources.auth import MAX_TOTAL_WAIT_S, MAX_WAIT_S
+
+    def at_the_ceiling(token):
+        raise TransientError("429", retry_after=MAX_WAIT_S)
+
+    with pytest.raises(TimeoutError, match="at_the_ceiling"):
+        with_auth_retry(at_the_ceiling, p, max_transient_retries=100, sleep=sleeps.append)()
+    assert sleeps == [MAX_WAIT_S] * int(MAX_TOTAL_WAIT_S // MAX_WAIT_S)
+
+
 def test_table_materialization_observes_row_metrics(spark, tmp_path):
     """Table-materialized models must report their written row count
     through Pipeline.metrics — collected via df.observe ON the write

@@ -141,3 +141,39 @@ def test_warm_rerun_is_idempotent(spark, musicflow_sources, pipeline_run):
         .collect()
     )
     assert warm_log == cold_log
+
+
+class _NoSearch:
+    def search(self, queries, kind, limit):
+        raise AssertionError("a broken source contract must fail before the match")
+
+
+@pytest.mark.parametrize(
+    "table, broken, message",
+    [
+        (
+            "youtube_videos",
+            lambda df: df.withColumn("duration_ms", F.col("duration_ms").cast("string")),
+            r"youtube_videos\.duration_ms: expected bigint, got string",
+        ),
+        (
+            "youtube_videos",
+            lambda df: df.withColumnRenamed("author", "channel"),
+            r"youtube_videos\.author: expected string, got no such column",
+        ),
+    ],
+    ids=["string-duration", "renamed-author"],
+)
+def test_broken_source_contract_fails_in_extract(
+    spark, musicflow_sources, tmp_path, table, broken, message
+):
+    """A source whose columns or types differ from
+    ``schemas.MUSICFLOW_SCHEMAS`` stops the sync in ``extract`` with one
+    error naming the column, the expected and the actual type: a string
+    duration used to route every video to the track search and finish,
+    a renamed column to fail deep inside the match task."""
+    sources = {**musicflow_sources, table: broken(musicflow_sources[table])}
+    pipe = musicflow_pipeline(spark, sources, CFG, _NoSearch(), str(tmp_path / "wh"))
+    with pytest.raises(ValueError, match=message):
+        pipe.run()
+    assert not os.path.exists(tmp_path / "wh")

@@ -104,6 +104,80 @@ def test_int_useful_no_threshold_means_all_tracks(musicflow_sources):
         for r in models["int_useful_youtube_library"].select("estimated_type").collect()
     }
     assert vals == {"Track"}
+    current = models["log_for_tableau"].filter(F.col("video_id").isNotNull())
+    assert {r["youtube_type"] for r in current.select("youtube_type").collect()} == {"Track"}
+
+
+def test_matcher_and_models_share_one_routing_rule(spark, musicflow_sources):
+    """A video exactly at the threshold goes to the collection search
+    and reads 'Album/Playlist' in the models; one 1 ms below goes to
+    the track search and reads 'Track' — the engine, int_useful and
+    log_for_tableau route by the one ``PipelineConfig.estimated_type``."""
+    from musicflow_spark.matching import CatalogCandidateSource, MatchEngine
+    from musicflow_spark.matching.engine import COLLECTION_STRATEGIES, TRACK_STRATEGIES
+    from musicflow_spark.schemas import MUSICFLOW_SCHEMAS
+
+    th = CFG.threshold_ms
+    edge = spark.createDataFrame(
+        [
+            ("v_at", "MUSIC_VIDEO_TYPE_UGC", "Edge Album", "EdgeBand", "", th),
+            ("v_below", "MUSIC_VIDEO_TYPE_UGC", "Edge Song", "EdgeBand", "", th - 1),
+        ],
+        MUSICFLOW_SCHEMAS["youtube_videos"],
+    )
+    library = spark.createDataFrame(
+        [(20, "PL_rock", "v_at"), (21, "PL_rock", "v_below")],
+        MUSICFLOW_SCHEMAS["youtube_library"],
+    )
+
+    class CountingSource:
+        """Records the log ids each search kind is asked about."""
+
+        def __init__(self, inner):
+            self.inner = inner
+            self.seen: dict[str, set[int]] = {}
+
+        def search(self, queries, kind, limit):
+            n = len(TRACK_STRATEGIES if kind == "track" else COLLECTION_STRATEGIES)
+            ids = {r["qid"] // n for r in queries.select("qid").collect()}
+            self.seen[kind] = self.seen.get(kind, set()) | ids
+            return self.inner.search(queries, kind, limit)
+
+    source = CountingSource(
+        CatalogCandidateSource(
+            musicflow_sources["spotify_tracks"],
+            musicflow_sources["spotify_albums"],
+            musicflow_sources["spotify_playlists_others"],
+        )
+    )
+    videos = library.join(edge, "video_id").select(
+        F.col("id").alias("log_id"), "youtube_playlist_id", "video_id",
+        "title", "author", "description", "duration_ms",
+    )
+    MatchEngine(CFG, source).compute_matches(videos)
+    assert source.seen["album"] == {20}
+    assert source.seen["track"] == {21}
+
+    sources = {
+        **musicflow_sources,
+        "youtube_videos": musicflow_sources["youtube_videos"].unionByName(edge),
+        "youtube_library": musicflow_sources["youtube_library"].unionByName(library),
+    }
+    models = build_all(sources, CFG)
+    want = {"v_at": "Album/Playlist", "v_below": "Track"}
+    edge_ids = list(want)
+    estimated = {
+        r["video_id"]: r["estimated_type"]
+        for r in models["int_useful_youtube_library"]
+        .filter(F.col("video_id").isin(edge_ids))
+        .collect()
+    }
+    youtube_type = {
+        r["video_id"]: r["youtube_type"]
+        for r in models["log_for_tableau"].filter(F.col("video_id").isin(edge_ids)).collect()
+    }
+    assert estimated == want
+    assert youtube_type == want
 
 
 def test_log_found_videos_branches(models):

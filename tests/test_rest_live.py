@@ -40,6 +40,8 @@ PAGES = {
 }
 OFFSET_TOTAL = 23
 BUSY_UNTIL = "Wed, 21 Oct 2015 07:28:00 GMT"
+#: a Retry-After about 284 million seconds away
+FAR_FUTURE = "Wed, 21 Oct 2035 07:28:00 GMT"
 
 
 class _State:
@@ -97,6 +99,8 @@ def _make_handler(state: _State):
             q = urllib.parse.parse_qs(url.query)
             if url.path == "/busy":
                 return self._busy()
+            if url.path == "/far":
+                return self._json(503, {"error": "busy"}, {"Retry-After": FAR_FUTURE})
             if url.path == "/token":
                 with state.lock:
                     state.minted += 1
@@ -163,6 +167,8 @@ def _make_handler(state: _State):
             )
             if url.path == "/busy":
                 return self._busy()
+            if url.path == "/far":
+                return self._json(503, {"error": "busy"}, {"Retry-After": FAR_FUTURE})
             if url.path == "/sink":
                 with state.lock:
                     if state.sink_429s_left > 0:
@@ -442,6 +448,28 @@ def test_python_datasource_retries_an_http_date_retry_after(spark, rest_server):
     BatchRestWriter(schema, {"url": f"{base}/busy"})._post(f"{base}/busy", {"items": []})
     with state.lock:
         assert state.busy_served == {"GET": 2, "POST": 2}
+
+
+def test_python_datasource_fails_a_retry_after_past_the_ceiling(spark, rest_server, monkeypatch):
+    """A Retry-After years away fails the request at once, naming the
+    URL and the server's value, instead of sleeping until then: the
+    reader's GET and the writer's POST alike, without a single sleep."""
+    import time
+
+    from pyspark.sql.types import StructType
+
+    from musicflow_spark.sources.datasource import BatchRestWriter, OffsetRestReader
+
+    base, _ = rest_server
+    slept: list[float] = []
+    monkeypatch.setattr(time, "sleep", slept.append)
+    schema = StructType.fromDDL(ITEM_SCHEMA)
+    url = f"{base}/far"
+    with pytest.raises(TimeoutError, match=f"{url}: server asked to wait '{FAR_FUTURE}'"):
+        OffsetRestReader(schema, {"url": url, "total": "1"})._get(url)
+    with pytest.raises(TimeoutError, match=f"{url}: server asked to wait '{FAR_FUTURE}'"):
+        BatchRestWriter(schema, {"url": url})._post(url, {"items": []})
+    assert slept == []
 
 
 def test_python_datasource_streams_incrementally(spark, rest_server, tmp_path):
