@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from musicflow_spark.checks.runner import CheckSet
+from musicflow_spark.schemas import LOG_STATUSES, PLAYLIST_TYPES, VIDEO_TYPES
 
 _STAGING_TYPES: dict[str, dict[str, str]] = {
     "stg__playlist_ids": {"id": "bigint", "youtube_playlist_id": "string", "spotify_playlist_id": "string"},
@@ -60,13 +61,6 @@ _STAGING_TYPES: dict[str, dict[str, str]] = {
         "description": "string", "duration_ms": "bigint",
     },
 }
-
-VIDEO_TYPES = [
-    "MUSIC_VIDEO_TYPE_ATV", "MUSIC_VIDEO_TYPE_OMV",
-    "MUSIC_VIDEO_TYPE_UGC", "MUSIC_VIDEO_TYPE_OFFICIAL_SOURCE_MUSIC",
-]
-STATUSES = ["saved", "skipped (saved before the run)", "skipped (saved during the run)"]
-
 
 def reference_suite(models: dict[str, DataFrame]) -> CheckSet:
     """Build the full ported assertion suite over ``build_all``
@@ -116,7 +110,7 @@ def reference_suite(models: dict[str, DataFrame]) -> CheckSet:
     for col in ("log_id", "found_on_try", "difference_ms", "track_match", "q", "search_type_id", "status"):
         s.not_null("stg__spotify_log", col)
     s.expression_is_true("stg__spotify_log", "track_match >= 0")
-    s.accepted_values("stg__spotify_log", "status", STATUSES)
+    s.accepted_values("stg__spotify_log", "status", list(LOG_STATUSES))
 
     # ---- stg__spotify_playlists (:187-207)
     s.equal_rowcount("stg__spotify_playlists", "stg__playlist_ids")
@@ -162,14 +156,14 @@ def reference_suite(models: dict[str, DataFrame]) -> CheckSet:
     # ---- stg__youtube_playlists (:343-374)
     s.unique("stg__youtube_playlists", "youtube_playlist_id")
     s.not_null("stg__youtube_playlists", "youtube_playlist_id")
-    s.accepted_values("stg__youtube_playlists", "type", ["Playlist", "Album", "EP"])
+    s.accepted_values("stg__youtube_playlists", "type", list(PLAYLIST_TYPES))
     s.not_null("stg__youtube_playlists", "type")
     s.not_null("stg__youtube_playlists", "title")
     s.not_null("stg__youtube_playlists", "author", where="youtube_playlist_id != 'LM'")
 
     # ---- stg__youtube_videos (:377-421)
     s.unique("stg__youtube_videos", "video_id")
-    s.accepted_values("stg__youtube_videos", "type", VIDEO_TYPES)
+    s.accepted_values("stg__youtube_videos", "type", list(VIDEO_TYPES))
     for col in ("video_id", "type", "title", "author", "description", "duration_ms"):
         s.not_null("stg__youtube_videos", col)
     s.expression_is_true("stg__youtube_videos", "duration_ms > 0")
@@ -231,7 +225,7 @@ def reference_suite(models: dict[str, DataFrame]) -> CheckSet:
     # raw playlist type (yp.type, sql:63)
     s.accepted_values(
         "log_for_tableau", "youtube_type",
-        ["Track", "Album/Playlist", "Playlist", "Album", "EP"],
+        ["Track", "Album/Playlist", *PLAYLIST_TYPES],
     )
     s.expression_is_true("log_for_tableau", "percentage_in_desc <= 100")
     s.expression_is_true("log_for_tableau", "percentage_in_desc >= 0")

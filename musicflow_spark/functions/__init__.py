@@ -3,7 +3,6 @@ expression (JVM-side; whole-stage-codegen'd except ``fix_title``'s
 blank guard, a ``transform`` lambda); no Python UDFs."""
 
 from musicflow_spark.functions.strings import (  # noqa: F401
-    contains_ci,
     fix_title,
     is_ost,
     strip_topic_suffix,

@@ -93,13 +93,6 @@ def is_ost(title: Column | str) -> Column:
     return c.rlike(r"\bOST\b")
 
 
-def contains_ci(haystack: Column, needle: Column) -> Column:
-    """Case-insensitive substring containment — the matcher's
-    artist-in-title / track-in-title predicate (reference:
-    spotify_elt.py:276-281,429-436,628-636)."""
-    return F.instr(F.lower(haystack), F.lower(needle)) > 0
-
-
 def url_host(url: Column | str) -> Column:
     """Canonical host of a URL: parsed HOST, lowercased, leading
     ``www.`` stripped.  parse_url runs JVM-side (no UDF)."""

@@ -65,6 +65,9 @@ CANDIDATE_SCHEMA = T.StructType(
     ]
 )
 
+#: what a search ranks: the candidate fields before ``qid``/``result_rank``
+ITEM_SCHEMA = T.StructType(CANDIDATE_SCHEMA.fields[2:])
+
 
 class CandidateSource(Protocol):
     def search(self, queries: DataFrame, kind: str, limit: int) -> DataFrame:
@@ -118,8 +121,34 @@ class CatalogCandidateSource:
         catalog_playlists: DataFrame | None = None,
     ):
         self.tracks = catalog_tracks
-        self.albums = catalog_albums
-        self.playlists = catalog_playlists
+        # each kind's search items (no item when its catalog is absent)
+        self.items = {
+            "track": catalog_tracks.select(
+                F.col("track_uri").alias("item_uri"),
+                F.col("track_title").alias("item_title"),
+                F.split(F.col("track_artists"), "; ").alias("item_artists"),
+                F.col("duration_ms").alias("item_duration_ms"),
+                "album_uri",
+            ).withColumn("children", F.lit(None).cast(CANDIDATE_SCHEMA["children"].dataType)),
+            "album": self._collection_items(
+                catalog_albums,
+                "album_uri",
+                F.col("album_uri").alias("item_uri"),
+                F.col("album_title").alias("item_title"),
+                F.split(F.col("album_artists"), "; ").alias("item_artists"),
+                F.col("duration_ms").alias("item_duration_ms"),
+                F.col("album_uri"),
+            ),
+            "playlist": self._collection_items(
+                catalog_playlists,
+                "playlist_uri",
+                F.col("playlist_uri").alias("item_uri"),
+                F.col("playlist_title").alias("item_title"),
+                F.array(F.col("playlist_owner")).alias("item_artists"),
+                F.col("duration_ms").alias("item_duration_ms"),
+                F.lit(None).cast("string").alias("album_uri"),
+            ),
+        }
 
     def _index(self, items: DataFrame, title_col: str) -> DataFrame:
         toks = F.filter(
@@ -128,41 +157,7 @@ class CatalogCandidateSource:
         return items.withColumn("__tok__", F.explode(F.array_distinct(toks)))
 
     def search(self, queries: DataFrame, kind: str, limit: int = 50) -> DataFrame:
-        if kind == "track":
-            items = self.tracks.select(
-                F.col("track_uri").alias("item_uri"),
-                F.col("track_title").alias("item_title"),
-                F.split(F.col("track_artists"), "; ").alias("item_artists"),
-                F.col("duration_ms").alias("item_duration_ms"),
-                "album_uri",
-            ).withColumn("children", F.lit(None).cast(CANDIDATE_SCHEMA["children"].dataType))
-        elif kind == "album":
-            if self.albums is None:
-                return _empty(queries)
-            items = self._collection_items(
-                self.albums,
-                "album_uri",
-                F.col("album_uri").alias("item_uri"),
-                F.col("album_title").alias("item_title"),
-                F.split(F.col("album_artists"), "; ").alias("item_artists"),
-                F.col("duration_ms").alias("item_duration_ms"),
-                F.col("album_uri"),
-            )
-        elif kind == "playlist":
-            if self.playlists is None:
-                return _empty(queries)
-            items = self._collection_items(
-                self.playlists,
-                "playlist_uri",
-                F.col("playlist_uri").alias("item_uri"),
-                F.col("playlist_title").alias("item_title"),
-                F.array(F.col("playlist_owner")).alias("item_artists"),
-                F.col("duration_ms").alias("item_duration_ms"),
-                F.lit(None).cast("string").alias("album_uri"),
-            )
-        else:  # pragma: no cover
-            raise ValueError(kind)
-
+        items = self.items[kind]
         qt, qa = _parse_q(F.col("q"))
         q = queries.select(
             "qid",
@@ -216,10 +211,13 @@ class CatalogCandidateSource:
             )
         )
 
-    def _collection_items(self, items: DataFrame, key: str, *fields: F.Column) -> DataFrame:
+    def _collection_items(self, items: DataFrame | None, key: str, *fields: F.Column) -> DataFrame:
         """Albums or playlists as search items: ``fields`` projected,
         plus the child-track fan — the catalog tracks grouped by
-        ``key`` (album_uri / playlist_uri), empty when none."""
+        ``key`` (album_uri / playlist_uri), empty when none.  No
+        catalog gives no items."""
+        if items is None:
+            return empty_frame(self.tracks.sparkSession, ITEM_SCHEMA)
         children = (
             self.tracks.filter(F.col(key).isNotNull())
             .groupBy(key)
@@ -243,10 +241,6 @@ class CatalogCandidateSource:
                 "children", F.array().cast(CANDIDATE_SCHEMA["children"].dataType)
             ).alias("children"),
         )
-
-
-def _empty(queries: DataFrame) -> DataFrame:
-    return empty_frame(queries.sparkSession, CANDIDATE_SCHEMA)
 
 
 class RestCandidateSource:

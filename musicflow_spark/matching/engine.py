@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from musicflow_spark.config import PipelineConfig
 from musicflow_spark.functions.strings import is_ost, strip_topic_suffix, with_fixed_title
 from musicflow_spark.matching.candidates import CANDIDATE_SCHEMA, CandidateSource
+from musicflow_spark.schemas import LOG_STATUSES
 from musicflow_spark.session import empty_frame, run_concurrently
 
 #: track accept: |duration delta| <= this (spotify_elt.py:290)
@@ -392,6 +393,7 @@ class MatchEngine:
         fields plus the request's context — log_id, user_playlist_id,
         log_ids (a group's library rows, null for a video) and pass_no."""
         spark = matches.sparkSession
+        saved_status, skipped_before, skipped_during = LOG_STATUSES
         liked_tracks = liked_tracks or empty_frame(spark, "uri string")
         liked_albums = liked_albums or empty_frame(spark, "uri string")
 
@@ -424,10 +426,10 @@ class MatchEngine:
                     F.col("liked").isNotNull()
                     & (F.col("user_playlist_id") == "LM")
                     & F.col("kind").isin("track", "album"),
-                    "skipped (saved before the run)",
+                    skipped_before,
                 )
-                .when(F.col("occ") > 1, "skipped (saved during the run)")
-                .otherwise("saved"),
+                .when(F.col("occ") > 1, skipped_during)
+                .otherwise(saved_status),
             )
             .drop("liked", "occ")
             # every output below reads it: computed once, by the first
@@ -518,7 +520,7 @@ class MatchEngine:
 
         # ---- side-effect sets: what to like (saved via 'LM') and what
         # to add to the user's mapped playlists
-        saved = with_status.filter(F.col("status") == "saved")
+        saved = with_status.filter(F.col("status") == saved_status)
         liked_saves = saved.filter(F.col("user_playlist_id") == "LM")
         to_like = {
             kind: liked_saves.filter(F.col("kind") == kind).select(
@@ -550,23 +552,3 @@ class MatchEngine:
             playlists_to_like=to_like["playlist"],
             playlist_additions=playlist_additions,
         )
-
-
-def apply_side_effects(
-    df: DataFrame, batch_fn, batch_size: int = 50
-) -> None:
-    """S11: side-effecting sink — foreachPartition with client-side
-    chunking (reference likes/adds in chunks of 50,
-    spotify_elt.py:922-979).  batch_fn receives a list of Rows."""
-
-    def run(partition) -> None:
-        batch: list = []
-        for row in partition:
-            batch.append(row)
-            if len(batch) >= batch_size:
-                batch_fn(batch)
-                batch = []
-        if batch:
-            batch_fn(batch)
-
-    df.foreachPartition(run)

@@ -71,7 +71,7 @@ def unlike_dag_spec(kind: str,
     auth -> populate -> unlike chain (spotify_unlike_tracks_dag.py:
     15-33).  The populate/unlike bodies map to plans/cleanup.py's
     tracks_to_unlike / albums_to_unlike predicates plus the
-    apply_side_effects sink."""
+    sources/rest.py::apply_side_effects sink."""
     return (
         Pipeline(f"spotify_unlike_{kind}_dag")
         .add(Task("auth_with_refresh_token", auth))

@@ -7,7 +7,7 @@ spotify_unlike_albums.py:18-46, spotify_remove_playlists.py:42-47;
 
 Each flow is a timestamp-predicate filter over the current state
 table; the side-effecting removal is the chunked foreachPartition
-sink (matching/engine.py::apply_side_effects, batches of 50 like the
+sink (sources/rest.py::apply_side_effects, batches of 50 like the
 reference's API calls).
 """
 

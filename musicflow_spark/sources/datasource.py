@@ -1,10 +1,7 @@
 """Spark 4 Python Data Source: the offset-paginated REST connector as
-a first-class ``spark.read.format(...)`` source.
+a first-class ``spark.read.format(...)`` source, sink and stream.
 
-``sources/rest.py`` exposes the same capability as composition
-helpers (parallelize offsets → mapPartitions fetch); this module
-lifts it into the engine-native connector contract
-(`pyspark.sql.datasource.DataSource`), so a user reads an API the
+This is the repo's one offset page walk (S8): a user reads an API the
 same way they read parquet:
 
     spark.dataSource.register(OffsetRestDataSource)
@@ -21,29 +18,20 @@ the offset range into ``num_partitions`` input partitions and each
 executor worker walks its slice with ONE sequential HTTP client —
 ``num_partitions`` IS the API-concurrency bound, exactly like the
 reference's sequential page loops fanned N-wide
-(/root/reference/dags/scripts/spotify_elt.py:417-424,610-621).
+(dags/scripts/spotify_elt.py:417-424,610-621).
 Catalyst sees a normal scan; column pruning applies downstream.
 
-Transport is stdlib urllib (no client dependency); transient HTTP
-codes retry with capped exponential backoff per request.  Auth
-composes the same way as the functional connectors — callers who
-need bearer tokens put them in ``extra_headers`` (static) or front
-the endpoint with the ``sources/auth.py`` retry wrapper in a custom
-subclass overriding ``_get``.
+Every request goes through ``sources/auth.py``: ``http_json`` makes
+the call and ``retry_transient`` retries 429/5xx replies.  A bearer
+token reaches the endpoint through the ``extra_headers`` option.
 """
 
 from __future__ import annotations
 
 import json
-import math
-import time
-import urllib.error
 import urllib.parse
-import urllib.request
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
-from datetime import datetime, timezone
-from email.utils import parsedate_to_datetime
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -55,68 +43,35 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from musicflow_spark.sources.auth import bounded_wait
+from musicflow_spark.sources.auth import http_json, retry_transient
+from musicflow_spark.sources.rest import API_BATCH, chunks
 
-_RETRYABLE = {429, 500, 502, 503, 504}
-
-
-def retry_after_s(value: str | None, fallback: float) -> float:
-    """``Retry-After`` delay-seconds or HTTP-date (RFC 9110 §10.2.3) ->
-    seconds to wait, at least 0; ``fallback`` when absent or neither."""
-    try:
-        seconds = float(value)
-    except (TypeError, ValueError):
-        try:
-            when = parsedate_to_datetime(value)
-        except (TypeError, ValueError):
-            return fallback
-        if when.tzinfo is None:
-            when = when.replace(tzinfo=timezone.utc)
-        seconds = (when - datetime.now(timezone.utc)).total_seconds()
-    return max(seconds, 0.0) if math.isfinite(seconds) else fallback
+#: first wait of the doubling backoff when a reply has no Retry-After
+_BACKOFF_S = 0.2
 
 
-def request_with_retry(
-    url: str, headers: dict, max_retries: int, body: bytes | None = None
-) -> bytes:
-    """GET ``url`` (POST when ``body`` is given) -> the response body;
-    transient codes retry with ``Retry-After`` or a doubling delay, up
-    to the ceilings of ``auth.bounded_wait``."""
-    delay, waited = 0.2, 0.0
-    for attempt in range(max_retries + 1):
-        try:
-            req = urllib.request.Request(url, data=body, headers=headers)
-            with urllib.request.urlopen(req) as r:
-                return r.read()
-        except urllib.error.HTTPError as e:
-            if e.code not in _RETRYABLE or attempt == max_retries:
-                raise
-            asked = e.headers.get("Retry-After")
-            wait = retry_after_s(asked, delay)
-            waited = bounded_wait(url, asked, wait, waited)
-            time.sleep(wait)
-            delay = min(delay * 2, 5.0)
-    raise RuntimeError("unreachable")
+def _request(url: str, headers: dict, max_retries: int, payload=None):
+    """``http_json`` with 429/5xx replies retried (``retry_transient``)."""
+    return retry_transient(
+        lambda: http_json(url, headers, payload), url, max_retries, _BACKOFF_S
+    )
 
 
 class OffsetSlice(InputPartition):
-    """One task's offset list (picklable plan-time value)."""
+    """One task's pages: ``(offset, limit)`` pairs (picklable
+    plan-time value)."""
 
-    def __init__(self, offsets: Sequence[int]):
-        self.offsets = list(offsets)
+    def __init__(self, pages: Sequence[tuple[int, int]]):
+        self.pages = list(pages)
 
 
 class OffsetRestDataSource(DataSource):
-    """Register with ``spark.dataSource.register(OffsetRestDataSource)``."""
+    """Register with ``spark.dataSource.register(OffsetRestDataSource)``;
+    the caller passes the row schema with ``.schema(...)``."""
 
     @classmethod
     def name(cls) -> str:
         return "musicflow_rest"
-
-    def schema(self) -> str:
-        # caller normally passes .schema(...); this default matches
-        # the item shape used across the REST test surface
-        return "id LONG, name STRING"
 
     def reader(self, schema: StructType) -> "OffsetRestReader":
         return OffsetRestReader(schema, self.options)
@@ -135,7 +90,7 @@ class OffsetRestReader(DataSourceReader):
         self.fields = [f.name for f in schema.fields]
         self.url = options["url"]
         self.total = int(options["total"])
-        self.page_size = int(options.get("page_size", 50))
+        self.page_size = int(options.get("page_size", API_BATCH))
         self.num_partitions = int(options.get("num_partitions", 4))
         self.items_key = options.get("items_key", "items")
         self.max_retries = int(options.get("max_retries", 3))
@@ -146,18 +101,22 @@ class OffsetRestReader(DataSourceReader):
                 f"{self.total}/{self.page_size}/{self.num_partitions}"
             )
 
-    def partitions(self) -> list[OffsetSlice]:
-        offsets = list(range(0, self.total, self.page_size))
-        n = min(self.num_partitions, max(len(offsets), 1))
+    def partitions(self, start: int = 0, end: int | None = None) -> list[OffsetSlice]:
+        """The pages of ``[start, end)`` (default ``[0, total)``), the
+        last one clipped to ``end``, dealt into at most
+        ``num_partitions`` slices."""
+        end = self.total if end is None else end
+        pages = [(o, min(self.page_size, end - o)) for o in range(start, end, self.page_size)]
+        n = min(self.num_partitions, max(len(pages), 1))
         # round-robin keeps slices balanced when pages vary in cost
-        return [OffsetSlice(offsets[i::n]) for i in range(n)]
+        return [OffsetSlice(pages[i::n]) for i in range(n)]
 
-    def _get(self, url: str) -> dict:
-        return json.loads(request_with_retry(url, self.headers, self.max_retries))
+    def _get(self, url: str):
+        return _request(url, self.headers, self.max_retries)
 
     def read(self, partition: OffsetSlice) -> Iterator[tuple]:
-        for off in partition.offsets:
-            q = urllib.parse.urlencode({"offset": off, "limit": self.page_size})
+        for off, limit in partition.pages:
+            q = urllib.parse.urlencode({"offset": off, "limit": limit})
             payload = self._get(f"{self.url}?{q}")
             for row in payload.get(self.items_key, []):
                 yield tuple(row.get(f) for f in self.fields)
@@ -216,7 +175,7 @@ class BatchRestWriter(DataSourceWriter):
             raise ValueError("musicflow_rest writer requires the 'url' option")
         self.fields = [f.name for f in schema.fields]
         self.url = options["url"]
-        self.batch_size = int(options.get("batch_size", 50))
+        self.batch_size = int(options.get("batch_size", API_BATCH))
         self.max_retries = int(options.get("max_retries", 3))
         self.headers = json.loads(options.get("extra_headers", "{}"))
         self.items_key = options.get("items_key", "items")
@@ -226,8 +185,7 @@ class BatchRestWriter(DataSourceWriter):
             raise ValueError(f"need batch_size >= 1, got {self.batch_size}")
 
     def _post(self, url: str, payload: dict) -> None:
-        headers = {"Content-Type": "application/json", **self.headers}
-        request_with_retry(url, headers, self.max_retries, json.dumps(payload).encode())
+        _request(url, self.headers, self.max_retries, payload)
 
     def write(self, iterator: Iterator) -> RestCommit:
         from pyspark import TaskContext
@@ -235,26 +193,13 @@ class BatchRestWriter(DataSourceWriter):
         ctx = TaskContext.get()
         part = ctx.partitionId() if ctx is not None else -1
         rows = batches = 0
-        chunk: list[dict] = []
-
-        def flush() -> None:
-            nonlocal batches
-            if chunk:
-                # (part, chunk) = idempotency key, stable across task
-                # re-runs — see the at-least-once note in the class doc
-                self._post(
-                    self.url,
-                    {self.items_key: chunk, "part": part, "chunk": batches},
-                )
-                batches += 1
-                chunk.clear()
-
-        for row in iterator:
-            chunk.append({f: row[i] for i, f in enumerate(self.fields)})
-            rows += 1
-            if len(chunk) >= self.batch_size:
-                flush()
-        flush()
+        for batch in chunks(iterator, self.batch_size):
+            # (part, chunk) = idempotency key, stable across task
+            # re-runs — see the at-least-once note in the class doc
+            items = [dict(zip(self.fields, row)) for row in batch]
+            self._post(self.url, {self.items_key: items, "part": part, "chunk": batches})
+            rows += len(batch)
+            batches += 1
         return RestCommit(rows=rows, batches=batches)
 
     def commit(self, messages) -> None:
@@ -286,17 +231,16 @@ class OffsetRestStreamReader(DataSourceStreamReader):
     count; ``partitions(start, end)`` fans the new [start, end) range
     out in page-size slices; Structured Streaming persists the offset
     json in the checkpoint, so a restarted query resumes where it
-    stopped — exactly-once per row with no dedup pass.  Batch and
-    stream share the page-walk (`OffsetSlice` + the batch reader's
-    retrying ``_get``)."""
+    stopped — exactly-once per row with no dedup pass.  The batch
+    reader deals and reads the pages of each range."""
 
     def __init__(self, schema: StructType, options: dict):
         if "url" not in options or "total_url" not in options:
             raise ValueError(
                 "musicflow_rest streaming requires 'url' and 'total_url' options"
             )
-        # reuse the batch reader for _get/fields/page_size parsing;
-        # streaming discovers 'total' itself, so feed a placeholder
+        # the batch reader parses the options and deals and reads the
+        # pages; streaming discovers 'total' itself, so feed a placeholder
         self._batch = OffsetRestReader(schema, {**options, "total": "0"})
         self.total_url = options["total_url"]
 
@@ -306,20 +250,11 @@ class OffsetRestStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         return {"offset": int(self._batch._get(self.total_url)["total"])}
 
-    def partitions(self, start: dict, end: dict):
-        lo, hi = int(start["offset"]), int(end["offset"])
-        page = self._batch.page_size
-        offsets = list(range(lo, hi, page))
-        n = min(self._batch.num_partitions, max(len(offsets), 1))
-        # stash the batch bound so read() can clip the last page
-        return [OffsetSlice([(o, min(page, hi - o)) for o in offsets[i::n]]) for i in range(n)]
+    def partitions(self, start: dict, end: dict) -> list[OffsetSlice]:
+        return self._batch.partitions(int(start["offset"]), int(end["offset"]))
 
-    def read(self, partition: OffsetSlice):
-        for off, limit in partition.offsets:
-            q = urllib.parse.urlencode({"offset": off, "limit": limit})
-            payload = self._batch._get(f"{self._batch.url}?{q}")
-            for row in payload.get(self._batch.items_key, []):
-                yield tuple(row.get(f) for f in self._batch.fields)
+    def read(self, partition: OffsetSlice) -> Iterator[tuple]:
+        return self._batch.read(partition)
 
     def commit(self, end: dict) -> None:
         pass

@@ -1,11 +1,12 @@
-"""Paginated REST sources and batched enrichment (SURVEY §2.1
-S3-S8).
+"""Paginated REST sources, batched enrichment and the chunked
+write-back sink (SURVEY §2.1 S3-S8, S11).
 
 The reference walks every API with a sequential driver loop
 (``nextPageToken`` loops, youtube_elt.py:87-123,126-204; offset
-pagination, spotify_elt.py:417-424,610-621) and enriches rows with
+pagination, spotify_elt.py:417-424,610-621), enriches rows with
 batched id lookups (durations in comma-joined chunks of 50,
-youtube_elt.py:255-280).  Spark shapes:
+youtube_elt.py:255-280) and writes likes/adds back in chunks of 50
+(spotify_elt.py:922-979).  Spark shapes:
 
 - **Token pagination** is inherently sequential (each page reveals
   the next token), so the fetch loop stays on the driver and lands in
@@ -13,26 +14,39 @@ youtube_elt.py:255-280).  Spark shapes:
   (playlists, channels) fetched as separate tasks, not one token
   chain.
 - **Offset pagination** IS random-access: offsets are known up front,
-  so pages fan out across the cluster (parallelize offsets ->
-  mapPartitions fetch).  One sequential HTTP client per partition;
-  ``n_partitions`` bounds API concurrency.
+  so pages fan out across the cluster.  That walk is the
+  ``musicflow_rest`` Data Source (sources/datasource.py).
 - **Batched point-lookup enrichment** becomes an Arrow-batched
   mapInPandas stage: ids chunked client-side (the API's batch limit),
   one lookup call per chunk, results merged back columnar.
+- **Write-backs** are a foreachPartition sink over the same chunks.
 
-No HTTP client ships in this environment: every source takes an
-injected ``fetch`` callable (tests use fakes; production passes a
-requests/google-api wrapper).  The callable must be picklable for the
-distributed paths.
+Every fetch callable these take makes its HTTP call with
+``sources/auth.py::http_json`` (tests may pass fakes), wrapped in
+``with_auth_retry`` where it needs a token.  A callable shipped to
+executors must be picklable.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+import itertools
+from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+#: the reference APIs' per-call item limit: rows per offset page, ids
+#: per lookup, items per like/add write-back
+API_BATCH = 50
+
+
+def chunks(items: Iterable, size: int = API_BATCH) -> Iterator[list]:
+    """``items`` in lists of ``size``, the last one shorter; lazy, so
+    a partition iterator is never held whole."""
+    it = iter(items)
+    while batch := list(itertools.islice(it, size)):
+        yield batch
 
 
 def fetch_token_paginated(
@@ -58,36 +72,12 @@ def fetch_token_paginated(
     return spark.createDataFrame(rows, schema)
 
 
-def fetch_offset_paginated(
-    spark: SparkSession,
-    fetch_offset: Callable[[int, int], list[dict]],
-    schema: T.StructType | str,
-    total: int,
-    page_size: int = 50,
-    n_partitions: int = 4,
-) -> DataFrame:
-    """S8 at scale: offsets are known up front, so pages fetch IN
-    PARALLEL across ``n_partitions`` tasks (each partition runs one
-    sequential client — the API-concurrency bound).
-
-    fetch_offset(offset, limit) returns that page's rows."""
-    offsets = list(range(0, total, page_size))
-    sc = spark.sparkContext
-
-    def run(part: Iterator[int]) -> Iterator[dict]:
-        for off in part:
-            yield from fetch_offset(off, page_size)
-
-    rdd = sc.parallelize(offsets, min(n_partitions, max(len(offsets), 1)))
-    return spark.createDataFrame(rdd.mapPartitions(run), schema)
-
-
 def batched_enrichment(
     df: DataFrame,
     id_col: str,
     lookup: Callable[[list[Any]], dict[Any, dict]],
     extra_fields: list[T.StructField],
-    batch_size: int = 50,
+    batch_size: int = API_BATCH,
 ) -> DataFrame:
     """S5: batched point-lookup enrichment — the reference fetches
     durations for comma-joined id chunks of 50 (youtube_elt.py:
@@ -103,13 +93,25 @@ def batched_enrichment(
         for pdf in batches:
             ids = list(pdf[id_col])
             found: dict[Any, dict] = {}
-            for i in range(0, len(ids), batch_size):
-                found.update(lookup(ids[i : i + batch_size]))
+            for batch in chunks(ids, batch_size):
+                found.update(lookup(batch))
             for name in names:
                 pdf[name] = [found.get(v, {}).get(name) for v in ids]
             yield pdf
 
     return df.mapInPandas(run, out_schema)
+
+
+def apply_side_effects(df: DataFrame, batch_fn, batch_size: int = API_BATCH) -> None:
+    """S11: side-effecting sink — foreachPartition with client-side
+    chunking (reference likes/adds in chunks of 50,
+    spotify_elt.py:922-979).  batch_fn receives a list of Rows."""
+
+    def run(partition: Iterator) -> None:
+        for batch in chunks(partition, batch_size):
+            batch_fn(batch)
+
+    df.foreachPartition(run)
 
 
 def lookup_join_enrichment(

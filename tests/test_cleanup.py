@@ -4,12 +4,12 @@ from __future__ import annotations
 
 import datetime as dt
 
-from musicflow_spark.matching.engine import apply_side_effects
 from musicflow_spark.plans.cleanup import (
     albums_to_unlike,
     playlists_to_remove,
     tracks_to_unlike,
 )
+from musicflow_spark.sources.rest import apply_side_effects
 
 T0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 

@@ -3,14 +3,14 @@
 Everything else in tests/test_sources.py injects in-process fakes; this
 module stands up a stdlib ``ThreadingHTTPServer`` fixture and drives the
 connectors over actual sockets, so the full path is exercised: URL
-building, status-code -> AuthError/TransientError mapping, the
-401-refresh-once loop, 429 Retry-After backoff, and — for the
-distributed sources — HTTP calls issued from executor Python workers
-(separate processes reaching back over TCP), not the driver.
+building, ``http_json``'s status-code -> AuthError/TransientError
+mapping, the 401-refresh-once loop, 429 Retry-After backoff, and — for
+the distributed sources — HTTP calls issued from executor Python
+workers (separate processes reaching back over TCP), not the driver.
 
-No sandbox-external network: the server binds 127.0.0.1 on an ephemeral
+No external network: the server binds 127.0.0.1 on an ephemeral
 port.  Fetch callables are cloudpickle-shipped closures over (host,
-port) — the same contract a production requests-wrapper would meet.
+port) that call ``http_json``.
 """
 
 from __future__ import annotations
@@ -19,18 +19,12 @@ import json
 import threading
 import urllib.error
 import urllib.parse
-import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 from pyspark.sql import Row
 
-from musicflow_spark.sources.auth import (
-    AuthError,
-    TokenProvider,
-    TransientError,
-    with_auth_retry,
-)
+from musicflow_spark.sources.auth import TokenProvider, http_json, with_auth_retry
 
 ITEM_SCHEMA = "id LONG, name STRING"
 PAGES = {
@@ -54,6 +48,7 @@ class _State:
         self.minted = 0
         self.valid_tokens: set[str] = set()
         self.offsets_served: list[int] = []
+        self.offset_auth: set[str] = set()  # Authorization headers on /offset
         self.lookup_batch_sizes: list[int] = []
         self.search_429s_left: dict[str, int] = {}
         self.stream_total = 0  # mutable: tests grow it between batches
@@ -121,6 +116,7 @@ def _make_handler(state: _State):
                 lim = int(q["limit"][0])
                 with state.lock:
                     state.offsets_served.append(off)
+                    state.offset_auth.add(self.headers.get("Authorization", ""))
                 rows = [
                     {"id": i, "name": f"row{i}"}
                     for i in range(off, min(off + lim, OFFSET_TOTAL))
@@ -200,49 +196,6 @@ def rest_server():
     t.join(timeout=5)
 
 
-def _make_get():
-    """Build the GET -> parsed-JSON callable that maps HTTP status to
-    the connector's exception contract (the part a production wrapper
-    supplies).  Returned as a DYNAMIC closure so cloudpickle ships it
-    by value to executor workers — a module-level function would pickle
-    by reference to this test module, which workers cannot import."""
-
-    def get(url: str):
-        import json as _json
-        import urllib.error as _uerr
-        import urllib.request as _ureq
-
-        from musicflow_spark.sources.auth import AuthError as _AE
-        from musicflow_spark.sources.auth import TransientError as _TE
-
-        try:
-            with _ureq.urlopen(url) as r:
-                return _json.loads(r.read())
-        except _uerr.HTTPError as e:
-            if e.code == 401:
-                raise _AE("401") from e
-            if e.code in (429, 500, 502, 503):
-                ra = e.headers.get("Retry-After")
-                raise _TE("429", retry_after=float(ra) if ra else None) from e
-            raise
-
-    return get
-
-
-_get = _make_get()  # driver-side convenience (same behavior)
-
-
-def _get_authed(url: str, token: str):
-    req = urllib.request.Request(url, headers={"Authorization": f"Bearer {token}"})
-    try:
-        with urllib.request.urlopen(req) as r:
-            return json.loads(r.read())
-    except urllib.error.HTTPError as e:
-        if e.code == 401:
-            raise AuthError("401") from e
-        raise
-
-
 def test_token_pagination_with_real_401_refresh(spark, rest_server):
     """Walk all pages over live sockets; mid-walk the server-side token
     is revoked, so the client must hit a REAL 401, re-mint, and resume."""
@@ -251,7 +204,7 @@ def test_token_pagination_with_real_401_refresh(spark, rest_server):
     base, state = rest_server
 
     provider = TokenProvider(refresh_fn=lambda: (
-        (lambda d: (d["token"], d["expires_in"]))(_get(f"{base}/token"))
+        (lambda d: (d["token"], d["expires_in"]))(http_json(f"{base}/token"))
     ))
 
     revoked = []
@@ -262,7 +215,7 @@ def test_token_pagination_with_real_401_refresh(spark, rest_server):
             with state.lock:
                 state.valid_tokens.discard(token)
         qs = f"?page_token={page_token}" if page_token else ""
-        d = _get_authed(f"{base}/items{qs}", token)
+        d = http_json(f"{base}/items{qs}", {"Authorization": f"Bearer {token}"})
         return d["items"], d["next"]
 
     walk = with_auth_retry(fetch, provider)
@@ -272,25 +225,33 @@ def test_token_pagination_with_real_401_refresh(spark, rest_server):
 
 
 def test_offset_pagination_fetches_from_executors(spark, rest_server):
-    """Offset pages fan out via mapPartitions: the HTTP calls originate
-    in executor Python workers (other processes), not this one."""
-    from musicflow_spark.sources.rest import fetch_offset_paginated
+    """Offset pages fan out as the musicflow_rest scan's tasks: the
+    HTTP calls originate in executor Python workers (other processes),
+    each page once, and a bearer token minted on the driver reaches
+    every page through ``extra_headers``."""
+    from musicflow_spark.sources.datasource import OffsetRestDataSource
 
     base, state = rest_server
     with state.lock:
         state.offsets_served.clear()
+        state.offset_auth.clear()
+    token = http_json(f"{base}/token")["token"]
 
-    get = _make_get()  # closure-shipped by value; see _make_get
-
-    def fetch_offset(offset: int, limit: int) -> list[dict]:
-        return get(f"{base}/offset?offset={offset}&limit={limit}")["items"]
-
-    df = fetch_offset_paginated(
-        spark, fetch_offset, ITEM_SCHEMA, total=OFFSET_TOTAL, page_size=5
+    spark.dataSource.register(OffsetRestDataSource)
+    rows = (
+        spark.read.format("musicflow_rest")
+        .schema(ITEM_SCHEMA)
+        .option("url", f"{base}/offset")
+        .option("total", OFFSET_TOTAL)
+        .option("page_size", 5)
+        .option("extra_headers", json.dumps({"Authorization": f"Bearer {token}"}))
+        .load()
+        .collect()
     )
-    rows = df.collect()
     assert sorted(r.id for r in rows) == list(range(OFFSET_TOTAL))
-    assert sorted(state.offsets_served) == [0, 5, 10, 15, 20]
+    with state.lock:
+        assert sorted(state.offsets_served) == [0, 5, 10, 15, 20]
+        assert state.offset_auth == {f"Bearer {token}"}
 
 
 def test_batched_enrichment_respects_api_batch_limit(spark, rest_server):
@@ -304,10 +265,8 @@ def test_batched_enrichment_respects_api_batch_limit(spark, rest_server):
     with state.lock:
         state.lookup_batch_sizes.clear()
 
-    get = _make_get()
-
     def lookup(ids):
-        d = get(f"{base}/lookup?ids={','.join(str(i) for i in ids)}")
+        d = http_json(f"{base}/lookup?ids={','.join(str(i) for i in ids)}")
         return {int(k): v for k, v in d["found"].items()}
 
     df = spark.createDataFrame([Row(vid=i) for i in range(1, 121)])
@@ -337,8 +296,6 @@ def test_rest_candidate_search_survives_rate_limit(spark, rest_server):
     with state.lock:
         state.search_429s_left = {f"track {i}": 1 for i in range(1, 9)}
 
-    get = _make_get()
-
     def search_fn(qstr: str, kind: str, limit: int) -> list[dict]:
         from urllib.parse import quote
 
@@ -347,7 +304,7 @@ def test_rest_candidate_search_survives_rate_limit(spark, rest_server):
 
         provider = _TP(refresh_fn=lambda: ("unused", 3600.0))
         call = _war(
-            lambda _tok: get(
+            lambda _tok: http_json(
                 f"{base}/search?q={quote(qstr)}&kind={kind}&limit={limit}"
             ),
             provider,
@@ -448,6 +405,27 @@ def test_python_datasource_retries_an_http_date_retry_after(spark, rest_server):
     BatchRestWriter(schema, {"url": f"{base}/busy"})._post(f"{base}/busy", {"items": []})
     with state.lock:
         assert state.busy_served == {"GET": 2, "POST": 2}
+
+
+def test_auth_retry_over_http_json_absorbs_an_http_date_retry_after(rest_server):
+    """A fetch callable built from ``with_auth_retry`` over
+    ``http_json`` retries a 503 whose Retry-After is an HTTP-date (a
+    past one, so the wait is 0 s) and returns the next reply."""
+    base, state = rest_server
+    with state.lock:
+        state.busy_left = {"GET": 1}
+        state.busy_served = {}
+    sleeps: list[float] = []
+    provider = TokenProvider(refresh_fn=lambda: ("unused", 3600.0))
+    busy = with_auth_retry(
+        lambda token: http_json(f"{base}/busy", {"Authorization": f"Bearer {token}"}),
+        provider,
+        sleep=sleeps.append,
+    )
+    assert busy()["items"] == [{"id": 1, "name": "a"}]
+    assert sleeps == [0.0]
+    with state.lock:
+        assert state.busy_served == {"GET": 2}
 
 
 def test_python_datasource_fails_a_retry_after_past_the_ceiling(spark, rest_server, monkeypatch):

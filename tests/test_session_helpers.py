@@ -74,3 +74,24 @@ def test_paper_path_builds_no_empty_frame_from_python_rows():
         if pattern.search(path.read_text())
     ]
     assert offenders == []
+
+
+def test_paper_path_opens_urls_only_in_http_json():
+    """``sources/auth.py::http_json`` is the one HTTP call: it maps a
+    401 to ``AuthError`` and a 429/5xx to ``TransientError``, which the
+    one retry loop reads.  A second ``urlopen`` would need its own
+    status mapping."""
+    import inspect
+
+    pattern = re.compile(r"\burlopen\(")
+    calls = [
+        (str(path.relative_to(PACKAGE)), len(pattern.findall(path.read_text())))
+        for pkg in PAPER_PATH
+        for path in sorted((PACKAGE / pkg).rglob("*.py"))
+        if pattern.search(path.read_text())
+    ]
+    assert calls == [("sources/auth.py", 1)]
+
+    from musicflow_spark.sources.auth import http_json
+
+    assert pattern.search(inspect.getsource(http_json))

@@ -8,7 +8,6 @@ from pyspark.sql import types as T
 
 from musicflow_spark.sources.rest import (
     batched_enrichment,
-    fetch_offset_paginated,
     fetch_token_paginated,
     lookup_join_enrichment,
 )
@@ -31,18 +30,6 @@ def _fake_token_api(n_items: int, page_size: int):
     return fetch_page
 
 
-def _make_offset_api():
-    # defined as a nested function so cloudpickle ships it BY VALUE —
-    # module-level test functions aren't importable on executors
-    def fake_offset_api(offset: int, limit: int):
-        return [
-            {"item_id": i, "name": f"item-{i}"}
-            for i in range(offset, min(offset + limit, 173))
-        ]
-
-    return fake_offset_api
-
-
 def test_token_pagination_walks_all_pages(spark):
     df = fetch_token_paginated(spark, _fake_token_api(123, 50), ITEM_SCHEMA)
     assert df.count() == 123
@@ -59,14 +46,26 @@ def test_token_pagination_guards_nontermination(spark):
         fetch_token_paginated(spark, never_ends, ITEM_SCHEMA, max_pages=5)
 
 
-def test_offset_pagination_is_distributed_and_complete(spark):
-    df = fetch_offset_paginated(
-        spark, _make_offset_api(), ITEM_SCHEMA, total=173, page_size=50, n_partitions=3
+def test_offset_pagination_is_distributed_and_complete():
+    """The Data Source reader deals the pages of [0, 173) into 3
+    slices: each offset lies in exactly one page, the last page is
+    clipped to the total, and a sub-range (a stream's micro-batch) is
+    dealt the same way."""
+    from musicflow_spark.sources.datasource import OffsetRestReader
+
+    reader = OffsetRestReader(
+        T.StructType.fromDDL(ITEM_SCHEMA),
+        {"url": "http://x", "total": "173", "page_size": "50", "num_partitions": "3"},
     )
-    rows = df.collect()
-    assert len(rows) == 173
-    assert {r["item_id"] for r in rows} == set(range(173))
-    assert df.rdd.getNumPartitions() == 3
+
+    def covered(slices):
+        return sorted(i for s in slices for off, limit in s.pages for i in range(off, off + limit))
+
+    slices = reader.partitions()
+    assert len(slices) == 3
+    assert covered(slices) == list(range(173))
+    assert [p for s in slices for p in s.pages] == [(0, 50), (150, 23), (50, 50), (100, 50)]
+    assert covered(reader.partitions(13, 23)) == list(range(13, 23))
 
 
 def test_batched_enrichment_chunks_and_fills(spark):
