@@ -36,7 +36,7 @@ from musicflow_spark.operators.similarity import (
     semantic_dedup_flags,
 )
 from musicflow_spark.queries.registry import Query
-from musicflow_spark.sources.catalog import read_table
+from musicflow_spark.sources.catalog import overwrite_touched_partitions, read_table
 
 N_QUERY_VECS = 8
 TOP_K = 10
@@ -1312,12 +1312,12 @@ def knn_hnsw_at_rest_ingest(
     APPLIES it to the persisted index the way
     ``knn_ivf_at_rest_ingest`` folds its delta — the base-only graphs
     write partitionBy(layer, bucket), the descent and the reverse
-    merges serve off the WRITTEN files, and the commit is a dynamic
-    partition overwrite staged as: read-back of only the touched
-    (layer, bucket) partitions (a literal OR-filter — static
-    pruning), minus the rows of sources being replaced (broadcast
-    anti-join against the bounded write-set), union the write-set.
-    Untouched partitions' files are never rewritten
+    merges serve off the WRITTEN files, and
+    ``overwrite_touched_partitions`` commits it: the touched (layer,
+    bucket) partitions' stored rows, minus the rows of sources being
+    replaced (broadcast anti-join against the bounded write-set),
+    union the write-set.  Untouched partitions' files are never
+    rewritten
     (byte/mtime-asserted in tests/test_plan_shapes.py).  Returns the
     full UPDATED index content read back from the files; the oracle
     rebuilds it as (delta link lists) ∪ (stored ∪ reverse-link
@@ -1336,33 +1336,17 @@ def knn_hnsw_at_rest_ingest(
         spark, sf_dir, path,
         mod2=mod2, planes1=planes1, graph_planes=graph_planes,
     )
-    at_rest = spark.read.parquet(path)
-
     # bounded by construction: <= 3 layers x HNSW_NBUCKETS tuples
-    touched_parts = sorted(
-        (int(r["layer"]), int(r["bucket"]))
-        for r in writeset.select("layer", "bucket").distinct().collect()
-    )
-    part_pred = F.lit(False)
-    for layer, bucket in touched_parts:
-        part_pred = part_pred | (
-            (F.col("layer") == layer) & (F.col("bucket") == bucket)
-        )
+    touched = [
+        tuple(r) for r in writeset.select("layer", "bucket").distinct().collect()
+    ]
     replaced_srcs = writeset.select("layer", "src").distinct()
-    staged = (
-        at_rest.filter(part_pred)
-        .select("layer", "bucket", "src", "dst", "cos_sim", "rank")
+    cols = ["layer", "bucket", "src", "dst", "cos_sim", "rank"]
+    overwrite_touched_partitions(
+        spark, path, ["layer", "bucket"], touched,
+        lambda stored: stored.select(*cols)
         .join(F.broadcast(replaced_srcs), ["layer", "src"], "left_anti")
-        .unionByName(
-            writeset.select("layer", "bucket", "src", "dst", "cos_sim", "rank")
-        )
-        .localCheckpoint(eager=True)
-    )
-    (
-        staged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("layer", "bucket")
-        .parquet(path)
+        .unionByName(writeset.select(*cols)),
     )
     updated = spark.read.parquet(path)
     return updated.select(
@@ -1433,18 +1417,14 @@ def knn_hnsw_at_rest_delete(
     scan for rows naming a deleted id (src OR dst); only those are
     read back, filtered, re-ranked per (layer, src) — a bucket is
     keyed by hash(src), so every surviving source's FULL list lives
-    inside the read-back set and the re-rank is exact — and
-    committed via ``overwrite_touched_partitions`` (dynamic
-    overwrite + explicit drop of emptied partitions: sparse upper
-    layers CAN empty a bucket).  Untouched partitions' files are
-    never rewritten (byte/mtime-asserted).  Returns the full
+    inside the read-back set and the re-rank is exact — by
+    ``overwrite_touched_partitions``, which drops the partitions
+    left empty (sparse upper layers CAN empty a bucket).  Untouched
+    partitions' files are never rewritten (byte/mtime-asserted).  Returns the full
     post-delete index content; the oracle rebuilds the stored
     graphs, derives the same takedown set off the stored ranks, and
     re-ranks the filtered lists."""
-    from musicflow_spark.sources.catalog import (
-        overwrite_touched_partitions,
-        write_table,
-    )
+    from musicflow_spark.sources.catalog import write_table
 
     emb = read_table(spark, sf_dir, "embeddings")
     g0, g1, g2 = _hnsw_layer_graphs(
@@ -1468,30 +1448,18 @@ def knn_hnsw_at_rest_delete(
         {int(r["dst"]) for r in top_del.collect()} | {HNSW_DELETE_EXTRA}
     )
     hit = F.col("src").isin(deleted) | F.col("dst").isin(deleted)
-    touched = sorted(
-        (int(r["layer"]), int(r["bucket"]))
-        for r in at_rest.filter(hit)
-        .select("layer", "bucket")
-        .distinct()
-        .collect()
-    )
-    part_pred = F.lit(False)
-    for layer, bucket in touched:
-        part_pred = part_pred | (
-            (F.col("layer") == layer) & (F.col("bucket") == bucket)
-        )
+    touched = [
+        tuple(r)
+        for r in at_rest.filter(hit).select("layer", "bucket").distinct().collect()
+    ]
     w = Window.partitionBy("layer", "src").orderBy(
         F.desc("cos_sim"), F.asc("dst")
     )
-    staged = (
-        at_rest.filter(part_pred)
-        .filter(~hit)
-        .select("layer", "bucket", "src", "dst", "cos_sim")
-        .withColumn("rank", F.row_number().over(w))
-        .localCheckpoint(eager=True)
-    )
     overwrite_touched_partitions(
-        spark, staged, path, ["layer", "bucket"], touched
+        spark, path, ["layer", "bucket"], touched,
+        lambda stored: stored.filter(~hit)
+        .select("layer", "bucket", "src", "dst", "cos_sim")
+        .withColumn("rank", F.row_number().over(w)),
     )
     updated = spark.read.parquet(path)
     return updated.select(
@@ -3220,13 +3188,10 @@ def knn_ivf_at_rest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant — re-training would re-shuffle every stored partition);
     the base index writes ``partitionBy(cluster_id)``; today's delta
     batch (every AT_REST_INGEST_MOD-th id) is assigned to the frozen
-    centroids and folded in with Spark's DYNAMIC partition overwrite
-    (``partitionOverwriteMode=dynamic``): the staged frame is the
-    delta UNION the read-back rows of only the touched clusters
-    (localCheckpointed BEFORE the write — overwriting a path being
-    lazily read from is the classic self-overwrite hazard), so the
-    commit replaces exactly the touched cluster directories and the
-    untouched partitions' files are never rewritten
+    centroids and folded in through ``overwrite_touched_partitions``:
+    the touched clusters' stored rows UNION the delta replace exactly
+    the touched cluster directories, and the untouched partitions'
+    files are never rewritten
     (byte/mtime-asserted in tests/test_plan_shapes.py).  The probe
     query then serves off the UPDATED files with the same literal
     isin → static-PartitionFilters path as ``knn_ivf_at_rest``; the
@@ -3250,20 +3215,12 @@ def knn_ivf_at_rest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ivf_frozen_assign(base, cent_rows), path, partition_by=["cluster_id"]
     )
 
-    delta_idx = _ivf_frozen_assign(delta, cent_rows).localCheckpoint(eager=True)
-    touched = sorted({int(r["cluster_id"]) for r in delta_idx.select("cluster_id").distinct().collect()})
-    staged = (
-        spark.read.parquet(path)
-        .filter(F.col("cluster_id").isin(touched))
-        .select("cluster_id", "vec_id", "embedding")
-        .unionByName(delta_idx)
-        .localCheckpoint(eager=True)
-    )
-    (
-        staged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cluster_id")
-        .parquet(path)
+    delta_idx = _ivf_frozen_assign(delta, cent_rows)
+    touched = [tuple(r) for r in delta_idx.select("cluster_id").distinct().collect()]
+    overwrite_touched_partitions(
+        spark, path, ["cluster_id"], touched,
+        lambda stored: stored.select("cluster_id", "vec_id", "embedding")
+        .unionByName(delta_idx),
     )
     at_rest = spark.read.parquet(path)
     return _ivf_probe_at_rest(emb, at_rest, cent_rows)
@@ -3351,11 +3308,9 @@ def knn_ivf_at_rest_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     AT_REST_DELETE_TOPK base-index neighbors, so the delete provably
     CHANGES the answer — is then folded out tombstone-style: the
     stored rows of the deleted ids locate the touched clusters (a
-    |batch|-bounded scan), only those partitions are read back,
-    filtered, and committed via dynamic partition overwrite, and any
-    cluster emptied by the delete has its directory dropped
-    explicitly (``overwrite_touched_partitions`` — dynamic overwrite
-    alone would silently keep stale files for row-less partitions).
+    |batch|-bounded scan), and ``overwrite_touched_partitions``
+    rewrites only those partitions minus the deleted ids, dropping
+    any cluster the delete emptied.
     Untouched cluster files are never rewritten (byte/mtime-asserted
     in tests/test_plan_shapes.py).  The probe query then serves off
     the post-delete files; the oracle replays training + probe +
@@ -3367,10 +3322,7 @@ def knn_ivf_at_rest_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract every serving-path filter in this tier carries."""
     import os as _os
 
-    from musicflow_spark.sources.catalog import (
-        overwrite_touched_partitions,
-        write_table,
-    )
+    from musicflow_spark.sources.catalog import write_table
 
     emb = read_table(spark, sf_dir, "embeddings")
     cent_rows = _ivf_train_centroids(emb)
@@ -3388,22 +3340,17 @@ def knn_ivf_at_rest_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("query_id") == 0) & (F.col("rank") <= AT_REST_DELETE_TOPK)
         ).collect()
     )
-    touched = sorted(
-        int(r["cluster_id"])
+    touched = [
+        tuple(r)
         for r in at_rest.filter(F.col("vec_id").isin(deleted))
         .select("cluster_id")
         .distinct()
         .collect()
-    )
-    staged = (
-        spark.read.parquet(path)
-        .filter(F.col("cluster_id").isin(touched))
-        .filter(~F.col("vec_id").isin(deleted))
-        .select("cluster_id", "vec_id", "embedding")
-        .localCheckpoint(eager=True)
-    )
+    ]
     overwrite_touched_partitions(
-        spark, staged, path, ["cluster_id"], [(c,) for c in touched]
+        spark, path, ["cluster_id"], touched,
+        lambda stored: stored.filter(~F.col("vec_id").isin(deleted))
+        .select("cluster_id", "vec_id", "embedding"),
     )
     updated = spark.read.parquet(path)
     return _ivf_probe_at_rest(emb, updated, cent_rows)

@@ -45,9 +45,11 @@ MAX_TOTAL_WAIT_S = 300.0
 
 def bounded_wait(call: str, asked, wait: float, waited: float) -> float:
     """``waited + wait``, or a ``TimeoutError`` naming ``call`` and the
-    server's value ``asked`` when that passes a ceiling."""
+    server's value ``asked`` (or, when the server sent none, the
+    client's own backoff ``wait``) when that passes a ceiling."""
     if wait > MAX_WAIT_S or waited + wait > MAX_TOTAL_WAIT_S:
-        raise TimeoutError(f"{call}: server asked to wait {asked!r}, past the retry ceiling")
+        what = f"client backoff of {wait}s" if asked is None else f"server asked to wait {asked!r}"
+        raise TimeoutError(f"{call}: {what}, past the retry ceiling")
     return waited + wait
 
 
@@ -76,9 +78,11 @@ def retry_transient(
 ):
     """``attempt()``, retried at most ``max_retries`` times on a
     ``TransientError``.  The n-th retry (from 0) waits what the
-    server's ``retry_after`` asks, or ``backoff * 2**n`` without one; a
-    wait past ``MAX_WAIT_S``, or a total past ``MAX_TOTAL_WAIT_S``,
-    raises ``TimeoutError`` naming ``call`` (``bounded_wait``)."""
+    server's ``retry_after`` asks, or ``backoff * 2**n`` capped at
+    ``MAX_WAIT_S`` without one; a wait past ``MAX_WAIT_S``, or a total
+    past ``MAX_TOTAL_WAIT_S``, raises ``TimeoutError`` naming ``call``
+    (``bounded_wait``).  So only the server can ask for one wait past
+    the ceiling."""
     waited = 0.0
     for n in range(max_retries + 1):
         try:
@@ -86,7 +90,7 @@ def retry_transient(
         except TransientError as e:
             if n == max_retries:
                 raise
-            wait = retry_after_s(e.retry_after, backoff * 2**n)
+            wait = retry_after_s(e.retry_after, min(backoff * 2**n, MAX_WAIT_S))
             waited = bounded_wait(call, e.retry_after, wait, waited)
             sleep(wait)
 

@@ -7,19 +7,26 @@ program rewrites whole is replaced through :func:`replace_table` and
 read, where a replace may have been interrupted, through
 :func:`existing_table`.
 
+Every fold into a partitioned table (the at-rest vector indexes and
+their streaming sinks) commits through
+:func:`overwrite_touched_partitions`: the caller names the touched
+partitions and how their rows change, and the function reads them
+back, rewrites them and drops the ones left empty.  :func:`write_table`
+writes a table whole, with ``partition_by`` and ``bucket_by`` for the
+100 TB layout.
+
 Scale note: reads are plain ``spark.read.parquet`` so Catalyst keeps
-predicate pushdown / column pruning / partition pruning; the
-partitioned writers (:func:`write_table`,
-:func:`overwrite_touched_partitions`) expose ``partition_by`` and
-``bucket_by`` hooks for the 100 TB layout without changing call sites.
+predicate pushdown / column pruning / partition pruning.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 #: the driver-generated synthetic tables (TESTDATA.md)
@@ -100,22 +107,19 @@ def existing_table(
 def write_table(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     partition_by: list[str] | None = None,
     bucket_by: tuple[int, list[str]] | None = None,
     table_name: str | None = None,
 ) -> None:
-    """Write a table with the reference's load semantics.
-
-    ``mode='overwrite'`` mirrors BigQuery ``WRITE_TRUNCATE``
-    (reference: dags/scripts/youtube_elt.py:336-362), ``'append'``
-    mirrors ``WRITE_APPEND``.
+    """Write ``df`` as the whole table at ``path``, replacing any table
+    there (the reference's ``WRITE_TRUNCATE``,
+    dags/scripts/youtube_elt.py:336-362).
 
     ``bucket_by=(n, cols)`` requires ``table_name`` (bucketing is a
     metastore feature); it pre-co-locates later joins on ``cols`` so
     they run shuffle-free — the 100 TB path for the big fact tables.
     """
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if bucket_by:
@@ -131,49 +135,52 @@ def write_table(
 
 def overwrite_touched_partitions(
     spark: SparkSession,
-    staged: DataFrame,
     path: str,
     partition_by: list[str],
     touched: list[tuple],
+    rewrite: Callable[[DataFrame], DataFrame],
 ) -> list[tuple]:
-    """Commit a partition-local fold that may DELETE rows: dynamic
-    partition overwrite of ``staged``, plus explicit removal of any
-    ``touched`` partition that ended up with NO rows.
+    """Fold a change into the ``touched`` partitions of the parquet
+    table at ``path``, partitioned by ``partition_by``; every other
+    partition's files stay as they are.  Returns the touched
+    partitions the fold left empty, which are dropped.
 
-    Dynamic overwrite only replaces partitions PRESENT in the staged
-    frame — a partition whose rows were all deleted contributes no
-    rows, so its stale files would silently survive the commit (the
-    classic delete-fold hazard; table formats with delete support
-    track this in metadata, plain parquet layouts must drop the
-    directory).  Removal goes through the Hadoop FileSystem of
-    ``path`` so the same code serves local disk and HDFS/object
-    stores.
-
-    ``touched`` is the bounded partition-tuple list the fold already
-    collected to build its read-back filter; the survivors collect is
-    bounded by it.  Returns the list of partitions removed as empty.
-    """
+    The touched partitions are read back through a literal filter (so
+    only their files are scanned) and ``rewrite(stored)`` gives their
+    new rows.  Those are checkpointed eagerly, since the write
+    replaces the files they are read from, and committed with one
+    dynamic partition overwrite.  That overwrite replaces only the
+    partitions the new rows fall in: a touched partition that lost
+    all its rows keeps its stale files, so its directory is deleted
+    (through the Hadoop FileSystem of ``path``, which serves local
+    disk and HDFS / object stores alike).  The written partitions
+    come from an observation on the write itself, with no second
+    scan."""
+    if not touched:
+        return []
+    pred = F.lit(False)
+    for t in touched:
+        cond = F.lit(True)
+        for c, v in zip(partition_by, t):
+            cond = cond & (F.col(c) == v)
+        pred = pred | cond
+    staged = rewrite(spark.read.parquet(path).filter(pred)).localCheckpoint(eager=True)
+    obs = Observation()
     (
-        staged.write.mode("overwrite")
+        staged.observe(obs, F.collect_set(F.struct(*partition_by)).alias("parts"))
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_by)
         .parquet(path)
     )
-    remaining = {
-        tuple(int(r[c]) for c in partition_by)
-        for r in staged.select(*partition_by).distinct().collect()
-    }
-    emptied = [t for t in touched if tuple(int(v) for v in t) not in remaining]
-    if emptied:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        for t in emptied:
-            subdir = "/".join(
-                f"{c}={v}" for c, v in zip(partition_by, t)
-            )
-            p = jvm.org.apache.hadoop.fs.Path(f"{path}/{subdir}")
-            fs = p.getFileSystem(hconf)
-            fs.delete(p, True)
+    written = {tuple(r) for r in obs.get["parts"]}
+    emptied = [t for t in touched if t not in written]
+    jvm = spark._jvm
+    hconf = spark._jsc.hadoopConfiguration()
+    for t in emptied:
+        subdir = "/".join(f"{c}={v}" for c, v in zip(partition_by, t))
+        p = jvm.org.apache.hadoop.fs.Path(f"{path}/{subdir}")
+        p.getFileSystem(hconf).delete(p, True)
     return emptied
 
 

@@ -210,7 +210,9 @@ def test_auth_retry_bounded_backoff_on_429():
 def test_auth_retry_fails_a_wait_past_the_ceiling():
     """A server's retry_after past MAX_WAIT_S, or retries whose waits
     add up past MAX_TOTAL_WAIT_S, raise TimeoutError naming the call
-    and the server's value instead of sleeping that long."""
+    and the server's value instead of sleeping that long.  Without a
+    retry_after the doubling backoff stops at MAX_WAIT_S, and the
+    error names the client's backoff, not the server."""
     p = TokenProvider(refresh_fn=lambda: ("t", 100.0))
     sleeps = []
 
@@ -229,6 +231,14 @@ def test_auth_retry_fails_a_wait_past_the_ceiling():
     with pytest.raises(TimeoutError, match="at_the_ceiling"):
         with_auth_retry(at_the_ceiling, p, max_transient_retries=100, sleep=sleeps.append)()
     assert sleeps == [MAX_WAIT_S] * int(MAX_TOTAL_WAIT_S // MAX_WAIT_S)
+
+    def dead(token):
+        raise TransientError("503")
+
+    sleeps.clear()
+    with pytest.raises(TimeoutError, match="dead: client backoff of 60.0s, past the retry ceiling"):
+        with_auth_retry(dead, p, max_transient_retries=10, sleep=sleeps.append)()
+    assert sleeps == [1.0, 2.0, 4.0, 8.0, 16.0, 32.0] + [MAX_WAIT_S] * 3
 
 
 def test_table_materialization_observes_row_metrics(spark, tmp_path):

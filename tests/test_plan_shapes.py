@@ -455,10 +455,12 @@ def _file_snapshot(idx_path):
 
 
 def test_overwrite_touched_partitions_drops_emptied(spark, tmp_path):
-    """The delete-fold sink: dynamic overwrite rewrites partitions
-    present in the staged frame, and touched partitions whose rows
+    """The delete-fold commit: dynamic overwrite rewrites the touched
+    partitions that still hold rows, and touched partitions whose rows
     were ALL deleted get their directories dropped explicitly —
-    without it the stale files silently survive the commit."""
+    without it the stale files silently survive the commit.  A
+    rewrite that empties every touched partition writes nothing and
+    drops them all."""
     import os
 
     from pyspark.sql import functions as F
@@ -468,33 +470,31 @@ def test_overwrite_touched_partitions_drops_emptied(spark, tmp_path):
         write_table,
     )
 
-    path = str(tmp_path / "tbl")
     df = spark.createDataFrame(
         [(1, 10), (1, 11), (2, 20), (3, 30)], "p int, v int"
     )
-    write_table(df, path, partition_by=["p"])
-    # fold: delete v=11 (p=1 survives with one row) and v=20 (p=2
-    # empties); p=3 untouched
-    before = _file_snapshot(path)
-    staged = (
-        spark.read.parquet(path)
-        .filter(F.col("p").isin([1, 2]))
-        .filter(~F.col("v").isin([11, 20]))
-        .select("p", "v")
-        .localCheckpoint(eager=True)
-    )
-    emptied = overwrite_touched_partitions(
-        spark, staged, path, ["p"], [(1,), (2,)]
-    )
-    assert emptied == [(2,)]
-    assert not os.path.exists(os.path.join(path, "p=2"))
-    after = _file_snapshot(path)
-    # p=3 files byte-identical; p=1 rewritten
-    for k in before:
-        if k.startswith("p=3"):
-            assert after[k] == before[k], k
-    got = {(r["p"], r["v"]) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, 10), (3, 30)}
+    for deleted, emptied, kept in (
+        # delete v=11 (p=1 survives with one row) and v=20 (p=2
+        # empties); p=3 untouched
+        ([11, 20], [(2,)], {(1, 10), (3, 30)}),
+        ([10, 11, 20], [(1,), (2,)], {(3, 30)}),
+    ):
+        path = str(tmp_path / f"tbl{len(deleted)}")
+        write_table(df, path, partition_by=["p"])
+        before = _file_snapshot(path)
+        assert overwrite_touched_partitions(
+            spark, path, ["p"], [(1,), (2,)],
+            lambda stored: stored.filter(~F.col("v").isin(deleted)),
+        ) == emptied
+        for (p,) in emptied:
+            assert not os.path.exists(os.path.join(path, f"p={p}"))
+        after = _file_snapshot(path)
+        # p=3 files byte-identical
+        for k in before:
+            if k.startswith("p=3"):
+                assert after[k] == before[k], k
+        got = {(r["p"], r["v"]) for r in spark.read.parquet(path).collect()}
+        assert got == kept
 
 
 def test_ivf_at_rest_delete_partial_rewrite_and_visibility(

@@ -95,3 +95,16 @@ def test_paper_path_opens_urls_only_in_http_json():
     from musicflow_spark.sources.auth import http_json
 
     assert pattern.search(inspect.getsource(http_json))
+
+
+def test_partitioned_commits_only_in_overwrite_touched_partitions():
+    """``sources/catalog.py::overwrite_touched_partitions`` is the one
+    dynamic partition overwrite: it reads the touched partitions back,
+    checkpoints their new rows and drops the ones left empty.  A
+    second writer would need all three again."""
+    offenders = [
+        str(path.relative_to(PACKAGE))
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if "partitionOverwriteMode" in path.read_text()
+    ]
+    assert offenders == ["sources/catalog.py"]
